@@ -12,8 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import sha256_col
-
 VALID_OPS = ("insert", "update", "delete")
 
 # Lake table schema, pre-evolution (FIXTURES.md §1 + input_hint)
@@ -179,26 +177,23 @@ def lww_collapse(
     return stage2.select(*bkt, "repo", "path", "w.*")
 
 
-def to_table_rows(
-    collapsed: DataFrame, table_schema: T.StructType, native_sha: bool = False
-) -> DataFrame:
+def to_table_rows(collapsed: DataFrame, table_schema: T.StructType) -> DataFrame:
     """Derive table columns (sha256 invariant, last_lsn) and align the
     source to the target schema: missing table columns null-fill (the
     additive-evolution contract), extra event columns drop. Keeps ``op``
     for MERGE routing.
 
-    ``native_sha`` selects the JVM ``sha2`` expression over the Arrow
-    pandas UDF: identical digests (equality-tested in
-    tests/test_cdc_engine.py), but the winner content stays inside
+    The sha256 is the JVM ``sha2`` expression, bit-identical to the
+    Arrow twin ``sha256_arrow`` (equality-tested in
+    tests/test_cdc_engine.py): the winner content stays inside
     whole-stage codegen instead of round-tripping JVM→Arrow→Python→JVM —
     two full copies of every winner's payload across the memory bus that
-    matter exactly when all cores contend for it (the 8→32 scaling rung)."""
+    matter exactly when all cores contend for it (the 8→32 scaling rung).
+    The Arrow twin stays on the query surface, where it is the measured
+    operator."""
     out = collapsed.withColumn(
         "content_sha256",
-        F.when(
-            F.col("op") != "delete",
-            sha256_col(F.col("content"), use_native=native_sha),
-        ),
+        F.when(F.col("op") != "delete", F.sha2(F.col("content"), 256)),
     ).withColumn("last_lsn", F.col("lsn"))
     present = set(out.columns)
     cols = []

@@ -21,14 +21,16 @@ from __future__ import annotations
 
 import math
 import uuid
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lakehouse import LakeTable
-from ..lakehouse.table import is_lossless_widening
+from ..lakehouse.table import Snapshot, bucket_expr, is_lossless_widening, observed_metrics
 from ..perf import phase
 from . import apply as A
 
@@ -62,6 +64,27 @@ def lsn_ranges(min_lsn: int, max_lsn: int, n_batches: int) -> list[tuple[int, in
     return out
 
 
+def _quarantined() -> F.Column:
+    # valid_predicate is coalesced to a real boolean internally, so ~ok
+    # counts every quarantined row (three-valued logic can't silently
+    # skip op=NULL rows)
+    return F.count(F.when(~A.valid_predicate(), 1)).alias("rows_quarantined")
+
+
+@dataclass
+class _Batch:
+    """A planned batch: its lazy rows plus what its write and finish
+    steps need. Nothing has run yet."""
+
+    batch_id: str
+    lsn_lo: int
+    lsn_hi: int
+    events: DataFrame
+    obs: Observation
+    rows: DataFrame
+    manifest: dict
+
+
 class CdcRunner:
     def __init__(
         self,
@@ -73,59 +96,29 @@ class CdcRunner:
         salt_auto: bool = True,
         mode: str = "mor",
         compact_every: int | None = None,
-        fuse_buckets: bool = True,
         pipeline_depth: int = 4,
-        prefilter_winners: bool = False,
-        prefilter_max_winners: int = 20_000_000,
-        native_sha: bool = True,
     ):
-        """``mode``: 'mor' (merge-on-read appends — the 10^10-scale ingest
+        """``n_salts``: how many reducers a hot key's events are spread
+        over by the salted two-stage LWW collapse.
+
+        ``hot_share``: the share of the sampled events a single key must
+        exceed to count as hot (``detect_hot_keys``).
+
+        ``salt_auto``: detect hot keys automatically — once per replayed
+        log, or per ``apply_batch`` call that passes no ``hot_keys``.
+        Off, nothing is salted unless the caller names the keys.
+
+        ``mode``: 'mor' (merge-on-read appends — the 10^10-scale ingest
         path, zero write amplification) or 'cow' (copy-on-write join —
-        read-optimal). ``compact_every``: in mor mode, fold deltas into
-        base files after every N applied batches. ``pipeline_depth``: in
-        mor mode, how many batch writes may be in flight at once (commits
-        stay strictly ordered); >1 overlaps batch k+1's driver-side plan
-        analysis with batch k's cluster execution — the per-batch serial
-        time that otherwise caps scaling efficiency.
+        read-optimal).
 
-        ``prefilter_winners``: shuffle only winner payloads. A slim
-        phase (content column read for nullity only, then dropped before
-        any exchange) computes each key's winning LSN via a partially-
-        aggregated groupBy — a few bytes per key over the wire — and the
-        winning-LSN set broadcasts into a semi-join that drops loser rows
-        BEFORE the content-bearing bucket shuffle. On update-heavy logs
-        this cuts the bytes crossing the one big exchange by the
-        events-per-key factor (~1.9x on the sf1.0 bench log). Correctness
-        is unconditional: the broadcast set has no false negatives (every
-        true winner's LSN is in it by construction), and the downstream
-        collapse still dedupes duplicate deliveries sharing the winning
-        LSN. DEFAULT OFF after measurement: validity needs content
-        nullity, so the winners pass re-decodes the content column — a
-        second full scan whose cost exceeds the shuffle-byte savings on
-        this storage format (interleaved best-of-3 A/B, sf1.0 local[32],
-        4 batches: 15.4 s ON vs 11.2 s OFF; sf0.1: 10.2 s vs 5.6 s). It
-        stays available for deployments where the scan is cheaper than
-        the wire (e.g. network shuffle + node-local NVMe columnar cache)
-        — both paths are oracle-pinned in tests/test_cdc_engine.py.
-        ``prefilter_max_winners``: above this per-batch key-count estimate
-        the broadcast would not fit comfortably (~8 bytes/key hashed
-        relation) and the runner falls back to the plain fused collapse —
-        at that batch size the canonical full shuffle is the right plan.
+        ``compact_every``: in mor mode, fold deltas into base files after
+        every N batches a replay applies.
 
-        ``native_sha`` (default True): compute the content_sha256
-        invariant with the JVM ``sha2`` expression instead of the Arrow
-        pandas UDF. Digests are bit-identical (equality-pinned in
-        tests/test_cdc_engine.py); the difference is purely physical —
-        the JVM path keeps winner payloads inside whole-stage codegen,
-        while the Arrow path copies every winner's content
-        JVM→Arrow→Python→JVM, twice across the memory bus plus 32
-        resident Python workers, exactly the shared resource the 8→32
-        scaling rung contends for. Measured (sf1.0, interleaved
-        best-of-3): local[32] 406k→644k ev/s (+58%), local[8]
-        208k→306k (+47%), efficiency 0.49→0.53. The Arrow
-        implementation remains the contract exhibit on the query
-        surface (scalar_sha256_documents, dedup_exact_by_sha,
-        text_document_fingerprint) where it IS the measured operator.
+        ``pipeline_depth``: in mor mode, how many batch writes may be in
+        flight at once (commits stay strictly ordered). 1 is the
+        sequential loop; cow always runs at 1, because its merge reads
+        the base it rewrites.
         """
         assert mode in ("mor", "cow")
         self.spark = spark
@@ -136,27 +129,26 @@ class CdcRunner:
         self.salt_auto = salt_auto
         self.mode = mode
         self.compact_every = compact_every
-        self.fuse_buckets = fuse_buckets
         self.pipeline_depth = max(int(pipeline_depth), 1)
-        self.prefilter_winners = prefilter_winners
-        self.prefilter_max_winners = prefilter_max_winners
-        self.native_sha = native_sha
 
     # ---------------------------------------------------------- evolution
 
-    def _evolve_if_needed(self, events: DataFrame) -> None:
+    def _evolve_if_needed(self, events: DataFrame) -> Snapshot:
         """Promote additive event columns into the table schema
-        (metadata-only commit) before applying the batch, and WIDEN table
+        (metadata-only commit) before applying, and WIDEN table
         columns whose upstream type grew (the upstream ``ALTER COLUMN
         ... TYPE`` case: a counter outgrowing int32 mid-stream). Without
         the widen, ``to_table_rows``'s align-cast would silently narrow
         every wide value back to the stale table type. Both promotions
-        are metadata-only commits; zero data files move."""
-        self.table.evolve_to(
-            events.schema,
-            reserved={"lsn", "ts", "op"},
-            summary={"run_id": self.run_id},
-        )
+        are metadata-only commits; zero data files move. Returns the
+        head the batches are planned against."""
+        with phase("runner.evolve"):
+            self.table.evolve_to(
+                events.schema,
+                reserved={"lsn", "ts", "op"},
+                summary={"run_id": self.run_id},
+            )
+            return self.table.current_snapshot()
 
     # -------------------------------------------------------------- apply
 
@@ -202,13 +194,7 @@ class CdcRunner:
             for r in counts.filter(F.col("n") > cutoff).collect()
         ]
 
-    def _build_rows(
-        self,
-        events: DataFrame,
-        snap,
-        hot: list[tuple[str, str]],
-        n_events_hint: int | None = None,
-    ):
+    def _build_rows(self, events: DataFrame, snap: Snapshot, hot: list[tuple[str, str]]):
         """The per-batch lazy plan: quarantine-observed validation →
         bucket-fused salted LWW collapse → table-row derivation (sha256,
         schema align). Returns (observation, rows DataFrame); nothing runs
@@ -225,60 +211,112 @@ class CdcRunner:
         (measured 10x+ stage blowups with the Arrow sha; the same
         coalesce starves the parquet write even on the JVM path).
         """
-        from pyspark.sql import Observation
-
-        from ..lakehouse.table import bucket_expr
-
-        # valid_predicate is coalesced to a real boolean internally, so
-        # ~ok counts every quarantined row (three-valued logic can't
-        # silently skip op=NULL rows)
-        ok = A.valid_predicate()
         obs = Observation()
-        observed = events.observe(
-            obs, F.count(F.when(~ok, 1)).alias("rows_quarantined")
+        valid = events.observe(obs, _quarantined()).filter(A.valid_predicate())
+        collapsed = A.lww_collapse(
+            valid,
+            hot_keys=hot,
+            n_salts=self.n_salts,
+            bucket=bucket_expr(snap.key_cols, snap.n_buckets),
+            n_partitions=snap.n_buckets,
         )
-        valid = observed.filter(ok)
-        # Gate on the LSN-range width — a free driver-side upper bound on
-        # this batch's key count (LSNs are unique per event). Above the
-        # cap the winner set would not broadcast comfortably, and a batch
-        # that large wants the canonical full shuffle anyway.
-        prefilter = self.prefilter_winners and (
-            n_events_hint is None or n_events_hint <= self.prefilter_max_winners
+        return obs, A.to_table_rows(collapsed, snap.schema)
+
+    # The three per-batch steps below are shared by ``replay``'s loop and
+    # ``apply_batch``: one place plans a batch and builds its manifest,
+    # one place commits it, one place counts its quarantined rows.
+
+    def _plan(
+        self,
+        events: DataFrame,
+        batch_id: str,
+        lsn_lo: int,
+        lsn_hi: int,
+        snap: Snapshot,
+        committed: set[str],
+        hot: Callable[[], list[tuple[str, str]]],
+    ) -> _Batch | BatchReport:
+        """Plan step: the skip check, then the batch's lazy rows and its
+        commit manifest. ``hot`` is called only for a batch that will be
+        applied, so a skipped batch never pays for hot-key detection."""
+        with phase("runner.skip_check"):
+            if batch_id in committed:
+                return BatchReport(batch_id, lsn_lo, lsn_hi, status="skipped")
+        hot_keys = hot()
+        obs, rows = self._build_rows(events, snap, hot_keys)
+        manifest = {
+            "run_id": self.run_id,
+            "run_scope": self.run_id,
+            "batch_id": batch_id,
+            "lsn_lo": lsn_lo,
+            "lsn_hi": lsn_hi,
+            "hot_keys": ["\x1f".join(k) for k in hot_keys],
+        }
+        return _Batch(batch_id, lsn_lo, lsn_hi, events, obs, rows, manifest)
+
+    def _write(self, b: _Batch, snap: Snapshot, commit_id: int):
+        """Write step. MoR writes the batch's delta files under the
+        pre-assigned ``commit_id``; they stay invisible until the finish
+        step commits them. CoW probes the touched buckets with a
+        column-pruned key scan (content never read) and merges them,
+        which commits against the head the merge reads itself."""
+        if self.mode == "mor":
+            return self.table.mor_write(
+                b.rows,
+                commit_id,
+                op_col="op",
+                delete_op="delete",
+                bucket_aligned=True,
+                snapshot=snap,
+            )
+        # quarantine-bound rows (null key cols) never reach the merge —
+        # without this filter their hash bucket would be spuriously
+        # rewritten on every batch carrying a corrupt stripe
+        keyed = b.events
+        for c in snap.key_cols:
+            keyed = keyed.filter(F.col(c).isNotNull())
+        touched = [
+            r[0]
+            for r in keyed.select(bucket_expr(snap.key_cols, snap.n_buckets))
+            .distinct()
+            .collect()
+        ]
+        return touched, self.table.merge(
+            b.rows,
+            op_col="op",
+            delete_op="delete",
+            touched_buckets=touched,
+            summary=b.manifest,
         )
-        if prefilter:
-            # Winning-LSN set from a slim plan: the scan evaluates the
-            # full validity predicate (content read for nullity, dropped
-            # immediately), the partially-aggregated groupBy ships only
-            # (repo, path, max lsn) — the content column never crosses
-            # this exchange. Built from the RAW events (not ``observed``)
-            # so the quarantine Observation node executes exactly once,
-            # in the main plan.
-            winners = (
-                events.filter(ok)
-                .groupBy("repo", "path")
-                .agg(F.max("lsn").alias("lsn"))
-                .select("lsn")
+
+    def _finish(self, b: _Batch, written, expect_parent: int) -> BatchReport:
+        """Finish step: commit (MoR's ordered finalize onto
+        ``expect_parent``; a CoW merge has already committed), count the
+        batch's quarantined rows, report."""
+        if self.mode == "mor":
+            snap, metrics = self.table.mor_finalize(
+                written, summary=b.manifest, expect_parent=expect_parent
             )
-            # Loser rows drop BEFORE the content-bearing bucket shuffle.
-            # No false negatives: every key's true winner LSN is in the
-            # broadcast set by construction; duplicate deliveries of the
-            # winning LSN pass through and collapse in the group-by below.
-            valid = valid.join(F.broadcast(winners), "lsn", "leftsemi")
-            # post-filter input is ~1 row/key — hot-key salting is moot
-            hot = []
-        if self.fuse_buckets:
-            collapsed = A.lww_collapse(
-                valid,
-                hot_keys=hot,
-                n_salts=self.n_salts,
-                bucket=bucket_expr(snap.key_cols, snap.n_buckets),
-                n_partitions=snap.n_buckets,
-            )
+            ran = True
         else:
-            collapsed = A.lww_collapse(
-                valid, hot_keys=hot, n_salts=self.n_salts
-            ).repartition(snap.n_buckets, bucket_expr(snap.key_cols, snap.n_buckets))
-        return obs, A.to_table_rows(collapsed, snap.schema, native_sha=self.native_sha)
+            touched, (snap, metrics) = written
+            # a merge over zero touched buckets commits an empty snapshot
+            # without ever executing the batch plan (sparse LSN ranges,
+            # all-quarantine batches), so the observation never fills
+            ran = bool(touched)
+        with phase("runner.obs_get"):
+            n_bad = observed_metrics(b.obs, b.events, [_quarantined()], ran=ran)[
+                "rows_quarantined"
+            ]
+        return BatchReport(
+            b.batch_id,
+            b.lsn_lo,
+            b.lsn_hi,
+            status="applied",
+            totals=metrics["totals"],
+            n_quarantined=n_bad,
+            snapshot_id=snap.snapshot_id,
+        )
 
     def apply_batch(
         self,
@@ -289,15 +327,19 @@ class CdcRunner:
         hot_keys: list[tuple[str, str]] | None = None,
         committed: set[str] | None = None,
     ) -> BatchReport:
-        """Validate → salted LWW → sha256 → MERGE, one atomic commit.
+        """Validate → salted LWW → sha256 → MERGE, one atomic commit: the
+        replay loop's own plan, write and finish steps, run inline.
 
-        Cost shape per batch: one column-pruned key scan (hot repos +
-        touched buckets, content never read) and ONE content-heavy pass
-        (validate-observe → collapse → sha → merge-join → write). The
-        quarantine count and insert/update/delete split ride the write
-        action via ``observe`` — zero extra passes.
+        Cost shape per batch: one content-heavy pass (validate-observe →
+        collapse → sha → write); CoW adds a column-pruned key scan for
+        the touched buckets. The quarantine count and the
+        insert/update/delete split ride the write action via
+        ``observe``.
 
-        ``committed``: pass the ledger snapshot when replaying many
+        ``hot_keys``: the salt set; None detects it from ``events`` (one
+        sampled job) when ``salt_auto`` is on.
+
+        ``committed``: pass the ledger snapshot when applying many
         batches — the per-batch fallback re-walks the whole snapshot
         chain (one JSON parse per snapshot), O(batches × snapshots) over
         a long-lived table.
@@ -305,95 +347,18 @@ class CdcRunner:
         with phase("runner.skip_check"):
             if committed is None:
                 committed = self.table.committed_batch_ids()
-            if batch_id in committed:
-                return BatchReport(batch_id, lsn_lo, lsn_hi, status="skipped")
+        snap = self._evolve_if_needed(events)
 
-        with phase("runner.evolve"):
-            self._evolve_if_needed(events)
-            snap = self.table.current_snapshot()
+        def hot() -> list[tuple[str, str]]:
+            if hot_keys is not None:
+                return hot_keys
+            return self.detect_hot_keys(events) if self.salt_auto else []
 
-        # --- slim pass: repo/path columns only — parquet column pruning.
-        # ``hot_keys`` passed in (replay computes it ONCE for the whole
-        # log) skips the per-batch sample job — driver-side jobs are the
-        # serial fraction that caps scaling at high core counts.
-        hot: list[tuple[str, str]] = hot_keys if hot_keys is not None else []
-        touched: list[int] | None = None
-        if (self.salt_auto and hot_keys is None) or self.mode == "cow":
-            from ..lakehouse.table import bucket_expr
-
-            slim = events.select("repo", "path")
-            if self.salt_auto and hot_keys is None:
-                hot = self.detect_hot_keys(slim)
-            if self.mode == "cow":
-                # quarantine-bound rows (null key cols) never reach the
-                # merge — without this filter their hash bucket would be
-                # spuriously rewritten on every batch carrying a corrupt
-                # stripe
-                keyed = slim
-                for c in snap.key_cols:
-                    keyed = keyed.filter(F.col(c).isNotNull())
-                touched = [
-                    r[0]
-                    for r in keyed.select(bucket_expr(snap.key_cols, snap.n_buckets))
-                    .distinct()
-                    .collect()
-                ]
-
-        obs, rows = self._build_rows(
-            events, snap, hot, n_events_hint=lsn_hi - lsn_lo
-        )
-
-        manifest = {
-            "run_id": self.run_id,
-            "run_scope": self.run_id,
-            "batch_id": batch_id,
-            "lsn_lo": lsn_lo,
-            "lsn_hi": lsn_hi,
-            "hot_keys": ["\x1f".join(k) for k in hot],
-        }
-        if self.mode == "mor":
-            new_snap, metrics = self.table.merge_mor(
-                rows,
-                op_col="op",
-                delete_op="delete",
-                summary=manifest,
-                bucket_aligned=True,
-            )
-        else:
-            new_snap, metrics = self.table.merge(
-                rows,
-                op_col="op",
-                delete_op="delete",
-                touched_buckets=touched,
-                summary=manifest,
-            )
-        with phase("runner.obs_get"):
-            # Observation.get BLOCKS until an action runs over the observed
-            # plan; a CoW merge over zero touched buckets commits an empty
-            # snapshot without ever executing `rows` (sparse LSN ranges can
-            # slice an empty batch), so waiting would hang the replay.
-            # An empty batch has nothing to quarantine.
-            if touched is not None and not touched:
-                n_bad = 0
-            else:
-                try:
-                    n_bad = int(obs.get.get("rows_quarantined", 0))
-                except Exception:
-                    # the optimizer can prune the observe node when the
-                    # valid side folds statically empty (e.g. every lsn
-                    # NULL) — exactly the batches that are ALL quarantine,
-                    # so assuming 0 here would hide them; recompute
-                    # directly (one extra job, only on this rare path)
-                    n_bad = events.filter(~A.valid_predicate()).count()
-        return BatchReport(
-            batch_id,
-            lsn_lo,
-            lsn_hi,
-            status="applied",
-            totals=metrics["totals"],
-            n_quarantined=n_bad,
-            snapshot_id=new_snap.snapshot_id,
-        )
+        b = self._plan(events, batch_id, lsn_lo, lsn_hi, snap, committed, hot)
+        if isinstance(b, BatchReport):
+            return b
+        written = self._write(b, snap, self.table._alloc_commit_id(snap))
+        return self._finish(b, written, expect_parent=snap.snapshot_id)
 
     # ------------------------------------------------------------- replay
 
@@ -403,11 +368,40 @@ class CdcRunner:
         n_batches: int = 4,
         fail_after: int | None = None,
     ) -> list[BatchReport]:
-        """Replay a change log in deterministic LSN-range micro-batches.
+        """Replay a change log in deterministic LSN-range micro-batches,
+        with up to ``pipeline_depth`` batch writes in flight (1 in cow
+        mode).
 
-        ``fail_after=k`` raises after k batches commit — the kill switch
-        for resume tests. A rerun (new runner, same table+log) must skip
-        the committed prefix and converge to the same final state.
+        Safe because MoR delta writes are independent: batch k's files land
+        under its own pre-assigned commit sequence and stay invisible until
+        the ordered ``mor_finalize`` flips the version hint — so writes
+        race, the ledger serializes (the async-checkpoint shape). Commit
+        order — and therefore the LWW ``_seq`` order and exactly-once
+        resume — does not depend on the depth. Crash mid-pipeline leaves
+        only uncommitted delta dirs: invisible to readers, re-done on
+        resume, garbage-collected by ``expire_snapshots``.
+
+        Why it pays: each batch has ~0.5-1s of driver-serial work (Catalyst
+        analysis, AQE stage sync, commit bookkeeping) that a sequential
+        loop adds to the critical path; overlapped behind the previous
+        batch's cluster execution it disappears, which is the difference
+        between ~0.4 and ~0.8+ N->4N scaling efficiency on short batches.
+
+        Hot-key detection (one sampled cluster job, ~0.4 s at sf0.1) is
+        likewise taken off the critical path: the first applied batch
+        salts with the PRIOR run's recorded hot set (``_prior_hot_keys``
+        warm start — empty on a fresh table) while this log's detection
+        job runs concurrently with that batch's write; every later batch
+        blocks on the detection future, long since finished by then. The
+        final table state is identical whichever batches salt (salting
+        only re-routes pre-MERGE collapse work), and each batch's
+        manifest records the exact salt set it used.
+
+        ``fail_after=k`` raises ``KilledError`` right after the k-th
+        commit — the kill switch for resume tests. Writes still in flight
+        finish and stay uncommitted, exactly like a crash. A rerun (new
+        runner, same table+log) must skip the committed prefix and
+        converge to the same final state.
         """
         with phase("runner.lsn_bounds"):
             # Footer-stats fast path: when the log came from
@@ -429,62 +423,108 @@ class CdcRunner:
                 self.apply_batch(events, "lsn:null-only", 0, 0, hot_keys=[])
             ]
         ranges = lsn_ranges(int(lo_hi[0]), int(lo_hi[1]), n_batches)
-        if (
-            self.mode == "mor"
-            and self.pipeline_depth > 1
-            and fail_after is None
-            and self.compact_every is None
-        ):
-            # the pipelined path overlaps hot-key detection with the
-            # first batch's write instead of paying it up front
-            return self._replay_pipelined(events, ranges)
-        # Hot-repo set once for the whole log: salting is correctness-
-        # neutral (pre-MERGE key collapse), so a log-global hot set is as
-        # valid as a per-batch one and saves one driver job per batch.
-        with phase("runner.hot_detect"):
-            hot = self.detect_hot_keys(events) if self.salt_auto else []
-        reports: list[BatchReport] = []
-        applied = 0
-        # ledger snapshot ONCE per replay — the per-batch fallback walks
-        # the whole snapshot chain each time (O(batches × snapshots));
-        # batches this replay itself commits can't be in the skip set
+        # ledger snapshot ONCE per replay — batches this replay itself
+        # commits can't be in the skip set
         with phase("runner.skip_check"):
             committed = self.table.committed_batch_ids()
-        for i, (lo, hi) in enumerate(ranges):
-            batch_id = f"lsn:{lo}-{hi}"
-            # LSN-range predicate pushes down to the event-log scan. A
-            # NULL lsn falls outside EVERY (lo, hi] slice, so the first
-            # batch adopts those rows — they are quarantine-bound (the
-            # validity predicate requires a non-null lsn) and must be
-            # counted, not silently excluded from all batches.
-            in_range = (F.col("lsn") > lo) & (F.col("lsn") <= hi)
-            if i == 0:
-                in_range = in_range | F.col("lsn").isNull()
-            batch = events.filter(in_range)
-            rep = self.apply_batch(
-                batch, batch_id, lo, hi, hot_keys=hot, committed=committed
-            )
-            reports.append(rep)
-            if rep.status == "applied":
-                applied += 1
-                if (
-                    self.mode == "mor"
-                    and self.compact_every
-                    and applied % self.compact_every == 0
-                ):
+        # evolve once up front: the unified log schema is constant across
+        # batches, so per-batch evolution checks are redundant
+        base = self._evolve_if_needed(events)
+        depth = self.pipeline_depth if self.mode == "mor" else 1
+        compact_every = self.compact_every if self.mode == "mor" else None
+        # commit ids come from the global allocator (snapshot ids are
+        # table-global: sibling-branch commits or a crashed writer's
+        # orphan claim may occupy ids above this ref's head), so they can
+        # skip — each finalize expects the previous commit's actual id
+        # as its parent, never commit_id - 1
+        parent = base.snapshot_id
+        next_commit = self.table._alloc_commit_id(base)
+        reports: list[BatchReport | None] = [None] * len(ranges)
+        inflight: list[tuple[int, _Batch, Future]] = []
+        n_written = n_applied = 0
+        hot: list[tuple[str, str]] | None = None  # None until first use
+        hot_fut: Future | None = None
+
+        def batch_hot() -> list[tuple[str, str]]:
+            nonlocal hot, hot_fut
+            if not self.salt_auto:
+                return []
+            if hot is None:
+                # first applied batch: warm-start salt set + async
+                # detection over the full log
+                hot = self._prior_hot_keys()
+                with phase("runner.hot_submit"):
+                    hot_fut = pool.submit(self.detect_hot_keys, events)
+            elif hot_fut is not None:
+                with phase("runner.hot_wait"):
+                    # REPLACE the warm-start set, don't union: unioning
+                    # makes the hot set monotone across runs (manifest ->
+                    # warm start -> union -> manifest), so a key hot once
+                    # would stay salted forever and any non-empty set
+                    # forces the two-stage collapse plan on every future
+                    # batch
+                    hot = sorted(set(hot_fut.result()))
+                hot_fut = None
+            return hot
+
+        def finish_oldest() -> None:
+            nonlocal parent, n_applied
+            idx, b, fut = inflight.pop(0)
+            rep = self._finish(b, fut.result(), expect_parent=parent)
+            reports[idx] = rep
+            parent = rep.snapshot_id
+            n_applied += 1
+            if fail_after is not None and n_applied >= fail_after:
+                raise KilledError(f"injected kill after {n_applied} batches")
+
+        # one spare worker runs hot-key detection beside the writes.
+        # Leaving the block waits for every task, so on any failure the
+        # in-flight writes finish (their dirs stay uncommitted) and
+        # neither they nor the detection job outlive replay(); an
+        # unconsumed detection result (or error) is dropped, because
+        # detection is advisory, never a replay failure
+        with ThreadPoolExecutor(max_workers=depth + 1) as pool:
+            for idx, (lo, hi) in enumerate(ranges):
+                # LSN-range predicate pushes down to the event-log scan. A
+                # NULL lsn falls outside EVERY (lo, hi] slice, so the first
+                # batch adopts those rows — they are quarantine-bound (the
+                # validity predicate requires a non-null lsn) and must be
+                # counted, not silently excluded from all batches.
+                in_range = (F.col("lsn") > lo) & (F.col("lsn") <= hi)
+                if idx == 0:
+                    in_range = in_range | F.col("lsn").isNull()
+                b = self._plan(
+                    events.filter(in_range), f"lsn:{lo}-{hi}", lo, hi,
+                    base, committed, batch_hot,
+                )
+                if isinstance(b, BatchReport):
+                    reports[idx] = b
+                    continue
+                inflight.append((idx, b, pool.submit(self._write, b, base, next_commit)))
+                next_commit += 1
+                n_written += 1
+                # compaction claims the next commit id itself, so every
+                # write with a pre-assigned id must commit before it runs
+                compact_now = bool(compact_every) and n_written % compact_every == 0
+                while len(inflight) > (0 if compact_now else depth - 1):
+                    finish_oldest()
+                if compact_now:
                     self.table.compact(summary={"run_id": self.run_id})
-                if fail_after is not None and applied >= fail_after:
-                    raise KilledError(f"injected kill after {applied} batches")
+                    base = self.table.current_snapshot()
+                    parent = base.snapshot_id
+                    next_commit = self.table._alloc_commit_id(base)
+            while inflight:
+                finish_oldest()
         return reports
 
     def _prior_hot_keys(self) -> list[tuple[str, str]]:
         """Hot-key set recorded by the most recent committed batch
-        manifest — the warm-start salt set for the pipelined path's
-        first batch, whose plan is built while this run's own detection
-        job is still in flight. A continuous ingest always has a prior
-        manifest, so at 10^10-event scale batch 1 salts with the keys
-        that were hot minutes ago — exactly the ones likeliest to still
-        be hot. Salting is correctness-neutral either way."""
+        manifest — the warm-start salt set for a replay's first batch,
+        whose plan is built while this run's own detection job is still
+        in flight. A continuous ingest always has a prior manifest, so at
+        10^10-event scale batch 1 salts with the keys that were hot
+        minutes ago — exactly the ones likeliest to still be hot. Salting
+        is correctness-neutral either way."""
         for snap in self.table.snapshot_chain():
             keys = snap.summary.get("hot_keys")
             if keys is not None:
@@ -494,169 +534,6 @@ class CdcRunner:
                     if len(parts := k.split("\x1f", 1)) == 2
                 ]
         return []
-
-    def _replay_pipelined(
-        self, events: DataFrame, ranges: list[tuple[int, int]]
-    ) -> list[BatchReport]:
-        """MoR replay with up to ``pipeline_depth`` batch writes in flight.
-
-        Safe because MoR delta writes are independent: batch k's files land
-        under its own pre-assigned commit sequence and stay invisible until
-        the ordered ``mor_finalize`` flips the version hint — so writes
-        race, the ledger serializes (the async-checkpoint shape). Commit
-        order — and therefore the LWW ``_seq`` order and exactly-once
-        resume — is identical to the sequential path. Crash mid-pipeline
-        leaves only uncommitted delta dirs: invisible to readers, re-done
-        on resume, garbage-collected by ``expire_snapshots``.
-
-        Why it pays: each batch has ~0.5-1s of driver-serial work (Catalyst
-        analysis, AQE stage sync, commit bookkeeping) that a sequential
-        loop adds to the critical path; overlapped behind the previous
-        batch's cluster execution it disappears, which is the difference
-        between ~0.4 and ~0.8+ N->4N scaling efficiency on short batches.
-
-        Hot-key detection (one sampled cluster job, ~0.4 s at sf0.1) is
-        likewise taken off the critical path: a synchronous loop pays it
-        while every core idles, so here the first batch salts with the
-        PRIOR run's recorded hot set (``_prior_hot_keys`` warm start —
-        empty on a fresh table) while this log's detection job runs
-        concurrently with that batch's write; every later batch blocks
-        on the detection future, long since finished by then. The final
-        table state is identical whichever batches salt (salting only
-        re-routes pre-MERGE collapse work; ``test_pipelined_equals_
-        sequential`` pins the equality), and each batch's manifest still
-        records the exact salt set it used.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        with phase("runner.skip_check"):
-            committed = self.table.committed_batch_ids()
-        with phase("runner.evolve"):
-            # Evolve once up front: the unified log schema is constant
-            # across batches, so per-batch evolution checks are redundant.
-            self._evolve_if_needed(events)
-            base = self.table.current_snapshot()
-        hot: list[tuple[str, str]] = []
-        hot_fut = None
-        det_pool: ThreadPoolExecutor | None = None
-
-        indexed: list[tuple[int, BatchReport]] = []
-        inflight: list[tuple] = []
-        # seed from the global allocator (not base+1): snapshot ids are
-        # table-global, so sibling-branch commits or a crashed writer's
-        # orphan claim may occupy ids above this ref's head
-        next_commit = self.table._alloc_commit_id(base)
-
-        def drain_one() -> None:
-            idx, batch_id, lo, hi, commit_id, fut, obs, manifest = inflight.pop(0)
-            w = fut.result()
-            snap, metrics = self.table.mor_finalize(
-                w, summary=manifest, expect_parent=commit_id - 1
-            )
-            with phase("runner.obs_get"):
-                try:
-                    n_bad = int(obs.get.get("rows_quarantined", 0))
-                except Exception:
-                    n_bad = 0
-            indexed.append(
-                (idx, BatchReport(
-                    batch_id, lo, hi, status="applied", totals=metrics["totals"],
-                    n_quarantined=n_bad, snapshot_id=snap.snapshot_id,
-                ))
-            )
-
-        with ThreadPoolExecutor(max_workers=self.pipeline_depth) as ex:
-            try:
-                for idx, (lo, hi) in enumerate(ranges):
-                    batch_id = f"lsn:{lo}-{hi}"
-                    if batch_id in committed:
-                        indexed.append(
-                            (idx, BatchReport(batch_id, lo, hi, status="skipped"))
-                        )
-                        continue
-                    # first range adopts null-lsn rows (quarantine-bound;
-                    # outside every slice otherwise) — mirrors the
-                    # sequential path so batch identity stays deterministic
-                    in_range = (F.col("lsn") > lo) & (F.col("lsn") <= hi)
-                    if idx == 0:
-                        in_range = in_range | F.col("lsn").isNull()
-                    batch = events.filter(in_range)
-                    if self.salt_auto:
-                        if det_pool is None:
-                            # first real batch: warm-start salt set +
-                            # async detection over the full log
-                            det_pool = ThreadPoolExecutor(max_workers=1)
-                            hot = self._prior_hot_keys()
-                            with phase("runner.hot_submit"):
-                                hot_fut = det_pool.submit(
-                                    self.detect_hot_keys, events
-                                )
-                        elif hot_fut is not None:
-                            with phase("runner.hot_wait"):
-                                # REPLACE the warm-start set, don't union:
-                                # unioning makes the hot set monotone
-                                # across runs (manifest -> warm start ->
-                                # union -> manifest), so a key hot once
-                                # would stay salted forever and any
-                                # non-empty set forces the two-stage
-                                # collapse plan on every future batch
-                                hot = sorted(set(hot_fut.result()))
-                            hot_fut = None
-                    obs, rows = self._build_rows(
-                        batch, base, hot, n_events_hint=hi - lo
-                    )
-                    manifest = {
-                        "run_id": self.run_id,
-                        "run_scope": self.run_id,
-                        "batch_id": batch_id,
-                        "lsn_lo": lo,
-                        "lsn_hi": hi,
-                        "hot_keys": ["\x1f".join(k) for k in hot],
-                    }
-                    commit_id = next_commit
-                    next_commit += 1
-                    fut = ex.submit(
-                        self.table.mor_write,
-                        rows,
-                        commit_id,
-                        op_col="op",
-                        delete_op="delete",
-                        bucket_aligned=True,
-                        snapshot=base,
-                    )
-                    inflight.append(
-                        (idx, batch_id, lo, hi, commit_id, fut, obs, manifest)
-                    )
-                    while len(inflight) >= self.pipeline_depth:
-                        drain_one()
-                while inflight:
-                    drain_one()
-            except BaseException:
-                # let in-flight writes finish (their dirs stay uncommitted),
-                # then surface the original failure
-                for item in inflight:
-                    try:
-                        item[5].result()
-                    except Exception:
-                        pass
-                raise
-            finally:
-                if det_pool is not None:
-                    # the detection future must not outlive replay(): an
-                    # unconsumed running job (single-batch replay, or an
-                    # exception before batch 2) would keep a sampled scan
-                    # contending with the caller's next work and leave a
-                    # non-daemon thread blocking interpreter exit. Cancel
-                    # if not started; otherwise consume (sampled scan,
-                    # bounded) and swallow its errors — detection is
-                    # advisory, never a replay failure.
-                    if hot_fut is not None and not hot_fut.cancel():
-                        try:
-                            hot_fut.result()
-                        except Exception:
-                            pass
-                    det_pool.shutdown(wait=True)
-        return [r for _, r in sorted(indexed, key=lambda t: t[0])]
 
 
 def read_event_log(spark: SparkSession, *paths: str) -> DataFrame:

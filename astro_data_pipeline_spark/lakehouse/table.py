@@ -219,6 +219,26 @@ def bucket_expr(key_cols: list[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+def observed_metrics(
+    obs, source: DataFrame, aggs: list[F.Column], ran: bool = True
+) -> dict[str, int]:
+    """The metrics ``obs`` (an ``Observation`` of ``aggs`` over
+    ``source``) gathered during a write — or, when it cannot deliver, the
+    same aggregates recomputed over ``source`` (one extra job, on rare
+    paths only). ``obs.get`` raises when the optimizer pruned the observe
+    node or the write's filtered input was empty, and it blocks forever
+    when no action ever ran over the observed plan: pass ``ran=False``
+    then (a copy-on-write merge over zero touched buckets commits
+    without executing its input)."""
+    if ran:
+        try:
+            return {k: int(v) for k, v in obs.get.items()}
+        except Exception:
+            pass
+    row = source.agg(*aggs).collect()[0]
+    return {k: int(v) for k, v in row.asDict().items()}
+
+
 # Lossless type promotions the parquet reader performs on scan (the
 # Iceberg v3 / Delta type-widening matrix restricted to what Spark 4's
 # vectorized reader upcasts natively — verified in tests/test_type_widening).
@@ -1985,15 +2005,7 @@ class LakeTable:
                 .mode("overwrite")
                 .parquet(out_dir)
             )
-            try:
-                totals = {k: int(v) for k, v in obs.get.items()}
-            except Exception:
-                # optimizer pruned the metrics node (statically-empty join
-                # side) — recompute the tiny classification directly
-                row = joined.agg(*clf_aggs).collect()[0]
-                totals = {k: int(row[k]) for k in
-                          ("rows_inserted", "rows_updated", "rows_deleted",
-                           "rows_delete_noop", "rows_outside_touched")}
+            totals = observed_metrics(obs, joined, clf_aggs)
             outside = totals.pop("rows_outside_touched", 0)
             if outside:
                 # files are written but NO snapshot references them (the
@@ -2142,11 +2154,7 @@ class LakeTable:
                 BUCKET_COL
             ).mode("overwrite").parquet(out_dir)
         with phase("mor.obs_get"):
-            try:
-                totals = {k: int(v) for k, v in obs.get.items()}
-            except Exception:
-                row = updates.agg(*clf_aggs).collect()[0]
-                totals = {k: int(row[k]) for k in ("rows_upserted", "rows_delete_ops")}
+            totals = observed_metrics(obs, updates, clf_aggs)
         return {"commit_id": commit_id, "rel_dir": rel_dir, "totals": totals}
 
     def mor_finalize(

@@ -2,7 +2,8 @@
 
 Kept separate from ``replay.py`` so the foreachBatch closure stays tiny
 and the apply logic is the SAME code the LSN-range batch loop uses
-(CdcRunner.apply_batch) — one semantics, two triggers.
+(``CdcRunner.apply_batch`` runs the loop's own per-batch steps) — one
+semantics, two triggers.
 
 ``StreamApplier`` is stateful, one instance per (stream, table):
 
@@ -161,15 +162,3 @@ class StreamApplier:
             "n_quarantined": rep.n_quarantined,
         }
 
-
-def apply_stream_batch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    table: LakeTable,
-    run_id: str,
-    mode: str,
-) -> dict | None:
-    """One-shot convenience wrapper (kept for callers that manage their
-    own per-epoch state); prefer a single ``StreamApplier`` per stream —
-    this constructs one per call and re-reads the ledger each time."""
-    return StreamApplier(table, run_id, mode)(batch_df, epoch_id)

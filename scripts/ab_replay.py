@@ -34,13 +34,6 @@ VARIANTS = {
     # unlike the shuffle codec)
     "pq_snappy": ({"spark.sql.parquet.compression.codec": "snappy"}, {}),
     "pq_zstd": ({"spark.sql.parquet.compression.codec": "zstd"}, {}),
-    # Arrow batch size for the sha UDF stage
-    "arrow2k": ({"spark.sql.execution.arrow.maxRecordsPerBatch": "2048"}, {}),
-    "arrow4k": ({"spark.sql.execution.arrow.maxRecordsPerBatch": "4096"}, {}),
-    "arrow16k": ({"spark.sql.execution.arrow.maxRecordsPerBatch": "16384"}, {}),
-    # sha256 implementation: Arrow pandas UDF vs JVM sha2 codegen
-    "sha_arrow": ({}, {"native_sha": False}),
-    "sha_native": ({}, {"native_sha": True}),
     # scan split size (straggler-wave balance at 32 cores: 34 splits at
     # 32 MB leaves a 2-task second wave; 16 MB doubles the split count)
     "split16m": ({"spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024)}, {}),

@@ -165,7 +165,7 @@ def _storm_writer_loop(spark, table, batches, wid: int, result: dict) -> None:
     try:
         schema = table.current_snapshot().schema
         for i, batch in enumerate(batches):
-            upd = A.to_table_rows(A.lww_collapse(batch), schema, native_sha=True)
+            upd = A.to_table_rows(A.lww_collapse(batch), schema)
             attempts = {"n": 0}
 
             def op(u=upd, i=i, attempts=attempts):

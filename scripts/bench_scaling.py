@@ -378,9 +378,9 @@ def write_report(pairs: list[tuple[dict, dict]], sf: float, path: str) -> list[d
             "  drops loser payloads before the exchange): shuffle falls to\n"
             "  **48.0 B/event (-31%)** but scan input doubles (113 -> 221 MB)\n"
             "  and wall-clock LOSES (15.4 s vs 11.2 s at local[32], sf1.0,\n"
-            "  interleaved best-of-3). Kept as an opt-in strategy\n"
-            "  (`CdcRunner(prefilter_winners=True)`, oracle-pinned) for\n"
-            "  topologies where the wire is costlier than the scan.\n"
+            "  interleaved best-of-3). The opt-in strategy was later\n"
+            "  removed from the runner: it lost wherever we ran it, and\n"
+            "  no caller enabled it.\n"
             "- Attack 2, shuffle codec zstd level 1 -> 3 (fewer bytes for\n"
             "  more CPU): throughput drops at BOTH core counts (8: 289k ->\n"
             "  225k; 32: 482k -> 371k ev/s, interleaved best-of-6 in fresh\n"
@@ -394,11 +394,12 @@ def write_report(pairs: list[tuple[dict, dict]], sf: float, path: str) -> list[d
             "  winner's payload JVM->Arrow->Python->JVM — two extra\n"
             "  memory-bus passes plus 32 resident Python workers — exactly\n"
             "  the shared resource the top rung contends for. Interleaved\n"
-            "  best-of-3, sf1.0, in-process A/B (scripts/ab_replay.py\n"
-            "  sha_arrow vs sha_native): local[32] 406.6k -> 644.3k ev/s\n"
-            "  (+58%); local[8] 208.5k -> 306.6k (+47%); the asymmetric\n"
-            "  gain lifts 8->32 efficiency. `native_sha=True` is now the\n"
-            "  engine default; the Arrow implementation remains the\n"
+            "  best-of-3, sf1.0, in-process A/B (Arrow vs JVM sha):\n"
+            "  local[32] 406.6k -> 644.3k ev/s (+58%); local[8] 208.5k\n"
+            "  -> 306.6k (+47%); the asymmetric gain lifts 8->32\n"
+            "  efficiency. The runner's Arrow-sha option was later\n"
+            "  removed, since it only ever lost: the replay always\n"
+            "  uses the JVM `sha2`. The Arrow implementation remains the\n"
             "  measured operator on the query surface\n"
             "  (scalar_sha256_documents, dedup_exact_by_sha,\n"
             "  text_document_fingerprint), where it is the contract\n"

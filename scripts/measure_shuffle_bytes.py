@@ -6,12 +6,10 @@ byte-bound, so the relevant engineering metric is how few bytes the
 replay moves through its one content-bearing exchange. This harness runs
 the replay with the UI REST API enabled and sums per-stage
 shuffleWriteBytes / shuffleReadBytes across exactly the replay's jobs,
-reporting bytes/event. ``--prefilter`` also quantifies the winner
-pre-filter's byte reduction (the strategy trades a second scan for it —
-see CdcRunner's docstring for the wall-clock A/B).
+reporting bytes/event.
 
 Usage:
-    python scripts/measure_shuffle_bytes.py --sf 1.0 [--prefilter]
+    python scripts/measure_shuffle_bytes.py --sf 1.0
 """
 
 from __future__ import annotations
@@ -48,7 +46,6 @@ def main() -> None:
     ap.add_argument("--sf", type=float, default=1.0)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--n-batches", type=int, default=4)
-    ap.add_argument("--prefilter", action="store_true")
     args = ap.parse_args()
 
     from astro_data_pipeline_spark.cdc import apply as A
@@ -75,13 +72,9 @@ def main() -> None:
             A.KEY_COLS,
             n_buckets=64,
         )
-        reports = CdcRunner(
-            spark,
-            table,
-            run_id="bytes",
-            mode="mor",
-            prefilter_winners=args.prefilter,
-        ).replay(events, n_batches=args.n_batches)
+        reports = CdcRunner(spark, table, run_id="bytes", mode="mor").replay(
+            events, n_batches=args.n_batches
+        )
         after = _stage_totals(spark)
 
     n_events = sum(
@@ -92,7 +85,6 @@ def main() -> None:
     delta = {k: after[k] - before[k] for k in before}
     out = {
         "sf": args.sf,
-        "prefilter": args.prefilter,
         "n_events": n_events,
         **{k: v for k, v in delta.items()},
         "shuffle_write_bytes_per_event": round(delta["shuffle_write"] / n_events, 1),

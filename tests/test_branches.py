@@ -160,3 +160,61 @@ def test_branch_diff_previews_publish(spark, table):
         table.branch_diff("staging")
     with pytest.raises(ValueError, match="unknown branch"):
         table.branch_diff("nope")
+
+
+def _cdc_events(spark, lsns, tag):
+    import pandas as pd
+
+    rows = [
+        dict(lsn=i, ts=pd.Timestamp("2026-01-01"), op="insert" if i < 4 else "update",
+             repo="r", path=f"p{i % 4}", commit=f"{tag}{i}", lang="py",
+             content=f"{tag}-{i}")
+        for i in lsns
+    ]
+    return pd.DataFrame(rows), spark.createDataFrame(
+        pd.DataFrame(rows),
+        "lsn long, ts timestamp, op string, repo string, path string, "
+        "commit string, lang string, content string",
+    )
+
+
+@pytest.mark.parametrize("gap", ["branch_commit", "orphan_claim"])
+def test_pipelined_replay_on_main_steps_over_allocator_gaps(spark, tmp_path, gap):
+    """Snapshot ids are table-global, so the id after main's head may be
+    taken — by a commit on a sibling branch, or by the stray snapshot
+    file of a writer that crashed before publishing. A default-depth
+    replay on main must still chain each commit onto the previous one."""
+    import os
+    import shutil
+
+    from astro_data_pipeline_spark.cdc import apply as A
+    from astro_data_pipeline_spark.cdc.oracle import replay_reference
+    from astro_data_pipeline_spark.cdc.runner import CdcRunner
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "cdc"), T.StructType(A.BASE_TABLE_FIELDS),
+        A.KEY_COLS, n_buckets=4,
+    )
+    head = table.current_snapshot().snapshot_id
+    if gap == "branch_commit":
+        side = table.create_branch("side")
+        _, side_events = _cdc_events(spark, range(1, 4), "side")
+        CdcRunner(spark, side, run_id="side").replay(side_events, n_batches=1)
+        assert side.current_snapshot().snapshot_id > head
+    else:
+        meta = os.path.join(table.root, "metadata")
+        shutil.copy(
+            os.path.join(meta, f"snapshot-{head}.json"),
+            os.path.join(meta, f"snapshot-{head + 1}.json"),
+        )
+    assert table.current_snapshot().snapshot_id == head
+
+    want_pdf, events = _cdc_events(spark, range(1, 11), "main")
+    reports = CdcRunner(spark, table, run_id="main").replay(events, n_batches=2)
+    assert [r.status for r in reports] == ["applied", "applied"]
+    want = replay_reference(want_pdf)
+    got = {(r["repo"], r["path"]): (r["commit"], r["content_sha256"])
+           for r in table.read().collect()}
+    assert got == {
+        (r.repo, r.path): (r.commit, r.content_sha256) for r in want.itertuples()
+    }

@@ -160,23 +160,6 @@ def test_replay_matches_oracle(spark, tmp_path, fixture_meta, oracle_state, mode
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_prefilter_replay_equals_oracle(spark, tmp_path, fixture_meta, oracle_state):
-    """Both replay strategies — the opt-in winner pre-filter (losers
-    dropped before the content shuffle) and the default canonical fused
-    collapse — must land the identical final state. The fixture log has
-    deletes (null-content winners), duplicate deliveries of winning LSNs,
-    and delete→reinsert chains, so this pins the pre-filter's
-    no-false-negative claim."""
-    table = _new_table(spark, tmp_path)
-    events = read_event_log(spark, fixture_meta["v1_path"], fixture_meta["v2_path"])
-    CdcRunner(
-        spark, table, run_id="r1", mode="mor", prefilter_winners=True
-    ).replay(events, n_batches=5)
-    pd.testing.assert_frame_equal(
-        _final_state(table), _normalize(oracle_state), check_dtype=False
-    )
-
-
 def test_mor_compaction_preserves_state(spark, tmp_path, fixture_meta, oracle_state):
     table = _new_table(spark, tmp_path)
     events = read_event_log(spark, fixture_meta["v1_path"], fixture_meta["v2_path"])
@@ -584,8 +567,22 @@ def test_quarantine_invalid_events(spark, fixture_meta):
     assert valid.count() == 100
 
 
+# every replay configuration counts quarantined rows the same way: the
+# sequential and pipelined MoR loops and the copy-on-write merge
+REPLAY_CONFIGS = pytest.mark.parametrize(
+    "runner_kw",
+    [
+        {"mode": "mor", "pipeline_depth": 1},
+        {"mode": "mor"},
+        {"mode": "cow", "pipeline_depth": 1},
+    ],
+    ids=["mor-depth1", "mor-default", "cow-depth1"],
+)
+
+
+@REPLAY_CONFIGS
 def test_null_lsn_and_null_op_rows_are_quarantined_not_lost(
-    spark, tmp_path, fixture_meta, oracle_state
+    spark, tmp_path, fixture_meta, oracle_state, runner_kw
 ):
     """Rows with a NULL lsn fall outside every (lo, hi] LSN slice, and a
     NULL op makes the validity predicate evaluate to SQL NULL — both
@@ -601,11 +598,44 @@ def test_null_lsn_and_null_op_rows_are_quarantined_not_lost(
     # (LWW ties are resolved deterministically but we want clean counts)
     junk_null_op = junk_null_op.withColumn("lsn", F.col("lsn") + F.lit(1))
     mixed = events.unionByName(junk_null_lsn).unionByName(junk_null_op)
-    reports = CdcRunner(spark, table, run_id="nn", mode="mor").replay(
+    reports = CdcRunner(spark, table, run_id="nn", **runner_kw).replay(
         mixed, n_batches=3
     )
     assert sum(r.n_quarantined for r in reports) == 5
     pd.testing.assert_frame_equal(_final_state(table), _normalize(oracle_state))
+
+
+@REPLAY_CONFIGS
+@pytest.mark.parametrize("bad", ["bogus_op", "null_repo"])
+def test_all_quarantine_batch_is_counted(spark, tmp_path, runner_kw, bad):
+    """A batch whose every row is quarantine-bound still reports each of
+    them: its write sees an empty valid side (MoR) or touches no bucket
+    at all (CoW), so the quarantine observation delivers nothing and the
+    count must be recomputed, not assumed 0."""
+    rows = [
+        dict(lsn=i, ts=pd.Timestamp("2026-01-01"), op="insert", repo="r",
+             path=f"p{i}", commit=f"c{i}", lang="py", content=f"v{i}")
+        for i in range(1, 11)
+    ]
+    for r in rows[:5]:
+        if bad == "bogus_op":
+            r["op"] = "bogus"
+        else:
+            r["repo"] = None
+    events = spark.createDataFrame(
+        pd.DataFrame(rows),
+        "lsn long, ts timestamp, op string, repo string, path string, "
+        "commit string, lang string, content string",
+    )
+    table = _new_table(spark, tmp_path)
+    reports = CdcRunner(spark, table, run_id="q", **runner_kw).replay(
+        events, n_batches=2
+    )
+    assert [r.batch_id for r in reports] == ["lsn:0-5", "lsn:5-10"]
+    assert [r.n_quarantined for r in reports] == [5, 0]
+    assert sorted(r["path"] for r in table.read().collect()) == sorted(
+        f"p{i}" for i in range(6, 11)
+    )
 
 
 def test_all_null_lsn_log_runs_quarantine_only_batch(spark, tmp_path, fixture_meta):

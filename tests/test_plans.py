@@ -150,69 +150,6 @@ def test_cdc_collapse_salted_adds_one_stage(spark):
         assert p.count("Exchange") == 2, p
 
 
-def test_cdc_prefilter_shuffles_winners_only(spark):
-    """Winner pre-filter plan shape: ONE slim shuffle for the winning-LSN
-    aggregation (content never in its output), ONE broadcast of that set,
-    and still exactly ONE content-bearing bucket exchange after the
-    LeftSemi drop. If the semi-join ever stops planning as a broadcast
-    (falls back to a shuffled join) the pre-filter would ADD a full
-    content shuffle instead of removing loser bytes — the exact inverse
-    of its purpose — so the shape is pinned here. (The strategy is
-    opt-in — see the measured A/B in CdcRunner's docstring.)"""
-    from astro_data_pipeline_spark.cdc.runner import CdcRunner
-    from astro_data_pipeline_spark.lakehouse import LakeTable
-    from pyspark.sql import types as T
-    import tempfile, os
-
-    events = _fixture_events(spark)
-    with tempfile.TemporaryDirectory() as td:
-        table = LakeTable.create(
-            spark, os.path.join(td, "lake"), T.StructType(A.BASE_TABLE_FIELDS),
-            A.KEY_COLS, n_buckets=8,
-        )
-        runner = CdcRunner(
-            spark, table, run_id="plan", mode="mor", prefilter_winners=True
-        )
-        snap = table.current_snapshot()
-        _, rows = runner._build_rows(events, snap, hot=[])
-        simple = plan(rows, "simple")
-        assert "BroadcastExchange" in simple, simple
-        assert "LeftSemi" in simple, simple
-        # 3 total: winners partial-agg exchange + broadcast + bucket fuse
-        assert simple.count("Exchange") == 3, simple
-        # the slim winners aggregate must not carry content to its exchange
-        p = plan(rows, "formatted")
-        for block in p.split("\n\n"):
-            if block.startswith("(") and "Exchange hashpartitioning(repo" in block:
-                assert "content" not in block, block
-
-
-def test_cdc_prefilter_gate_falls_back_above_cap(spark):
-    """Above ``prefilter_max_winners`` (estimated from the free LSN-range
-    width) the runner must fall back to the canonical fused collapse —
-    a winner set too big to broadcast would OOM the driver."""
-    from astro_data_pipeline_spark.cdc.runner import CdcRunner
-    from astro_data_pipeline_spark.lakehouse import LakeTable
-    from pyspark.sql import types as T
-    import tempfile, os
-
-    events = _fixture_events(spark)
-    with tempfile.TemporaryDirectory() as td:
-        table = LakeTable.create(
-            spark, os.path.join(td, "lake"), T.StructType(A.BASE_TABLE_FIELDS),
-            A.KEY_COLS, n_buckets=8,
-        )
-        runner = CdcRunner(
-            spark, table, run_id="plan", mode="mor",
-            prefilter_winners=True, prefilter_max_winners=10,
-        )
-        snap = table.current_snapshot()
-        _, rows = runner._build_rows(events, snap, hot=[], n_events_hint=100)
-        p = plan(rows, "simple")
-        assert "BroadcastExchange" not in p, p
-        assert p.count("Exchange") == 1, p
-
-
 def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
     """Bucket-fused MoR resolution: compaction's LWW resolve + write
     alignment must share ONE exchange (unfused it pays two full passes of

@@ -173,15 +173,16 @@ def test_stream_restart_across_type_widening(spark, tmp_path):
 
 def test_stream_epoch_dedupe_closes_foreachbatch_gap(spark, tmp_path, fixture_meta):
     """Simulate 'merge committed but checkpoint lost': replaying the same
-    epoch id against the table must be skipped by the manifest check."""
-    from astro_data_pipeline_spark.streaming.runner_bridge import apply_stream_batch
+    epoch id against the table must be skipped by the manifest check. Each
+    fresh applier re-reads the ledger, as a restarted stream would."""
+    from astro_data_pipeline_spark.streaming.runner_bridge import StreamApplier
     from astro_data_pipeline_spark.cdc.runner import read_event_log
 
     table = _new_table(spark, tmp_path)
     events = read_event_log(spark, fixture_meta["v1_path"], fixture_meta["v2_path"])
-    r1 = apply_stream_batch(events, epoch_id=7, table=table, run_id="r", mode="mor")
+    r1 = StreamApplier(table, "r", "mor")(events, 7)
     assert r1["status"] == "applied"
-    r2 = apply_stream_batch(events, epoch_id=7, table=table, run_id="r", mode="mor")
+    r2 = StreamApplier(table, "r", "mor")(events, 7)
     assert r2["status"] == "skipped"
     assert table.current_snapshot().snapshot_id == r1["snapshot_id"]
 
