@@ -21,7 +21,8 @@ own table format with exactly the properties the north rule needs:
   explicit read schema (reference analog: Flyway additive migrations,
   V2_2__Add_Workflow_Versioning_Support.sql:9-18);
 - **time travel / lineage**: the snapshot chain is retained until
-  expired; each snapshot records per-bucket files and summary metrics.
+  expired; each snapshot records per-bucket files and summary metrics,
+  and ``lineage()`` is derived from that chain (no side file).
 
 Concurrency contract: MANY WRITERS, many readers, optimistic (Iceberg
 style — the reference gets write isolation for free from Postgres'
@@ -62,14 +63,12 @@ Layout::
         ref-<name>.txt          # branch heads (write-audit-publish)
         commit.lock             # flock serializing every ref CAS
         snapshot-<id>.json
-        lineage.jsonl           # per-(batch, partition) lineage rows
       data/
         commit-<id>-<tok>/_bucket=<k>/part-*.parquet  # CoW / compaction
         delta-<id>-<tok>/_bucket=<k>/part-*.parquet   # MoR delta commits
 
-``<tok>`` is a per-attempt random token: concurrent attempts at the
-same commit id write disjoint directories, and only the winning
-attempt's files enter the snapshot manifest.
+``LakeTable._write_buckets`` states the attempt-directory rule; only
+the winning attempt's files enter the snapshot manifest.
 """
 
 from __future__ import annotations
@@ -212,6 +211,27 @@ def _carry_stats(
     out = {p: s for p, s in old.items() if p in live}
     out.update(added)
     return out
+
+
+def commit_files(snap: Snapshot) -> dict[str, list[str]]:
+    """The files ``snap``'s own commit wrote, per bucket (numeric bucket
+    order): the entries of ``files`` and ``delta_files`` that lie under
+    its attempt directories (see ``LakeTable._write_buckets``), plus the
+    pre-token ``<kind>-<id>/`` layout still on disk in tables written by
+    earlier engine versions. The ``-`` / separator requirement keeps
+    ``delta-5`` from matching ``delta-51``."""
+    prefixes = tuple(
+        os.path.join("data", f"{kind}-{snap.snapshot_id}") + sep
+        for kind in ("commit", "delta")
+        for sep in ("-", os.sep)
+    )
+    out: dict[str, list[str]] = {}
+    for by_bucket in (snap.files, snap.delta_files):
+        for b, rels in by_bucket.items():
+            mine = [p for p in rels if p.startswith(prefixes)]
+            if mine:
+                out.setdefault(b, []).extend(mine)
+    return dict(sorted(out.items(), key=lambda kv: int(kv[0])))
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int) -> F.Column:
@@ -1052,8 +1072,8 @@ class LakeTable:
         Scans ONLY the merge-on-read delta files appended by the commits in
         ``(from, to]`` — O(changed rows), never O(table) — then classifies
         each net winner against the ``from`` snapshot's state, probing just
-        the buckets the deltas touched (bucket list comes from the delta
-        file paths: zero extra driver jobs). Output: key columns +
+        the buckets the deltas touched (bucket list comes from the
+        manifests: zero extra driver jobs). Output: key columns +
         ``change_type`` (insert / update / delete) + the ``to``-schema value
         columns (null for deletes). A delete of a key that did not exist at
         ``from`` nets out to nothing, and intermediate flip-flops collapse —
@@ -1084,7 +1104,7 @@ class LakeTable:
         # changelog survives; it DOES change the bucket spec, so bucket ids
         # parsed from delta paths stop matching ``from``'s layout and the
         # existence probe must fall back to an unpruned key scan.
-        delta_rels: list[str] = []
+        delta_files: dict[str, list[str]] = {}
         spec_stable = True
         snap = to_snap
         while snap is not None and snap.snapshot_id > from_snapshot_id:
@@ -1103,19 +1123,8 @@ class LakeTable:
             if snap.n_buckets != from_snap.n_buckets:
                 spec_stable = False
             if op == "merge-mor":
-                # tokenized attempt dirs (delta-<id>-<tok>/...) plus the
-                # pre-token layout (delta-<id>/...) still on disk in
-                # tables written by earlier engine versions; the "-" /
-                # separator requirement keeps delta-5 from matching
-                # delta-51
-                stem = os.path.join("data", f"delta-{snap.snapshot_id}")
-                prefixes = (stem + "-", stem + os.sep)
-                delta_rels += [
-                    p
-                    for paths in snap.delta_files.values()
-                    for p in paths
-                    if p.startswith(prefixes)
-                ]
+                for bk, ps in commit_files(snap).items():
+                    delta_files.setdefault(bk, []).extend(ps)
             snap = self._read_snapshot(snap.parent_id) if snap.parent_id else None
         if snap is None or snap.snapshot_id != from_snapshot_id:
             # returning a diff against a non-ancestor would be silently
@@ -1134,7 +1143,7 @@ class LakeTable:
                     f"changes(columns=...) not value columns of the table: {bad}"
                 )
             val_cols = [c for c in val_cols if c in set(columns)]
-        if not delta_rels:
+        if not delta_files:
             # same positional order as the non-empty branch (key cols,
             # value cols, change_type) — table schemas need not list the
             # key columns first, and positional consumers (unionAll,
@@ -1159,7 +1168,7 @@ class LakeTable:
         # as read-time resolution, tombstones kept for classification).
         deltas = self._scan(
             to_snap,
-            [os.path.join(self.root, p) for p in delta_rels],
+            [os.path.join(self.root, p) for ps in delta_files.values() for p in ps],
             with_internals=True,
         )
         w = F.struct(*[F.col(c) for c in val_cols], F.col(TOMBSTONE_COL))
@@ -1174,22 +1183,11 @@ class LakeTable:
         )
 
         # Prior-existence probe: only the buckets the deltas touched (read
-        # straight off the partitioned delta paths), only the key columns.
+        # straight off the commits' manifests), only the key columns.
         # Pruning is valid only while every in-range snapshot shares
-        # ``from``'s bucket spec; across a rebucket the parsed ids belong
-        # to a different layout, so probe all buckets.
-        touched: list[int] | None = (
-            sorted(
-                {
-                    int(seg.split("=", 1)[1])
-                    for p in delta_rels
-                    for seg in p.split(os.sep)
-                    if seg.startswith(f"{BUCKET_COL}=")
-                }
-            )
-            if spec_stable
-            else None
-        )
+        # ``from``'s bucket spec; across a rebucket those ids belong to a
+        # different layout, so probe all buckets.
+        touched = sorted(int(b) for b in delta_files) if spec_stable else None
         prior_scan = self.read(snapshot=from_snap, buckets=touched)
         if with_preimage:
             # ``from`` may predate schema evolution: columns added since
@@ -1540,37 +1538,15 @@ class LakeTable:
             .withColumn(TOMBSTONE_COL, F.lit(False))
             .withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets))
         )
-        rel_dir = os.path.join("data", f"commit-{commit_id}-{uuid.uuid4().hex[:6]}")
-        out_dir = os.path.join(self.root, rel_dir)
-        opts = dict(self._write_opts(cur))
-        writer = result.repartition(n_buckets, F.col(BUCKET_COL))
-        if cur.cluster_spec:
-            # keep the active clustering true through the spec change:
-            # same sort AND the same file-size split — one wide sorted
-            # file per bucket would leave every file spanning the whole
-            # value range (zero data skipping) while the spec still
-            # claimed clustering
-            writer = writer.sortWithinPartitions(
-                F.col(BUCKET_COL), self._cluster_sort_key(cur, cur.cluster_spec)
-            )
-            opts["maxRecordsPerFile"] = str(
-                cur.cluster_spec["target_rows_per_file"]
-            )
-        (
-            writer.write.options(**opts)
-            .partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
+        # keep the active clustering true through the spec change: same
+        # sort AND the same file-size split — one wide sorted file per
+        # bucket would leave every file spanning the whole value range
+        # (zero data skipping) while the spec still claimed clustering
+        _, files = self._write_buckets(
+            result.repartition(n_buckets, F.col(BUCKET_COL)),
+            cur, commit_id, "commit", spec=cur.cluster_spec,
         )
-        files: dict[str, list[str]] = {}
-        per_bucket: list[dict] = []
-        new_rels: list[str] = []
-        for bk in range(n_buckets):
-            rels = self._bucket_files(rel_dir, bk)
-            if rels:
-                files[str(bk)] = rels
-                new_rels += rels
-            per_bucket.append({"partition_id": bk, "n_files": len(rels)})
+        new_rels = [p for rels in files.values() for p in rels]
         snap = cur.child(
             snapshot_id=commit_id,
             n_buckets=n_buckets,
@@ -1589,23 +1565,42 @@ class LakeTable:
             },
         )
         self._publish(snap, expected_head=cur.snapshot_id)
-        self._append_lineage(snap, per_bucket, summary or {})
         return snap
 
-    def _bucket_files(self, rel_dir: str, bucket: int | str) -> list[str]:
-        """Sorted repo-relative parquet paths of one bucket's partition
-        dir under a commit's output directory (empty list when the bucket
-        wrote no rows) — the single listing rule every commit path
-        (merge, merge_mor finalize, compact, rebucket) records files by."""
-        entry = f"{BUCKET_COL}={bucket}"
-        bdir = os.path.join(self.root, rel_dir, entry)
-        if not os.path.isdir(bdir):
-            return []
-        return [
-            os.path.join(rel_dir, entry, fn)
-            for fn in sorted(os.listdir(bdir))
-            if fn.endswith(".parquet")
-        ]
+    def _write_buckets(
+        self, df: DataFrame, cur: Snapshot, commit_id: int, kind: str, spec: dict | None = None
+    ) -> tuple[str, dict[str, list[str]]]:
+        """Write one commit attempt's data files and list them per bucket
+        (numeric bucket order) — the one statement of the attempt-directory
+        rule. ``df`` carries ``BUCKET_COL``, partitioned as the caller
+        needs. Files land under
+        ``data/<kind>-<commit_id>-<tok>/_bucket=<k>/part-*.parquet``:
+        ``kind`` is ``commit`` for rewrites (CoW merge, compact, rebucket,
+        cluster) or ``delta`` for merge-on-read deltas, and ``<tok>`` is a
+        per-attempt random token, so concurrent attempts at one commit id
+        write disjoint directories. ``commit_files`` reads the rule back.
+        A cluster ``spec`` sorts each partition by (bucket, spec key) and
+        caps files at ``target_rows_per_file`` rows."""
+        rel_dir = os.path.join("data", f"{kind}-{commit_id}-{uuid.uuid4().hex[:6]}")
+        out_dir = os.path.join(self.root, rel_dir)
+        opts = dict(self._write_opts(cur))
+        if spec:
+            df = df.sortWithinPartitions(
+                F.col(BUCKET_COL), self._cluster_sort_key(cur, spec)
+            )
+            opts["maxRecordsPerFile"] = str(spec["target_rows_per_file"])
+        df.write.options(**opts).partitionBy(BUCKET_COL).mode("overwrite").parquet(out_dir)
+        files: dict[str, list[str]] = {}
+        entries = [e for e in os.listdir(out_dir) if e.startswith(f"{BUCKET_COL}=")]
+        for entry in sorted(entries, key=lambda e: int(e.split("=", 1)[1])):
+            rels = [
+                os.path.join(rel_dir, entry, fn)
+                for fn in sorted(os.listdir(os.path.join(out_dir, entry)))
+                if fn.endswith(".parquet")
+            ]
+            if rels:
+                files[entry.split("=", 1)[1]] = rels
+        return rel_dir, files
 
     # -------------------------------------------------------------- merge
 
@@ -1914,7 +1909,6 @@ class LakeTable:
         commit_id = self._alloc_commit_id(cur)
         totals = {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0,
                   "rows_delete_noop": 0}
-        per_bucket: list[dict] = []
         new_rels: list[str] = []
 
         if touched:
@@ -1981,29 +1975,16 @@ class LakeTable:
                 ).alias(BUCKET_COL),
             )
 
-            rel_dir = os.path.join("data", f"commit-{commit_id}-{uuid.uuid4().hex[:6]}")
-            out_dir = os.path.join(self.root, rel_dir)
             # co-locate buckets before the partitioned write: one shuffle,
-            # files land one-per-bucket-per-task
-            writer = result.repartition(len(touched), F.col(BUCKET_COL))
-            write_opts = dict(self._write_opts(cur))
-            if cur.cluster_spec:
-                # a CoW rewrite of a touched bucket is delta-free, so
-                # compact will never revisit it — restore the cluster sort
-                # HERE or those buckets lose data skipping until a manual
-                # re-cluster (the sort is a local add-on to a rewrite
-                # already being paid for; boundaries are spec literals)
-                writer = writer.sortWithinPartitions(
-                    F.col(BUCKET_COL), self._cluster_sort_key(cur, cur.cluster_spec)
-                )
-                write_opts["maxRecordsPerFile"] = str(
-                    cur.cluster_spec["target_rows_per_file"]
-                )
-            (
-                writer.write.options(**write_opts)
-                .partitionBy(BUCKET_COL)
-                .mode("overwrite")
-                .parquet(out_dir)
+            # files land one-per-bucket-per-task. A CoW rewrite of a
+            # touched bucket is delta-free, so compact will never revisit
+            # it — restore the cluster sort HERE or those buckets lose
+            # data skipping until a manual re-cluster (the sort is a local
+            # add-on to a rewrite already being paid for; boundaries are
+            # spec literals)
+            _, written = self._write_buckets(
+                result.repartition(len(touched), F.col(BUCKET_COL)),
+                cur, commit_id, "commit", spec=cur.cluster_spec,
             )
             totals = observed_metrics(obs, joined, clf_aggs)
             outside = totals.pop("rows_outside_touched", 0)
@@ -2015,12 +1996,8 @@ class LakeTable:
                     f"touched_buckets missed {outside} update row(s); "
                     "pass the full bucket set (or None to derive it)"
                 )
-            for bk in touched:
-                rels = self._bucket_files(rel_dir, bk)
-                if rels:
-                    new_files[str(bk)] = rels
-                    new_rels += rels
-                per_bucket.append({"partition_id": bk, "n_files": len(rels)})
+            new_files.update(written)
+            new_rels = [p for rels in written.values() for p in rels]
 
         # CoW rewrite of a touched bucket folds in and supersedes its deltas
         new_deltas = {
@@ -2040,8 +2017,7 @@ class LakeTable:
             summary={"operation": "merge", **totals, **(summary or {})},
         )
         self._publish(snap, expected_head=cur.snapshot_id)
-        self._append_lineage(snap, per_bucket, summary or {})
-        return snap, {"totals": totals, "per_bucket": per_bucket}
+        return snap, {"totals": totals}
 
     def merge_mor(
         self,
@@ -2100,7 +2076,8 @@ class LakeTable:
     ) -> dict:
         """Distributed half of a MoR merge: write delta files for a
         pre-assigned ``commit_id``. Produces NO visible table state — files
-        land under ``data/delta-<commit_id>/`` and stay invisible until
+        land in a ``delta`` attempt directory (``_write_buckets``), listed
+        per bucket under ``files``, and stay invisible until
         ``mor_finalize`` commits them (atomicity: readers only ever follow
         the version hint). Thread-safe across distinct commit_ids."""
         from pyspark.sql import Observation
@@ -2135,8 +2112,6 @@ class LakeTable:
                 bucket_expr(key_cols, cur.n_buckets).alias(BUCKET_COL),
             )
         )
-        rel_dir = os.path.join("data", f"delta-{commit_id}-{uuid.uuid4().hex[:6]}")
-        out_dir = os.path.join(self.root, rel_dir)
         # bucket-align before the partitioned write: without this, every
         # upstream shuffle partition fans out one file per bucket it
         # touches (partitions × buckets small files per commit — poison
@@ -2150,12 +2125,10 @@ class LakeTable:
             else delta.repartition(cur.n_buckets, F.col(BUCKET_COL))
         )
         with phase("mor.write_action"):
-            to_write.write.options(**self._write_opts(cur)).partitionBy(
-                BUCKET_COL
-            ).mode("overwrite").parquet(out_dir)
+            rel_dir, files = self._write_buckets(to_write, cur, commit_id, "delta")
         with phase("mor.obs_get"):
             totals = observed_metrics(obs, updates, clf_aggs)
-        return {"commit_id": commit_id, "rel_dir": rel_dir, "totals": totals}
+        return {"commit_id": commit_id, "rel_dir": rel_dir, "files": files, "totals": totals}
 
     def mor_finalize(
         self,
@@ -2166,8 +2139,7 @@ class LakeTable:
         """Ordered half of a MoR merge: fold the written delta files into a
         new snapshot and flip the version hint. Must be called in commit_id
         order; ``expect_parent`` asserts the chain didn't move underneath."""
-        commit_id, rel_dir = write["commit_id"], write["rel_dir"]
-        totals = write["totals"]
+        commit_id, totals = write["commit_id"], write["totals"]
         cur = self.current_snapshot()
         if cur is None:
             raise FileNotFoundError(f"no committed snapshot at {self.root}")
@@ -2189,20 +2161,9 @@ class LakeTable:
             raise CommitConflictError(
                 f"non-monotonic commit {commit_id} onto {cur.snapshot_id}"
             )
-        out_dir = os.path.join(self.root, rel_dir)
-
-        with phase("mor.list_files"):
-            new_deltas = {b: list(p) for b, p in cur.delta_files.items()}
-            per_bucket: list[dict] = []
-            if os.path.isdir(out_dir):
-                for entry in sorted(os.listdir(out_dir)):
-                    if not entry.startswith(f"{BUCKET_COL}="):
-                        continue
-                    bk = entry.split("=", 1)[1]
-                    rels = self._bucket_files(rel_dir, bk)
-                    if rels:
-                        new_deltas.setdefault(bk, []).extend(rels)
-                        per_bucket.append({"partition_id": int(bk), "n_files": len(rels)})
+        new_deltas = {b: list(p) for b, p in cur.delta_files.items()}
+        for bk, rels in write["files"].items():
+            new_deltas.setdefault(bk, []).extend(rels)
 
         with phase("mor.commit"):
             snap = cur.child(
@@ -2211,8 +2172,7 @@ class LakeTable:
                 summary={"operation": "merge-mor", **totals, **(summary or {})},
             )
             self._publish(snap, expected_head=cur.snapshot_id)
-            self._append_lineage(snap, per_bucket, summary or {})
-        return snap, {"totals": totals, "per_bucket": per_bucket}
+        return snap, {"totals": totals}
 
     def compact(self, min_deltas: int = 1, summary: dict | None = None) -> Snapshot | None:
         """Fold merge-on-read deltas back into base files (background
@@ -2240,26 +2200,13 @@ class LakeTable:
             .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
             .withColumn(TOMBSTONE_COL, F.lit(False))
         )
-        rel_dir = os.path.join("data", f"commit-{commit_id}-{uuid.uuid4().hex[:6]}")
-        out_dir = os.path.join(self.root, rel_dir)
-        writer = resolved
-        opts = dict(self._write_opts(cur))
-        spec = cur.cluster_spec
-        if spec:
-            # maintain the active clustering through compaction: one
-            # within-partition sort on the already-bucket-fused stream
-            # (no extra shuffle) keeps file/row-group min-max stats tight
-            # instead of silently degrading data skipping until the next
-            # manual OPTIMIZE
-            writer = resolved.sortWithinPartitions(
-                F.col(BUCKET_COL), self._cluster_sort_key(cur, spec)
-            )
-            opts["maxRecordsPerFile"] = str(spec["target_rows_per_file"])
-        (
-            writer.write.options(**opts)
-            .partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
+        # maintain the active clustering through compaction: one
+        # within-partition sort on the already-bucket-fused stream (no
+        # extra shuffle) keeps file/row-group min-max stats tight instead
+        # of silently degrading data skipping until the next manual
+        # OPTIMIZE
+        _, written = self._write_buckets(
+            resolved, cur, commit_id, "commit", spec=cur.cluster_spec
         )
         new_files = {b: list(p) for b, p in cur.files.items()}
         new_deltas = {
@@ -2267,7 +2214,7 @@ class LakeTable:
         }
         new_rels: list[str] = []
         for bk in victims:
-            rels = self._bucket_files(rel_dir, bk)
+            rels = written.get(str(bk))
             if rels:
                 new_files[str(bk)] = rels
                 new_rels += rels
@@ -2307,24 +2254,6 @@ class LakeTable:
             bounds = self._zorder_boundaries(cur, cols, bits)
         return self._zorder_expr_from(cols, bits, bounds)
 
-    def _zorder_expr(self, cur: Snapshot, cols: list[str], bits: int) -> F.Column:
-        """Z-value (Morton interleave) over rank-normalized dimensions.
-
-        Each column maps to a ``bits``-wide bucket index through its
-        approximate quantile boundaries (one column-pruned
-        ``approxQuantile`` pass over the base files — the Delta OPTIMIZE
-        ZORDER sampling analog; quantiles, not min/max scaling, so a
-        skewed dimension still spreads across all 2^bits codes), then
-        the per-dimension indices bit-interleave into one long. Rows
-        sorted by that long place near rows near in EVERY dimension at
-        once, so per-file min/max stats prune range scans on any
-        clustered column. All pure JVM column expressions — the
-        boundary arrays are literals, the bucket index is a
-        higher-order-function count, the interleave is shift/or."""
-        return self._zorder_expr_from(
-            cols, bits, self._zorder_boundaries(cur, cols, bits)
-        )
-
     def _zorder_boundaries(
         self, cur: Snapshot, cols: list[str], bits: int
     ) -> list[list[float]]:
@@ -2344,7 +2273,11 @@ class LakeTable:
         self, cols: list[str], bits: int, all_bounds: list[list[float]]
     ) -> F.Column:
         """The pure-expression half: Morton z-value from LITERAL boundary
-        arrays — no scan, safe to build on every maintenance rewrite."""
+        arrays — no scan, safe to build on every maintenance rewrite. Each
+        column maps to a ``bits``-wide quantile index (so a skewed dimension
+        still spreads over all 2^bits codes) and the indices bit-interleave
+        into one long: rows sorted by it sit near rows near in EVERY
+        dimension at once."""
         z = F.lit(0).cast("long")
         for d, (c, bounds) in enumerate(zip(cols, all_bounds)):
             if not bounds:  # empty table: no boundaries, dimension is flat
@@ -2420,49 +2353,27 @@ class LakeTable:
             .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
             .withColumn(TOMBSTONE_COL, F.lit(False))
         )
-        boundaries = (
-            None
-            if len(cols) == 1
-            else self._zorder_boundaries(cur, cols, zorder_bits)
-        )
-        sort_key = (
-            F.col(cols[0])
-            if len(cols) == 1
-            else self._zorder_expr_from(cols, zorder_bits, boundaries)
-        )
-        rel_dir = os.path.join("data", f"commit-{commit_id}-{uuid.uuid4().hex[:6]}")
-        out_dir = os.path.join(self.root, rel_dir)
-        (
-            # the fused resolve leaves rows clustered by bucket; the
-            # within-partition sort on (bucket, key) + maxRecordsPerFile
-            # makes the partitioned writer cut each bucket's stream into
-            # consecutive value-ranged files — the whole point of the op
-            resolved.sortWithinPartitions(F.col(BUCKET_COL), sort_key)
-            .write.option("maxRecordsPerFile", target_rows_per_file)
-            .options(**self._write_opts(cur))
-            .partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets = sorted({int(b) for b in (set(cur.files) | set(cur.delta_files))})
-        new_files: dict[str, list[str]] = {}
-        new_rels: list[str] = []
-        for bk in buckets:
-            rels = self._bucket_files(rel_dir, bk)
-            if rels:
-                new_files[str(bk)] = rels
-                new_rels += rels
+        spec = {
+            "cols": cols,
+            "target_rows_per_file": target_rows_per_file,
+            "zorder_bits": zorder_bits,
+            # persisted so maintenance rewrites never re-scan for them
+            "boundaries": (
+                None
+                if len(cols) == 1
+                else self._zorder_boundaries(cur, cols, zorder_bits)
+            ),
+        }
+        # the fused resolve leaves rows clustered by bucket; the spec's
+        # sort + file cap make the partitioned writer cut each bucket's
+        # stream into consecutive value-ranged files — the point of the op
+        _, new_files = self._write_buckets(resolved, cur, commit_id, "commit", spec=spec)
+        new_rels = [p for rels in new_files.values() for p in rels]
         snap = cur.child(
             snapshot_id=commit_id,
             files=new_files,
             delta_files={},
-            cluster_spec={
-                "cols": cols,
-                "target_rows_per_file": target_rows_per_file,
-                "zorder_bits": zorder_bits,
-                # persisted so maintenance rewrites never re-scan for them
-                "boundaries": boundaries,
-            },
+            cluster_spec=spec,
             file_stats=_stats.collect_file_stats(self.root, new_rels, cur.schema),
             summary={
                 "operation": "cluster",
@@ -2664,7 +2575,7 @@ class LakeTable:
                         ),
                     }
                 )
-        if rep["delta_files"] > max(4, base // 4):
+        if bounded and rep["delta_files"] > max(4, base // 4):
             advice.append(
                 {
                     "action": "compact",
@@ -2682,23 +2593,6 @@ class LakeTable:
             "advice": advice,
         }
 
-    def _append_lineage(self, snap: Snapshot, per_bucket: list[dict], summary: dict) -> None:
-        """Append-only per-(batch, partition) lineage rows (reference:
-        ProcessingContext.DataLineage, ProcessingContext.java:161-169)."""
-        path = os.path.join(self._meta, "lineage.jsonl")
-        with open(path, "a") as f:
-            for row in per_bucket:
-                rec = {
-                    "run_id": summary.get("run_id"),
-                    "batch_id": summary.get("batch_id"),
-                    "lsn_lo": summary.get("lsn_lo"),
-                    "lsn_hi": summary.get("lsn_hi"),
-                    "snapshot_id": snap.snapshot_id,
-                    "committed_at_ms": snap.timestamp_ms,
-                    **row,
-                }
-                f.write(json.dumps(rec) + "\n")
-
     _LINEAGE_SCHEMA = T.StructType(
         [
             T.StructField("run_id", T.StringType()),
@@ -2709,16 +2603,38 @@ class LakeTable:
             T.StructField("committed_at_ms", T.LongType()),
             T.StructField("partition_id", T.LongType()),
             T.StructField("n_files", T.LongType()),
+            T.StructField("operation", T.StringType()),
         ]
     )
 
     def lineage(self) -> DataFrame:
-        path = os.path.join(self._meta, "lineage.jsonl")
-        if not os.path.exists(path):
-            # a table that never merged has no lineage rows yet — empty
-            # frame, not an AnalysisException on the missing path
-            return self.spark.createDataFrame([], self._LINEAGE_SCHEMA)
-        return self.spark.read.json(path)
+        """Per-(commit, partition) lineage rows (reference:
+        ProcessingContext.DataLineage, ProcessingContext.java:161-169),
+        derived from this ref's retained snapshot chain, oldest commit
+        first: one row per bucket a commit wrote files into
+        (``commit_files``), stamped with the commit's batch manifest
+        fields. Being derived, lineage follows the chain — expired,
+        restored-away and other-branch commits are not listed."""
+
+        def _opt(v, cast):
+            return None if v is None else cast(v)
+
+        rows = [
+            (
+                _opt(s.summary.get("run_id"), str),
+                _opt(s.summary.get("batch_id"), str),
+                _opt(s.summary.get("lsn_lo"), int),
+                _opt(s.summary.get("lsn_hi"), int),
+                s.snapshot_id,
+                s.timestamp_ms,
+                int(bk),
+                len(rels),
+                s.summary.get("operation"),
+            )
+            for s in reversed(self.snapshot_chain())
+            for bk, rels in commit_files(s).items()
+        ]
+        return self.spark.createDataFrame(rows, self._LINEAGE_SCHEMA)
 
     # ----------------------------------------------------------- maintain
 

@@ -855,7 +855,8 @@ def img_fits_header_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The driver's correctness gate needs rows+schema+hash against a DuckDB
 # oracle, which can't express a pixel kernel. The P6 trick (return only
 # SQL-checkable facts) generalizes through a GOLDEN SAMPLE: for the
-# deterministic 1-in-17 image subset (doc_id % 51 == 0, 99 rows), the kernels' scalar outputs are
+# deterministic 1-in-17 image subset (doc_id % 51 == 0, ≤99 rows: 99 at
+# sf0.1, 10 at the sf0.01 gate), the kernels' scalar outputs are
 # frozen at full double precision in ``golden.py`` (generated by
 # scripts/gen_img_golden.py; independently pinned component-by-component
 # in tests/test_imaging.py — hand-computed bias, the reference gain

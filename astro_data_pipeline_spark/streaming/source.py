@@ -71,6 +71,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..lakehouse.table import Snapshot, commit_files
+
 _FORMAT = "laketable_changes"
 _INTERNALS = [
     T.StructField("_change_commit", T.LongType(), False),
@@ -214,13 +216,8 @@ def _range_delta_files(root: str, s0: int, s1: int) -> list[str]:
                 "row-level changelog — the stream cannot represent it; "
                 "use merge-on-read ingest for streamed tables"
             )
-        stem = os.path.join("data", f"delta-{sid}")
-        prefixes = (stem + "-", stem + os.sep)
         rels += sorted(
-            p
-            for paths in snap.get("delta_files", {}).values()
-            for p in paths
-            if p.startswith(prefixes)
+            p for ps in commit_files(Snapshot.from_json(snap)).values() for p in ps
         )
     return rels
 

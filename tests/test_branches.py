@@ -10,6 +10,8 @@ a branch is one tiny ref file.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import types as T
 
@@ -160,6 +162,57 @@ def test_branch_diff_previews_publish(spark, table):
         table.branch_diff("staging")
     with pytest.raises(ValueError, match="unknown branch"):
         table.branch_diff("nope")
+
+
+def test_lineage_follows_this_refs_chain(spark, table):
+    """lineage() is derived from this ref's retained snapshot chain:
+    branch-only, restored-away and expired commits drop out, and each
+    merge-on-read commit's rows name exactly the buckets it wrote."""
+    def lineage_ids(t):
+        return {r["snapshot_id"] for r in t.lineage().collect()}
+
+    b = table.create_branch("staging")
+    b.merge_mor(_updates(spark, [("r2", "c", 3, "insert")]), summary={"batch_id": "wap"})
+    on_branch = b.current_snapshot().snapshot_id
+    assert on_branch in lineage_ids(b)
+    assert on_branch not in lineage_ids(table)
+    table.drop_branch("staging")
+
+    good = table.current_snapshot().snapshot_id
+    for i in range(2):
+        table.merge_mor(_updates(spark, [(f"u{i}", "x", i, "insert")]))
+    undone = {s.snapshot_id for s in table.snapshot_chain() if s.snapshot_id > good}
+    assert undone and undone <= lineage_ids(table)
+    table.restore(good)
+    assert not undone & lineage_ids(table)
+
+    for i in range(3):
+        table.merge_mor(
+            _updates(spark, [("r1", "a", 20 + i, "update"), (f"n{i}", "y", i, "insert")]),
+            summary={"batch_id": f"m{i}"},
+        )
+    table.expire_snapshots(keep_last=2)
+    chain = table.snapshot_chain()
+    lin = table.lineage().collect()
+    assert {r["snapshot_id"] for r in lin} == {s.snapshot_id for s in chain}
+    from astro_data_pipeline_spark.lakehouse.table import commit_files
+
+    for s in chain:
+        assert s.summary["operation"] == "merge-mor"
+        rows = [r for r in lin if r["snapshot_id"] == s.snapshot_id]
+        assert {r["partition_id"]: r["n_files"] for r in rows} == {
+            int(bk): len(rels) for bk, rels in commit_files(s).items()
+        }
+        assert {(r["batch_id"], r["operation"]) for r in rows} == {
+            (s.summary["batch_id"], "merge-mor")
+        }
+    # no side store: metadata holds only snapshots, refs and the lock
+    side = [
+        fn
+        for fn in os.listdir(os.path.join(table.root, "metadata"))
+        if not fn.startswith(("snapshot-", "version-hint", "ref-", "commit.lock"))
+    ]
+    assert side == []
 
 
 def _cdc_events(spark, lsns, tag):

@@ -319,3 +319,5 @@ def test_scan_advice_recommends_cluster_then_clears(spark, table):
         table.merge_mor(_rows(spark, 100).withColumn("v", F.col("v") + i))
     adv = table.scan_advice("id", lo=0, hi=99)
     assert any(a["action"] == "compact" for a in adv["advice"]), adv
+    # the pile-up draws no advice for an unbounded scan either
+    assert table.scan_advice("ts")["advice"] == []
