@@ -213,6 +213,45 @@ def _carry_stats(
     return out
 
 
+def _widened(
+    cur: Snapshot, widen: dict[str, T.DataType], added: list[T.StructField] | None = None
+) -> dict[str, Any]:
+    """Child-snapshot overrides (``schema_json``, ``file_stats``) for a
+    metadata-only commit that widens ``widen`` (already validated
+    lossless) and appends ``added``. File-stats bounds are encoded per
+    TYPE FAMILY: integer widenings keep their encoding, but
+    date→timestamp moves from epoch-days to epoch-micros — convert in
+    place or read_between would compare a days-scale min/max against
+    micros-scale bounds and prune wrong."""
+    schema = T.StructType(
+        [
+            T.StructField(f.name, widen.get(f.name, f.dataType), f.nullable, f.metadata)
+            for f in cur.schema.fields
+        ]
+        + (added or [])
+    )
+    day_to_us = {
+        f.name
+        for f in cur.schema.fields
+        if isinstance(f.dataType, T.DateType)
+        and isinstance(widen.get(f.name), T.TimestampNTZType)
+    }
+    stats = cur.file_stats
+    if day_to_us:
+        stats = {
+            p: {
+                c: (
+                    {**s, "min": s["min"] * 86_400_000_000, "max": s["max"] * 86_400_000_000}
+                    if c in day_to_us and not s.get("allnull")
+                    else s
+                )
+                for c, s in e.items()
+            }
+            for p, e in cur.file_stats.items()
+        }
+    return {"schema_json": schema.jsonValue(), "file_stats": stats}
+
+
 def commit_files(snap: Snapshot) -> dict[str, list[str]]:
     """The files ``snap``'s own commit wrote, per bucket (numeric bucket
     order): the entries of ``files`` and ``delta_files`` that lie under
@@ -232,6 +271,159 @@ def commit_files(snap: Snapshot) -> dict[str, list[str]]:
             if mine:
                 out.setdefault(b, []).extend(mine)
     return dict(sorted(out.items(), key=lambda kv: int(kv[0])))
+
+
+def ledger_records(snap: Snapshot):
+    """The exactly-once ledger records ``snap`` carries, as
+    ``{batch_id, run_scope, lsn_hi}`` dicts: its own batch (if it has
+    one), then the ``inherited_batches`` that ``expire_snapshots`` folded
+    into it from expired snapshots."""
+    if snap.summary.get("batch_id") is not None:
+        yield {k: snap.summary.get(k) for k in ("batch_id", "run_scope", "lsn_hi")}
+    yield from snap.summary.get("inherited_batches", [])
+
+
+# ---------------------------------------------------- snapshot-chain reads
+# The one place the metadata format is read: ref files, snapshot JSON and
+# the parent-link walk. Spark-free, so changelog readers running in
+# Python data-source workers (no SparkSession) share it with LakeTable.
+
+
+def _ref_path(meta: str, ref: str) -> str:
+    name = "version-hint.txt" if ref == "main" else f"ref-{ref}.txt"
+    return os.path.join(meta, name)
+
+
+def _snapshot_path(meta: str, sid: int) -> str:
+    return os.path.join(meta, f"snapshot-{sid}.json")
+
+
+def read_hint(meta: str, ref: str) -> int | None:
+    """Head snapshot id of ``ref`` (None if the ref does not exist)."""
+    try:
+        with open(_ref_path(meta, ref)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def read_snapshot(meta: str, sid: int | None) -> Snapshot | None:
+    """Snapshot ``sid`` (None if the id is None, never committed, or
+    expired)."""
+    if sid is None:
+        return None
+    try:
+        with open(_snapshot_path(meta, sid)) as f:
+            return Snapshot.from_json(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def commits_between(meta: str, from_id: int | None, to_id: int) -> list[Snapshot]:
+    """The commits in ``(from_id, to_id]`` on ``to_id``'s parent chain,
+    oldest first; ``from_id=None`` means the whole retained chain. Every
+    snapshot-range question (``changes``, ``restore``, ``fast_forward``,
+    ``snapshot_chain``, the changelog stream source) is answered here.
+
+    Safety contract (one ``ValueError`` per refused case):
+
+    - The range is resolved by WALKING PARENT LINKS from ``to_id``,
+      never by iterating raw snapshot ids — ids are allocated globally
+      across refs, so id iteration would pick up other branches' commits
+      (an audit-failed WAP batch that was never published).
+    - The walk must LAND on ``from_id``. A ``from_id`` the walk steps
+      past (a branch commit, any non-ancestor id between two chain ids,
+      or an id ahead of ``to_id``) is "not an ancestor": resolving it to
+      the nearest ancestor below would re-deliver commits the caller
+      believes it already has.
+    - A ``from_id`` undone by a restore is named as such: a restore
+      re-parents the chain onto its target, which is the one legitimate
+      way a previously valid offset stops being an ancestor. Its rows
+      cannot be retracted through a changelog — re-seed from the
+      restored state.
+    - Expired history inside the range raises (Delta/Iceberg refuse an
+      unretained start version the same way); genuine data loss is never
+      dressed up as a benign id gap. The chain root closes the range
+      only if it is ``from_id + 1`` or older (``from_id=0`` on an
+      unexpired table is "full history")."""
+    chain: list[Snapshot] = []
+    stop = -1 if from_id is None else from_id
+    sid = to_id
+    while sid > stop:
+        snap = read_snapshot(meta, sid)
+        if snap is None:
+            raise ValueError(
+                f"snapshot {sid} on the path back from {to_id} is no longer "
+                "retained (expired): the range cannot be proven complete; "
+                "start from a live snapshot (or raise keep_last)"
+            )
+        chain.append(snap)
+        if snap.parent_id is None:
+            if from_id is None or snap.snapshot_id <= stop + 1:
+                break
+            raise ValueError(
+                f"snapshot {from_id} predates the retained chain (oldest "
+                f"kept snapshot is {snap.snapshot_id}) — history before "
+                "it has been expired"
+            )
+        sid = snap.parent_id
+    else:
+        if sid != stop:
+            if any(s.summary.get("operation") == "restore" for s in chain):
+                raise ValueError(
+                    f"snapshot {from_id} is not an ancestor of {to_id}: it "
+                    f"was undone by a restore in ({sid}, {to_id}] — its rows "
+                    "cannot be retracted through a changelog; re-seed the "
+                    "consumer from the restored state"
+                )
+            past = (
+                f"the parent walk steps from {chain[-1].snapshot_id} past it to {sid}"
+                if chain
+                else "it is ahead of the end of the range"
+            )
+            raise ValueError(f"snapshot {from_id} is not an ancestor of {to_id}: {past}")
+    chain.reverse()
+    return chain
+
+
+# operations that change no logical rows: a changelog passes through
+# them. A restore is transparent too — a consumer whose offset it undid
+# fails the commits_between walk first.
+_TRANSPARENT_OPS = frozenset(
+    {
+        "create",
+        "compact",
+        "rebucket",
+        "cluster",
+        "add-columns",
+        "widen-columns",
+        "drop-columns",
+        "evolve",
+        "restore",
+    }
+)
+
+
+def changelog_commits(chain: list[Snapshot]) -> list[Snapshot]:
+    """The commits of ``chain`` that carry a row-level changelog (their
+    merge-on-read delta files, ``commit_files``). Maintenance and schema
+    commits fold or reshape rows a changelog already carries and are
+    skipped. A copy-on-write ``merge`` — or any operation not known here
+    — is refused: no row-level changelog, and assuming an unknown
+    operation row-free would silently corrupt downstream state."""
+    out = []
+    for snap in chain:
+        op = snap.summary.get("operation")
+        if op == "merge-mor":
+            out.append(snap)
+        elif op not in _TRANSPARENT_OPS:
+            raise ValueError(
+                f"snapshot {snap.snapshot_id} is operation {op!r}, which "
+                "keeps no row-level changelog (a copy-on-write merge "
+                "rewrites whole buckets) — use merge-on-read ingest for "
+                "tables read as a changelog"
+            )
+    return out
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int) -> F.Column:
@@ -337,9 +529,7 @@ class LakeTable:
         self._data = os.path.join(root, "data")
 
     def _ref_file(self, ref: str | None = None) -> str:
-        ref = ref if ref is not None else self.ref
-        name = "version-hint.txt" if ref == "main" else f"ref-{ref}.txt"
-        return os.path.join(self._meta, name)
+        return _ref_path(self._meta, ref if ref is not None else self.ref)
 
     # ------------------------------------------------------------- create
 
@@ -413,11 +603,15 @@ class LakeTable:
         if name == "main":
             raise ValueError("'main' is reserved")
         target = LakeTable(self.spark, self.root, ref=name)  # validates name
-        sid = from_snapshot_id if from_snapshot_id is not None else self._read_hint()
-        if sid is None or self._read_snapshot(sid) is None:
+        sid = (
+            from_snapshot_id
+            if from_snapshot_id is not None
+            else read_hint(self._meta, self.ref)
+        )
+        if read_snapshot(self._meta, sid) is None:
             raise ValueError(f"unknown fork snapshot {sid}")
         with self._commit_lock():
-            if target._read_hint() is not None:
+            if read_hint(self._meta, name) is not None:
                 raise ValueError(f"branch {name!r} already exists")
             self._atomic_write(self._ref_file(name), str(sid))
         return target
@@ -427,10 +621,10 @@ class LakeTable:
         out: dict[str, int] = {}
         for fn in sorted(os.listdir(self._meta)):
             if fn == "version-hint.txt":
-                out["main"] = self._read_hint("main")
+                out["main"] = read_hint(self._meta, "main")
             elif fn.startswith("ref-") and fn.endswith(".txt"):
                 name = fn[len("ref-"):-len(".txt")]
-                out[name] = self._read_hint(name)
+                out[name] = read_hint(self._meta, name)
         return out
 
     def drop_branch(self, name: str) -> None:
@@ -452,10 +646,10 @@ class LakeTable:
         ancestor guard inside ``changes`` raises on a diverged main
         (publish would conflict anyway), and the merge-on-read
         requirement matches the branch ingest path."""
-        b = self._read_hint(name)
+        b = read_hint(self._meta, name)
         if b is None:
             raise ValueError(f"unknown branch {name!r}")
-        head = self._read_hint()
+        head = read_hint(self._meta, self.ref)
         if head is None:
             raise FileNotFoundError(f"no committed snapshot at {self.root}")
         return self.changes(head, b)
@@ -471,55 +665,51 @@ class LakeTable:
         re-run rule as every other conflict). One CAS under the commit
         lock, shared with every other committer."""
         target_ref = target_ref if target_ref is not None else self.ref
-        src_head = self._read_hint(source_ref)
+        src_head = read_hint(self._meta, source_ref)
         if src_head is None:
             raise ValueError(f"unknown ref {source_ref!r}")
         with self._commit_lock():
-            tgt_head = self._read_hint(target_ref)
+            tgt_head = read_hint(self._meta, target_ref)
             if tgt_head is None:
                 raise ValueError(f"unknown ref {target_ref!r}")
-            # ancestor walk src -> root, looking for the target head
-            snap = self._read_snapshot(src_head)
-            found = False
-            while snap is not None:
-                if snap.snapshot_id == tgt_head:
-                    found = True
-                    break
-                snap = (
-                    self._read_snapshot(snap.parent_id)
-                    if snap.parent_id is not None
-                    else None
-                )
-            if not found:
+            try:
+                commits_between(self._meta, tgt_head, src_head)
+            except ValueError as e:
                 raise CommitConflictError(
                     f"ref {target_ref!r} at {tgt_head} is not an ancestor of "
                     f"{source_ref!r} at {src_head}: not a fast-forward"
-                )
+                ) from e
             self._atomic_write(self._ref_file(target_ref), str(src_head))
-        return self._read_snapshot(src_head)
+        return read_snapshot(self._meta, src_head)
 
     # ---------------------------------------------------------- snapshots
 
     def current_snapshot(self) -> Snapshot | None:
-        sid = self._read_hint()
-        return None if sid is None else self._read_snapshot(sid)
+        """This ref's head (None before the first commit). A ref naming a
+        missing snapshot file raises: a table must never look empty
+        because its head snapshot vanished."""
+        sid = read_hint(self._meta, self.ref)
+        if sid is None:
+            return None
+        snap = read_snapshot(self._meta, sid)
+        if snap is None:
+            raise FileNotFoundError(
+                f"ref {self.ref!r} names snapshot {sid}, missing from {self._meta}"
+            )
+        return snap
 
     def snapshot(self, snapshot_id: int) -> Snapshot:
         """Public snapshot-by-id accessor (time travel): the metadata to
         hand to ``read(snapshot=...)``. Raises on an unknown id."""
-        snap = self._read_snapshot(snapshot_id)
+        snap = read_snapshot(self._meta, snapshot_id)
         if snap is None:
             raise FileNotFoundError(f"no snapshot {snapshot_id} in {self._meta}")
         return snap
 
     def snapshot_chain(self) -> list[Snapshot]:
         """Current snapshot back to root (most recent first)."""
-        out: list[Snapshot] = []
-        snap = self.current_snapshot()
-        while snap is not None:
-            out.append(snap)
-            snap = self._read_snapshot(snap.parent_id) if snap.parent_id else None
-        return out
+        head = read_hint(self._meta, self.ref)
+        return [] if head is None else commits_between(self._meta, None, head)[::-1]
 
     def snapshot_as_of(self, ts_ms: int) -> Snapshot:
         """Time travel by TIMESTAMP (Iceberg/Delta ``AS OF TIMESTAMP``
@@ -593,27 +783,12 @@ class LakeTable:
         ``inherited_batches`` ledger, so the resume horizon is NOT capped
         by the snapshot retention window (a resume over the full WAL must
         skip every batch ever committed, not just the last ``keep_last``)."""
-        out = set()
-        for snap in self.snapshot_chain():
-            recs = [
-                {
-                    "batch_id": snap.summary.get("batch_id"),
-                    "run_scope": snap.summary.get("run_scope"),
-                }
-            ] + snap.summary.get("inherited_batches", [])
-            for r in recs:
-                if r["batch_id"] is None:
-                    continue
-                if run_scope is None or r.get("run_scope") == run_scope:
-                    out.add(r["batch_id"])
-        return out
-
-    def _read_snapshot(self, sid: int | None) -> Snapshot | None:
-        if sid is None:
-            return None
-        p = os.path.join(self._meta, f"snapshot-{sid}.json")
-        with open(p) as f:
-            return Snapshot.from_json(json.load(f))
+        return {
+            r["batch_id"]
+            for snap in self.snapshot_chain()
+            for r in ledger_records(snap)
+            if run_scope is None or r.get("run_scope") == run_scope
+        }
 
     def _atomic_write(self, path: str, payload: str) -> None:
         """Durable atomic file publish: write temp, fsync the DATA, rename,
@@ -635,21 +810,15 @@ class LakeTable:
             os.close(dfd)
 
     def _write_snapshot(self, snap: Snapshot) -> None:
-        p = os.path.join(self._meta, f"snapshot-{snap.snapshot_id}.json")
-        self._atomic_write(p, json.dumps(snap.to_json()))
+        self._atomic_write(
+            _snapshot_path(self._meta, snap.snapshot_id), json.dumps(snap.to_json())
+        )
 
     def _commit_hint(self, sid: int) -> None:
         """Atomic rename of this view's ref file — main's version hint or
         a branch ref (call via ``_publish`` — the bare rename is
         last-writer-wins and multi-writer UNSAFE)."""
         self._atomic_write(self._ref_file(), str(sid))
-
-    def _read_hint(self, ref: str | None = None) -> int | None:
-        try:
-            with open(self._ref_file(ref)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
 
     @contextlib.contextmanager
     def _commit_lock(self):
@@ -706,15 +875,14 @@ class LakeTable:
         ``expire_snapshots`` removes; the ref is the only commit
         point."""
         with self._commit_lock():
-            head = self._read_hint()
+            head = read_hint(self._meta, self.ref)
             if head != expected_head:
                 raise CommitConflictError(
                     f"ref {self.ref!r} moved: planned against {expected_head}, "
                     f"found {head} while committing snapshot "
                     f"{snap.snapshot_id} ({snap.summary.get('operation')})"
                 )
-            p = os.path.join(self._meta, f"snapshot-{snap.snapshot_id}.json")
-            if os.path.exists(p):
+            if os.path.exists(_snapshot_path(self._meta, snap.snapshot_id)):
                 raise CommitConflictError(
                     f"snapshot id {snap.snapshot_id} already claimed "
                     "(another ref's commit or a concurrent writer)"
@@ -1080,59 +1248,44 @@ class LakeTable:
         this is a state diff, not an event replay (the WAL itself is the
         event-level changelog).
 
-        Requirements (checked): ``from`` must be an ancestor of ``to``; the
-        in-range commits must be metadata-only or merge-on-read (a CoW
-        ``merge`` rewrites whole buckets and keeps no row-level changelog;
-        a ``compact`` or ``rebucket`` in range is fine — both are logically
-        idempotent rewrites and the folded delta files stay on disk until
-        ``expire_snapshots``; across a ``rebucket`` the existence probe
-        skips bucket pruning because the spec changed)."""
+        Requirements (checked by ``commits_between`` and
+        ``changelog_commits``, the same contract the changelog stream
+        source enforces): ``from`` must be a retained ancestor of ``to``;
+        the in-range commits must be metadata-only or merge-on-read (a
+        CoW ``merge`` rewrites whole buckets and keeps no row-level
+        changelog; a ``compact`` or ``rebucket`` in range is fine — both
+        are logically idempotent rewrites and the folded delta files stay
+        on disk until ``expire_snapshots``; across a ``rebucket`` the
+        existence probe skips bucket pruning because the spec changed). A
+        restore in range needs no special case: it re-parents the chain
+        onto its target, so undone commits are off the walk, and the
+        restore commit itself carries no deltas."""
         to_snap = (
-            self._read_snapshot(to_snapshot_id)
+            read_snapshot(self._meta, to_snapshot_id)
             if to_snapshot_id is not None
             else self.current_snapshot()
         )
         if to_snap is None:
             raise ValueError(f"unknown 'to' snapshot {to_snapshot_id}")
-        from_snap = self._read_snapshot(from_snapshot_id)
+        from_snap = read_snapshot(self._meta, from_snapshot_id)
         if from_snap is None:
+            if from_snapshot_id < to_snap.snapshot_id:
+                # a `from` lost to expiry gets the walk's expired error
+                commits_between(self._meta, from_snapshot_id, to_snap.snapshot_id)
             raise ValueError(f"unknown 'from' snapshot {from_snapshot_id}")
+        chain = commits_between(self._meta, from_snapshot_id, to_snap.snapshot_id)
 
-        # Walk to → from, collecting each in-range commit's own delta files.
-        # A rebucket in range folds deltas into base files but the pre-fold
-        # delta files stay on disk (like compact), so the row-level
-        # changelog survives; it DOES change the bucket spec, so bucket ids
-        # parsed from delta paths stop matching ``from``'s layout and the
+        # Each in-range merge-on-read commit's own delta files. A rebucket
+        # in range folds deltas into base files but the pre-fold delta
+        # files stay on disk (like compact), so the row-level changelog
+        # survives; it DOES change the bucket spec, so bucket ids parsed
+        # from delta paths stop matching ``from``'s layout and the
         # existence probe must fall back to an unpruned key scan.
         delta_files: dict[str, list[str]] = {}
-        spec_stable = True
-        snap = to_snap
-        while snap is not None and snap.snapshot_id > from_snapshot_id:
-            op = snap.summary.get("operation")
-            if op == "merge":
-                raise ValueError(
-                    "changes() needs merge-on-read history; snapshot "
-                    f"{snap.snapshot_id} is a copy-on-write merge"
-                )
-            # note on restore: NO special case needed. restore re-parents
-            # the chain onto its target, so undone commits are off this
-            # walk entirely (a `from` that was undone fails the ancestor
-            # check below), the restore commit itself carries no deltas,
-            # and the from-state probe reads real snapshot state — pinned
-            # by test_changes_across_restore.
-            if snap.n_buckets != from_snap.n_buckets:
-                spec_stable = False
-            if op == "merge-mor":
-                for bk, ps in commit_files(snap).items():
-                    delta_files.setdefault(bk, []).extend(ps)
-            snap = self._read_snapshot(snap.parent_id) if snap.parent_id else None
-        if snap is None or snap.snapshot_id != from_snapshot_id:
-            # returning a diff against a non-ancestor would be silently
-            # wrong data — must survive python -O
-            raise ValueError(
-                f"snapshot {from_snapshot_id} is not an ancestor of "
-                f"{to_snap.snapshot_id}"
-            )
+        for snap in changelog_commits(chain):
+            for bk, ps in commit_files(snap).items():
+                delta_files.setdefault(bk, []).extend(ps)
+        spec_stable = all(s.n_buckets == from_snap.n_buckets for s in chain)
 
         key_cols = to_snap.key_cols
         val_cols = [f.name for f in to_snap.schema.fields if f.name not in key_cols]
@@ -1339,16 +1492,9 @@ class LakeTable:
             and is_lossless_widening(table_types[f.name], f.dataType)
         }
         if new and widen:
-            schema = T.StructType(
-                [
-                    T.StructField(f.name, widen.get(f.name, f.dataType), f.nullable, f.metadata)
-                    for f in cur.schema.fields
-                ]
-                + new
-            )
             snap = cur.child(
                 snapshot_id=self._alloc_commit_id(cur),
-                schema_json=schema.jsonValue(),
+                **_widened(cur, widen, new),
                 summary={
                     "operation": "evolve",
                     "evolved_columns": [f.name for f in new],
@@ -1464,43 +1610,9 @@ class LakeTable:
                     f"{old_t.simpleString()} -> {new_t.simpleString()} is "
                     f"not a lossless widening for column {name!r}"
                 )
-        schema = T.StructType(
-            [
-                T.StructField(f.name, changes.get(f.name, f.dataType), f.nullable, f.metadata)
-                for f in cur.schema.fields
-            ]
-        )
-        # file-stats bounds are encoded per TYPE FAMILY: integer widenings
-        # keep their encoding, but date→timestamp moves from epoch-days to
-        # epoch-micros — convert in place or read_between would compare a
-        # days-scale min/max against micros-scale bounds and prune wrong
-        day_to_us = {
-            name
-            for name, new_t in changes.items()
-            if isinstance(fields[name].dataType, T.DateType)
-            and isinstance(new_t, T.TimestampNTZType)
-        }
-        new_stats = cur.file_stats
-        if day_to_us:
-            new_stats = {
-                p: {
-                    c: (
-                        {
-                            **s,
-                            "min": s["min"] * 86_400_000_000,
-                            "max": s["max"] * 86_400_000_000,
-                        }
-                        if c in day_to_us and not s.get("allnull")
-                        else s
-                    )
-                    for c, s in e.items()
-                }
-                for p, e in cur.file_stats.items()
-            }
         snap = cur.child(
             snapshot_id=self._alloc_commit_id(cur),
-            schema_json=schema.jsonValue(),
-            file_stats=new_stats,
+            **_widened(cur, changes),
             summary={
                 "operation": "widen-columns",
                 "widened": {n: t.simpleString() for n, t in changes.items()},
@@ -2689,18 +2801,17 @@ class LakeTable:
             raise FileNotFoundError(f"no committed snapshot at {self.root}")
         if snapshot_id == cur.snapshot_id:
             raise ValueError(f"snapshot {snapshot_id} is already current")
-        undone: list[Snapshot] = []
-        snap: Snapshot | None = cur
-        while snap is not None and snap.snapshot_id > snapshot_id:
-            undone.append(snap)
-            snap = self._read_snapshot(snap.parent_id) if snap.parent_id else None
-        if snap is None or snap.snapshot_id != snapshot_id:
+        try:
+            undone = commits_between(self._meta, snapshot_id, cur.snapshot_id)[::-1]
+            target = read_snapshot(self._meta, snapshot_id)
+        except ValueError:
+            target = None
+        if target is None:
             raise ValueError(
                 f"snapshot {snapshot_id} is not a retained ancestor of "
                 f"{cur.snapshot_id}: expired, undone by a prior restore, "
                 "or never committed"
             )
-        target = snap
         rolled_back = [
             {
                 "batch_id": s.summary.get("batch_id"),
@@ -2773,28 +2884,20 @@ class LakeTable:
             oldest = keep[-1]
             ledger = list(oldest.summary.get("inherited_batches", []))
             seen = {(r["batch_id"], r.get("run_scope")) for r in ledger}
-            for s in expired:
-                recs = [
-                    {
-                        "batch_id": s.summary.get("batch_id"),
-                        "run_scope": s.summary.get("run_scope"),
-                        "lsn_hi": s.summary.get("lsn_hi"),
-                    }
-                ] + s.summary.get("inherited_batches", [])
-                for r in recs:
-                    k = (r["batch_id"], r.get("run_scope"))
-                    if r["batch_id"] is not None and k not in seen:
-                        seen.add(k)
-                        # lsn_hi rides along so streaming resume can
-                        # rebuild its order-guard high-water mark past
-                        # the retention window
-                        ledger.append(
-                            {
-                                "batch_id": r["batch_id"],
-                                "run_scope": r.get("run_scope"),
-                                "lsn_hi": r.get("lsn_hi"),
-                            }
-                        )
+            for r in (r for s in expired for r in ledger_records(s)):
+                k = (r["batch_id"], r.get("run_scope"))
+                if k not in seen:
+                    seen.add(k)
+                    # lsn_hi rides along so streaming resume can rebuild
+                    # its order-guard high-water mark past the retention
+                    # window
+                    ledger.append(
+                        {
+                            "batch_id": r["batch_id"],
+                            "run_scope": r.get("run_scope"),
+                            "lsn_hi": r.get("lsn_hi"),
+                        }
+                    )
             oldest.parent_id = None
             oldest.summary = {**oldest.summary, "inherited_batches": ledger}
             self._write_snapshot(oldest)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..cdc.runner import CdcRunner
 from ..lakehouse import LakeTable
+from ..lakehouse.table import ledger_records
 
 
 class StreamApplier:
@@ -71,18 +72,17 @@ class StreamApplier:
         them (strict_order off) or brick the stream on the order guard
         (strict_order on) after any expiry + checkpoint loss. The
         high-water mark likewise reads both live summaries and inherited
-        ledger records."""
+        ledger records (``ledger_records``)."""
         self._committed = self.table.committed_batch_ids(run_scope=self.run_id)
-        last_hi: int | None = None
-        for snap in self.table.snapshot_chain():
-            recs = [snap.summary] + snap.summary.get("inherited_batches", [])
-            for r in recs:
-                if r.get("run_scope") != self.run_id:
-                    continue
-                hi = r.get("lsn_hi")
-                if hi is not None and int(hi) >= 0:
-                    last_hi = int(hi) if last_hi is None else max(last_hi, int(hi))
-        self._last_hi = last_hi
+        his = [
+            int(r["lsn_hi"])
+            for snap in self.table.snapshot_chain()
+            for r in ledger_records(snap)
+            if r.get("run_scope") == self.run_id
+            and r.get("lsn_hi") is not None
+            and int(r["lsn_hi"]) >= 0
+        ]
+        self._last_hi = max(his, default=None)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> dict | None:
         """Apply one micro-batch exactly-once (foreachBatch signature)."""

@@ -15,21 +15,13 @@ net per-key diff — downstream state reconstruction is one LWW collapse
 by ``(key, max _change_commit)``, the same primitive everything else in
 the engine uses (and the stateful streaming twin already implements).
 
-Safety contract (shared by both readers):
-
-- The commit range is resolved by WALKING PARENT LINKS from the head,
-  never by iterating raw snapshot ids — ids are allocated globally
-  across refs, so id iteration would emit other branches' commits (an
-  audit-failed WAP batch that was never published).
-- Expired history inside a resumed range RAISES (Delta/Iceberg refuse
-  an unretained start version the same way); genuine data loss is never
-  dressed up as a benign id gap.
-- Maintenance commits (compact / rebucket / cluster / schema metadata)
-  are transparent: they fold rows the stream already carries. A restore
-  is offset-aware: transparent for consumers at/before its target,
-  loud for consumers holding rows the table has rewound. A CoW merge —
-  or any unknown operation — fails the stream (no row-level changelog;
-  fail closed).
+Safety contract (shared by both readers, and by ``LakeTable.changes``):
+a batch ``(start, end]`` is ``changelog_commits(commits_between(...))``
+from ``lakehouse/table.py`` — see ``commits_between`` for the walk and
+its refusals (non-ancestor, restore-undone or expired offsets) and
+``changelog_commits`` for the operation policy (maintenance and schema
+commits are transparent; a CoW merge or unknown operation fails the
+stream).
 
 Two readers behind one format:
 
@@ -58,7 +50,6 @@ Usage::
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.errors import PySparkNotImplementedError
@@ -71,7 +62,13 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from ..lakehouse.table import Snapshot, commit_files
+from ..lakehouse.table import (
+    changelog_commits,
+    commit_files,
+    commits_between,
+    read_hint,
+    read_snapshot,
+)
 
 _FORMAT = "laketable_changes"
 _INTERNALS = [
@@ -79,147 +76,24 @@ _INTERNALS = [
     T.StructField("_is_delete", T.BooleanType(), False),
 ]
 
-# operations that change no logical rows: safe to pass through. Anything
-# NOT listed here, not "restore", and not "merge-mor" fails the stream —
-# an unknown future operation must not be silently assumed row-free.
-_TRANSPARENT_OPS = {
-    "create",
-    "compact",
-    "rebucket",
-    "cluster",
-    "add-columns",
-    "widen-columns",
-    "drop-columns",
-    "evolve",
-}
+
+def _meta(root: str) -> str:
+    return os.path.join(root, "metadata")
 
 
-def _read_hint(root: str) -> int:
-    with open(os.path.join(root, "metadata", "version-hint.txt")) as f:
-        return int(f.read().strip())
+def _head(root: str) -> int | None:
+    return read_hint(_meta(root), "main")
 
 
-def _read_snapshot_json(root: str, sid: int) -> dict | None:
-    p = os.path.join(root, "metadata", f"snapshot-{sid}.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _table_schema(root: str) -> T.StructType:
-    snap = _read_snapshot_json(root, _read_hint(root))
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    return T.StructType.fromJson(snap["schema"])
-
-
-def _range_chain(root: str, s0: int, s1: int) -> list[dict]:
-    """The commits in ``(s0, s1]`` on THIS table's chain, oldest first —
-    see the module docstring's safety contract."""
-    chain: list[dict] = []
-    sid = int(s1)
-    while sid > int(s0):
-        snap = _read_snapshot_json(root, sid)
-        if snap is None:
-            raise RuntimeError(
-                f"changelog offset {s0} is no longer retained: snapshot "
-                f"{sid} on the path back from {s1} has been expired — "
-                "the stream cannot prove it delivered those commits; "
-                "restart from a live snapshot (or raise keep_last)"
-            )
-        chain.append(snap)
-        parent = snap.get("parent_id")
-        if parent is None:
-            # chain root reached: fine iff the root itself closes the
-            # range (start_snapshot=0 / "full history" lands here)
-            if int(snap["snapshot_id"]) <= int(s0) + 1:
-                break
-            raise RuntimeError(
-                f"changelog offset {s0} predates the retained chain "
-                f"(oldest kept snapshot is {snap['snapshot_id']}) — "
-                "history before it has been expired"
-            )
-        sid = int(parent)
-    else:
-        # the walk must LAND on s0, not step past it: snapshot ids are
-        # allocated table-globally across refs, so a user-supplied
-        # start_snapshot that is a branch commit (or any non-ancestor id
-        # between two main-chain ids) would otherwise silently resolve
-        # to the nearest ancestor BELOW it — duplicating commits the
-        # caller believes it already consumed. Same ancestor contract as
-        # LakeTable.changes().
-        if sid != int(s0):
-            # a restore in the walked range re-parents the chain, which
-            # is the one legitimate way a previously-valid offset stops
-            # being an ancestor — keep that case's actionable message
-            # (same contract as the restore check in _range_delta_files)
-            if any(
-                s.get("summary", {}).get("operation") == "restore"
-                for s in chain
-            ):
-                raise RuntimeError(
-                    f"changelog offset {s0} was undone by a restore in "
-                    f"({sid}, {s1}]: those rows cannot be retracted "
-                    "through a changelog; re-seed the consumer from the "
-                    "restored state"
-                )
-            if not chain:
-                # s0 > s1: the while never ran, so there is no walked
-                # step to report — name the offsets directly (s0 == s1
-                # never reaches here: the equality check above passes
-                # and the caller gets a legitimately empty range)
-                raise ValueError(
-                    f"start snapshot {s0} is not an ancestor of {s1}: "
-                    f"it is ahead of the end of the range"
-                )
-            raise ValueError(
-                f"start snapshot {s0} is not an ancestor of {s1}: the "
-                f"parent walk steps from {chain[-1]['snapshot_id']} past "
-                f"it to {sid}"
-            )
-    chain.reverse()
-    return chain
-
-
-def _range_delta_files(root: str, s0: int, s1: int) -> list[str]:
-    """Relative delta-file paths of the merge-on-read commits in
-    ``(s0, s1]``, commit order, applying the op safety rules."""
-    rels: list[str] = []
-    for snap in _range_chain(root, s0, s1):
-        sid = int(snap["snapshot_id"])
-        op = snap.get("summary", {}).get("operation")
-        if op in _TRANSPARENT_OPS:
-            continue  # folds/reshapes rows the stream already carries
-        if op == "restore":
-            # restore re-parents the chain onto its target, so the undone
-            # commits are off this walk. Whether THIS consumer is
-            # affected depends on its offset: at or before the target it
-            # never consumed an undone commit (transparent); past the
-            # target it holds rows the table has rewound, and no
-            # changelog can retract them — re-seed.
-            target = int(snap["summary"]["restored_from"])
-            if int(s0) > target:
-                raise RuntimeError(
-                    f"snapshot {sid} restored the table to {target}, but "
-                    f"this stream's offset {s0} had already consumed "
-                    "commits past that point — the rewound rows cannot "
-                    "be retracted through a changelog; re-seed the "
-                    "consumer from the restored state"
-                )
-            continue
-        if op != "merge-mor":
-            # CoW merge: no row-level changelog. Unknown op: assume
-            # nothing. Both would silently corrupt downstream state.
-            raise RuntimeError(
-                f"snapshot {sid} is operation {op!r}, which keeps no "
-                "row-level changelog — the stream cannot represent it; "
-                "use merge-on-read ingest for streamed tables"
-            )
-        rels += sorted(
-            p for ps in commit_files(Snapshot.from_json(snap)).values() for p in ps
-        )
-    return rels
+def _changelog_files(root: str, s0: int, s1: int) -> list[str]:
+    """Relative delta-file paths of the commits in ``(s0, s1]`` that
+    carry a row-level changelog, in commit order."""
+    chain = commits_between(_meta(root), int(s0), int(s1))
+    return [
+        rel
+        for snap in changelog_commits(chain)
+        for rel in sorted(p for ps in commit_files(snap).values() for p in ps)
+    ]
 
 
 def _file_rows(root: str, rel: str, field_names: list[str]):
@@ -247,10 +121,10 @@ class _ChangelogReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         if self.start_snapshot is not None:
             return {"snapshot_id": int(self.start_snapshot)}
-        return {"snapshot_id": _read_hint(self.root)}
+        return {"snapshot_id": _head(self.root)}
 
     def read(self, start: dict):
-        end = {"snapshot_id": _read_hint(self.root)}
+        end = {"snapshot_id": _head(self.root)}
         return iter(self._rows(start["snapshot_id"], end["snapshot_id"])), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
@@ -263,7 +137,7 @@ class _ChangelogReader(SimpleDataSourceStreamReader):
 
     def _rows(self, s0: int, s1: int) -> list[tuple]:
         out: list[tuple] = []
-        for rel in _range_delta_files(self.root, s0, s1):
+        for rel in _changelog_files(self.root, s0, s1):
             out.extend(_file_rows(self.root, rel, self.field_names))
         return out
 
@@ -286,13 +160,13 @@ class _PartitionedChangelogReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         if self.start_snapshot is not None:
             return {"snapshot_id": int(self.start_snapshot)}
-        return {"snapshot_id": _read_hint(self.root)}
+        return {"snapshot_id": _head(self.root)}
 
     def latestOffset(self) -> dict:
-        return {"snapshot_id": _read_hint(self.root)}
+        return {"snapshot_id": _head(self.root)}
 
     def partitions(self, start: dict, end: dict):
-        rels = _range_delta_files(
+        rels = _changelog_files(
             self.root, start["snapshot_id"], end["snapshot_id"]
         )
         # an offsets-advanced-but-rowless batch (metadata commits) still
@@ -323,7 +197,10 @@ class LakeTableChangesDataSource(DataSource):
             raise ValueError("laketable_changes needs .option('root', <table dir>)")
         # schema pinned at stream start (file-source contract): additive
         # evolution mid-stream null-fills on restart with the new schema
-        return T.StructType(list(_table_schema(root).fields) + _INTERNALS)
+        snap = read_snapshot(_meta(root), _head(root))
+        if snap is None:
+            raise FileNotFoundError(f"no committed snapshot at {root}")
+        return T.StructType(list(snap.schema.fields) + _INTERNALS)
 
     def _reader_args(self, schema: T.StructType):
         root = self.options["root"]

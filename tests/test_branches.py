@@ -134,6 +134,11 @@ def test_create_branch_duplicate_and_reserved(spark, table):
         table.create_branch("main")
     with pytest.raises(ValueError, match="invalid ref"):
         table.create_branch("bad/name")
+    # an id that was never committed is a ValueError, not a raw errno
+    with pytest.raises(ValueError, match="unknown fork snapshot"):
+        table.create_branch("other", from_snapshot_id=999)
+    with pytest.raises(ValueError, match="unknown 'from' snapshot"):
+        table.changes(999)
 
 
 def test_branch_diff_previews_publish(spark, table):

@@ -157,6 +157,10 @@ def test_expired_offset_fails_loudly_not_silently(spark, tmp_path, table):
     table.expire_snapshots(keep_last=1)
     with pytest.raises(Exception, match="expired|retained"):
         _drain(spark, table, str(tmp_path / "out"), str(tmp_path / "ck"), start=0)
+    # changes() shares the stream's range walk, so an expired ``from``
+    # gets the same wording, not "not an ancestor"
+    with pytest.raises(ValueError, match="expired|retained"):
+        table.changes(2)
 
 
 def test_partitioned_reader_matches_simple_mode(spark, tmp_path, table):
@@ -206,11 +210,11 @@ def test_branch_start_snapshot_refused_as_non_ancestor(spark, tmp_path, table):
     bsnap, _ = b.merge_mor(_up(spark, [("z", 99, "insert")]))
     # advance main past the branch commit id
     table.merge_mor(_up(spark, [("a", 20, "update")]))
-    from astro_data_pipeline_spark.streaming.source import _range_chain
+    from astro_data_pipeline_spark.lakehouse.table import commits_between
 
     head = table.current_snapshot().snapshot_id
     with pytest.raises(ValueError, match="not an ancestor"):
-        _range_chain(table.root, bsnap.snapshot_id, head)
+        commits_between(os.path.join(table.root, "metadata"), bsnap.snapshot_id, head)
 
 
 def test_reversed_offset_range_raises_value_error_not_index_error(spark, table):
@@ -218,8 +222,8 @@ def test_reversed_offset_range_raises_value_error_not_index_error(spark, table):
     the non-ancestor branch must not index into the empty chain — the
     round-4 advisory's IndexError path. The caller still gets the
     actionable not-an-ancestor message naming both offsets."""
-    from astro_data_pipeline_spark.streaming.source import _range_chain
+    from astro_data_pipeline_spark.lakehouse.table import commits_between
 
     head = table.current_snapshot().snapshot_id
     with pytest.raises(ValueError, match="not an ancestor"):
-        _range_chain(table.root, head + 10, head)
+        commits_between(os.path.join(table.root, "metadata"), head + 10, head)

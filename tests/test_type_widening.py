@@ -11,6 +11,7 @@ table rewrite (additive evolution's sibling).
 
 from __future__ import annotations
 
+import datetime
 import decimal
 
 import pytest
@@ -240,18 +241,30 @@ def test_widen_decimal_precision_and_scale(spark, tmp_path):
 
 
 def test_widen_date_to_timestamp_ntz(spark, tmp_path):
+    """date -> timestamp_ntz reads back at midnight, and the file stats
+    move from epoch-days to epoch-micros with it, so ``read_between``
+    prunes against the widened bounds. ``evolve_to`` adding a column in
+    the same commit takes the same schema+stats step."""
     schema = T.StructType(
         [
             T.StructField("k", T.StringType(), False),
             T.StructField("d", T.DateType(), True),
         ]
     )
-    t = LakeTable.create(spark, str(tmp_path / "ts"), schema, ["k"], n_buckets=2)
-    up = spark.createDataFrame([("a", "2024-03-05", "insert")],
-                               schema="k string, d string, op string").withColumn(
-        "d", F.to_date("d")
-    )
-    t.merge(up)
-    t.widen_columns({"d": T.TimestampNTZType()})
-    [row] = t.read().collect()
-    assert str(row["d"]) == "2024-03-05 00:00:00"
+    up = spark.createDataFrame(
+        [("a", "2024-03-05", "insert"), ("b", "2024-03-09", "insert"), ("c", "2024-04-20", "insert")],
+        schema="k string, d string, op string",
+    ).withColumn("d", F.to_date("d"))
+    lo, hi = datetime.datetime(2024, 3, 1), datetime.datetime(2024, 3, 10)
+    for how in ("widen_columns", "evolve_to"):
+        t = LakeTable.create(spark, str(tmp_path / how), schema, ["k"], n_buckets=2)
+        t.merge(up)
+        if how == "widen_columns":
+            t.widen_columns({"d": T.TimestampNTZType()})
+        else:
+            t.evolve_to(T.StructType.fromDDL("k string, d timestamp_ntz, x bigint"))
+        row = t.read().filter(F.col("k") == "a").first()
+        assert str(row["d"]) == "2024-03-05 00:00:00"
+        want = t.read().filter((F.col("d") >= lo) & (F.col("d") <= hi))
+        assert sorted(t.read_between("d", lo, hi).collect()) == sorted(want.collect()), how
+        assert want.count() == 2
