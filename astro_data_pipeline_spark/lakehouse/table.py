@@ -95,6 +95,9 @@ from . import stats as _stats
 BUCKET_COL = "_bucket"
 SEQ_COL = "_seq"  # commit sequence stamped into every data file
 TOMBSTONE_COL = "_tombstone"
+# parquet-mr's adaptive bloom candidate sizes halve from the 1 MiB max
+# filter (2^20 B) to the 32 B minimum bitset (2^5 B): at most 16 sizes
+_BLOOM_CANDIDATES = 20 - 5 + 1
 
 
 class CommitConflictError(RuntimeError):
@@ -923,16 +926,31 @@ class LakeTable:
         a lake table's equivalent is the parquet bloom filter). With
         blooms, the parquet reader drops whole row groups whose filter
         misses the pushed-down key literal before touching a data page.
-        ``adaptive`` sizes each filter to the row group's observed NDV
-        instead of the worst-case max-bytes allocation."""
+        Only the Spark ``read_key`` path consults them; pyarrow's
+        ``filters`` (``read_key_local``) prune on min/max stats only.
+
+        ``adaptive`` keeps a set of candidate filters per key column and
+        writes the smallest one that holds the row group's observed NDV
+        at the default 1% FPP. Candidate sizes halve from the 1 MiB max
+        (2^20 B), and parquet-mr defaults to 5 of them, which floors
+        every filter at 64 KiB — on a small-batch delta of ~100 rows that
+        floor was most of the file. ``_BLOOM_CANDIDATES`` = 16 lets the
+        ladder run down to the 32 B minimum bitset (2^5 B), so each
+        filter is sized to the file it sits in. parquet-mr's builder
+        itself stops at the smallest size that holds one 500-NDV step
+        of its sizing loop, 1 KiB at 1% FPP, so filters span 1 KiB to
+        1 MiB. parquet-mr reads the count only in its per-column form
+        (``...candidates.number#<col>``); the bare key is ignored."""
         try:
             enabled = self.spark.conf.get("spark.adps.parquet.bloom.enabled", "true")
         except Exception:
             enabled = "true"
         if str(enabled).lower() != "true":
             return {}
-        opts = {f"parquet.bloom.filter.enabled#{c}": "true" for c in snap.key_cols}
-        opts["parquet.bloom.filter.adaptive.enabled"] = "true"
+        opts = {"parquet.bloom.filter.adaptive.enabled": "true"}
+        for c in snap.key_cols:
+            opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+            opts[f"parquet.bloom.filter.candidates.number#{c}"] = str(_BLOOM_CANDIDATES)
         return opts
 
     # --------------------------------------------------------------- read
@@ -1162,14 +1180,18 @@ class LakeTable:
         manifest stats (absolute paths, plus kept/total counts): second
         prune stage after bucket hashing. On a key-clustered table
         (``cluster_by`` on a key column) this narrows the bucket's file
-        list to ~one file at PLANNING time; the parquet bloom filters
-        then drop non-matching row groups inside whatever survives.
-        Sound under merge-on-read for the same reason as
-        ``read_between``: only base files prune, every delta in the
-        bucket is scanned, and within a bucket every delta outranks
-        every base row. Pruning uses only EXACT-typed int literals —
-        a value needing a cast has unknown encoded bounds, and a
-        missing/unsupported stats entry keeps the file."""
+        list to ~one file at PLANNING time. On the Spark ``read_key``
+        path the parquet bloom filters then drop non-matching row groups
+        inside whatever survives; ``read_key_local``'s pyarrow reader
+        never opens them (its ``filters`` prune row groups on min/max
+        statistics only), so there this stats prune is the last one
+        before a surviving file's key column is decoded. Sound under
+        merge-on-read for the same reason as ``read_between``: only base
+        files prune, every delta in the bucket is scanned, and within a
+        bucket every delta outranks every base row. Pruning uses only
+        EXACT-typed int literals — a value needing a cast has unknown
+        encoded bounds, and a missing/unsupported stats entry keeps the
+        file."""
         rels = snap.files.get(str(bucket), [])
         total = len(rels)
         bounds = []

@@ -28,7 +28,9 @@ SCHEMA = T.StructType(
 )
 
 
-def _bloom_offsets(spark, file_path: str) -> dict[str, int]:
+def _bloom_offsets(spark, file_path: str) -> tuple[dict[str, int], dict[str, int]]:
+    """Per column of the file's first row group: the bloom filter offset
+    (-1 = none) and, for the columns that carry one, its bitset bytes."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -36,13 +38,15 @@ def _bloom_offsets(spark, file_path: str) -> dict[str, int]:
     )
     rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
     try:
-        b0 = rdr.getFooter().getBlocks().get(0)
-        return {
-            b0.getColumns().get(i).getPath().toDotString(): b0.getColumns()
-            .get(i)
-            .getBloomFilterOffset()
-            for i in range(b0.getColumns().size())
-        }
+        cols = rdr.getFooter().getBlocks().get(0).getColumns()
+        offs, bitsets = {}, {}
+        for i in range(cols.size()):
+            chunk = cols.get(i)
+            name = chunk.getPath().toDotString()
+            offs[name] = chunk.getBloomFilterOffset()
+            if offs[name] >= 0:
+                bitsets[name] = rdr.readBloomFilter(chunk).getBitsetSize()
+        return offs, bitsets
     finally:
         rdr.close()
 
@@ -59,9 +63,31 @@ def _mk(spark, tmp_path, n=400, n_buckets=4) -> LakeTable:
 def test_bloom_filter_written_on_key_columns_only(spark, tmp_path):
     t = _mk(spark, tmp_path)
     rel = next(iter(t.current_snapshot().files.values()))[0]
-    offs = _bloom_offsets(spark, os.path.join(t.root, rel))
+    offs, _ = _bloom_offsets(spark, os.path.join(t.root, rel))
     assert offs["k"] >= 0, offs
     assert offs["v"] == -1, offs
+
+
+def test_bloom_filter_sized_to_the_file(spark, tmp_path):
+    """Each key bloom is sized to its file's distinct count: a ~25-row
+    bucket file carries a filter of at most 4 KiB (not the 64 KiB floor
+    of parquet-mr's 5 default adaptive candidates), while a 20k-key file
+    still gets one large enough for 1% FPP, which read_key prunes with."""
+    small = _mk(spark, tmp_path / "small", n=100, n_buckets=4)
+    rels = [r for rs in small.current_snapshot().files.values() for r in rs]
+    assert len(rels) == 4
+    for rel in rels:
+        _, bitsets = _bloom_offsets(spark, os.path.join(small.root, rel))
+        assert set(bitsets) == {"k"}, bitsets
+        assert bitsets["k"] <= 4096, (rel, bitsets)
+
+    big = _mk(spark, tmp_path / "big", n=20_000, n_buckets=1)
+    (rel,) = big.current_snapshot().files["0"]
+    _, bitsets = _bloom_offsets(spark, os.path.join(big.root, rel))
+    assert bitsets["k"] >= 32 * 1024, bitsets
+    got = big.read_key({"k": 12_345}).collect()
+    assert [(r["k"], r["v"]) for r in got] == [(12_345, 123_450)]
+    assert big.read_key({"k": 20_000}).count() == 0
 
 
 def test_bloom_filter_conf_gate(spark, tmp_path):
@@ -69,7 +95,7 @@ def test_bloom_filter_conf_gate(spark, tmp_path):
     try:
         t = _mk(spark, tmp_path)
         rel = next(iter(t.current_snapshot().files.values()))[0]
-        offs = _bloom_offsets(spark, os.path.join(t.root, rel))
+        offs, _ = _bloom_offsets(spark, os.path.join(t.root, rel))
         assert offs["k"] == -1, offs
     finally:
         spark.conf.set("spark.adps.parquet.bloom.enabled", "true")
