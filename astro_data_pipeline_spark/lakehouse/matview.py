@@ -26,12 +26,19 @@ Design:
   bucket-pruned join against the stored groups, one MERGE — refresh cost
   is O(changed rows), independent of base-table size.
 - **Semi-retractable aggregates** (min / max) grow monotonically from
-  post-images (``greatest(stored, batch_max)``); a retraction that ties
-  the stored extreme marks the group DIRTY, and dirty groups alone are
-  recomputed from the base table (semi-join pushdown). At 100 TB the
-  rescan prunes to the dirty groups' rows only if the base is clustered
-  by the group dimension (``cluster_by``); the docstring cost model is
-  honest about that.
+  post-images (``greatest(stored, batch_max)``). A group is DIRTY only
+  when its stored extreme can really be gone: a retraction reaches it
+  (``_r >= stored`` for max) AND no post-image does (``_g`` NULL or
+  ``_g < stored``); flipped for min. That rule is exact: net post-images
+  are live at ``to`` and every surviving old value is within the stored
+  extreme, so a ``_g`` that reaches it is the new extreme. Dirty groups
+  alone are recomputed from the base table (semi-join pushdown). A
+  refresh whose delta holds no group that COULD be dirty (``_r`` beating
+  the group's own ``_g``) skips the dirty probe and the rescan outright;
+  a ``max(lsn)`` view fed LSN-ordered updates never rescans. At 100 TB
+  the rescan prunes to the dirty groups' rows only if the base is
+  clustered by the group dimension (``cluster_by``); the docstring cost
+  model is honest about that.
 - A group whose live-row count reaches zero is DELETED from the view
   (and resurrects cleanly if rows return); a group column changing in an
   update moves the row's contribution between groups (pre-image retracts
@@ -92,6 +99,24 @@ def _sum_type(src: T.DataType) -> T.DataType:
     ):
         return T.LongType()
     return T.DoubleType()
+
+
+def _lost(s: AggSpec, ref: F.Column) -> F.Column:
+    """True where the min/max spec ``s`` may have lost the extreme
+    ``ref`` in a delta row: a retracted value reaches it (``_r >= ref``
+    for max) and no post-image does (``_g`` NULL or ``_g < ref``);
+    flipped for min. NULL operands give False.
+
+    Against the stored extreme this is the exact dirty rule. Net
+    post-images are live at ``to`` and every surviving old value is
+    within the stored extreme, so a ``_g`` that reaches it IS the new
+    extreme, which ``greatest(stored, _g)`` already gives."""
+    r, g = F.col(f"_r_{s.alias}"), F.col(f"_g_{s.alias}")
+    if s.kind == "max":
+        lost = (r >= ref) & (g.isNull() | (g < ref))
+    else:
+        lost = (r <= ref) & (g.isNull() | (g > ref))
+    return F.coalesce(lost, F.lit(False))
 
 
 class IncrementalAggView:
@@ -269,12 +294,13 @@ class IncrementalAggView:
 
     def _full_storage(self, snapshot=None) -> DataFrame:
         rows = self.base.read(snapshot=snapshot)
+        stype = self._sum_types(self.table.current_snapshot())
         aggs = [F.count(F.lit(1)).alias(self._N)]
         for s in self.specs:
             if s.kind == "count":
                 aggs.append(F.count(F.lit(1)).alias(s.alias))
             elif s.kind in ("sum", "avg"):
-                st = self._storage_type(s)
+                st = stype[s.alias]
                 aggs.append(
                     F.coalesce(F.sum(F.col(s.col).cast(st)), F.lit(0).cast(st)).alias(
                         f"{s.alias}__s"
@@ -287,9 +313,15 @@ class IncrementalAggView:
                 aggs.append(F.max(s.col).alias(s.alias))
         return rows.groupBy(*self.group_cols).agg(*aggs)
 
-    def _storage_type(self, s: AggSpec) -> T.DataType:
-        f = {x.name: x for x in self.table.current_snapshot().schema.fields}
-        return f[f"{s.alias}__s"].dataType
+    def _sum_types(self, vsnap) -> dict[str, T.DataType]:
+        """alias -> storage type of each sum/avg running sum, read from
+        one view snapshot's schema."""
+        f = {x.name: x.dataType for x in vsnap.schema.fields}
+        return {
+            s.alias: f[f"{s.alias}__s"]
+            for s in self.specs
+            if s.kind in ("sum", "avg")
+        }
 
     # -- incremental maintenance ---------------------------------------
 
@@ -298,11 +330,20 @@ class IncrementalAggView:
 
         Incremental path: one ``changes(from, to, with_preimage=True)``
         scan (O(changed rows)), signed-contribution aggregation per
-        group, a bucket-pruned join against stored state, dirty-extreme
-        rescan only where a retraction tied a stored min/max, one MERGE.
+        group, pinned; one job over it for the touched view buckets and
+        the count of groups that could have lost a min/max; a
+        bucket-pruned join against stored state; one MERGE. Only when
+        that count is non-zero does the refresh pin the joined rows, probe
+        them for dirty groups (a retraction reached the stored extreme
+        and no post-image did) and rescan the base for those groups.
         ``full=True`` recomputes every group from the base head instead
         (the escape hatch for a lost horizon or a CoW/compacted range the
-        changelog cannot replay)."""
+        changelog cannot replay).
+
+        The returned stats carry ``dirty_candidates`` and
+        ``dirty_rescans``; the refresh commit's summary records
+        ``mv_dirty_rescans``, so ``view.table.history()`` shows per
+        refresh whether it rescanned."""
         with phase("mv.pre"):
             base_snap = self.base.current_snapshot()
             to = base_snap.snapshot_id
@@ -322,13 +363,9 @@ class IncrementalAggView:
         # may double as an agg col)
         carry = gcols + [c for c in sorted(need) if c not in gcols]
         base_keys = set(base_snap.key_cols)
-        # one snapshot read for all storage-type lookups (each
-        # _storage_type call re-reads the snapshot json otherwise)
-        _vfields = {
-            f.name: f.dataType
-            for f in self.table.current_snapshot().schema.fields
-        }
-        _stype = lambda s: _vfields[f"{s.alias}__s"]  # noqa: E731
+        vsnap = self.table.current_snapshot()
+        stype = self._sum_types(vsnap)
+        ext_specs = [s for s in self.specs if s.kind in ("min", "max")]
         # projected changelog: the base's payload columns (content blobs)
         # must never ride the refresh shuffle
         with phase("mv.changes_plan"):
@@ -353,12 +390,11 @@ class IncrementalAggView:
         contrib = post.unionByName(pre)
 
         aggs = [F.sum("_w").alias("_dn")]
-        has_extremes = False
         for s in self.specs:
             if s.kind == "count":
                 aggs.append(F.sum("_w").alias(f"_d_{s.alias}"))
             elif s.kind in ("sum", "avg"):
-                st = _stype(s)
+                st = stype[s.alias]
                 aggs.append(
                     F.coalesce(
                         F.sum(F.col("_w").cast(st) * F.col(s.col).cast(st)),
@@ -372,35 +408,39 @@ class IncrementalAggView:
                     ).alias(f"_dnn_{s.alias}")
                 )
             else:
-                has_extremes = True
+                ext = F.max if s.kind == "max" else F.min
                 grow = F.when(F.col("_w") == 1, F.col(s.col))
                 shrink = F.when(F.col("_w") == -1, F.col(s.col))
-                if s.kind == "max":
-                    aggs.append(F.max(grow).alias(f"_g_{s.alias}"))
-                    aggs.append(F.max(shrink).alias(f"_r_{s.alias}"))
-                else:
-                    aggs.append(F.min(grow).alias(f"_g_{s.alias}"))
-                    aggs.append(F.min(shrink).alias(f"_r_{s.alias}"))
+                aggs.append(ext(grow).alias(f"_g_{s.alias}"))
+                aggs.append(ext(shrink).alias(f"_r_{s.alias}"))
         delta = contrib.groupBy(*gcols).agg(*aggs)
-        # one row per changed group, consumed by THREE jobs (bucket-id
-        # collect, dirty-group probe, the merge) — pin it once instead of
-        # re-running the changes() scan per consumer
+        # one row per changed group, consumed by the summary job below,
+        # the merge and — only when some group can be dirty — the rows
+        # barrier: pin it once instead of re-running the changes() scan
+        # per consumer
         from ..session import materialize_barrier
 
         with phase("mv.delta_barrier"):
             delta = materialize_barrier(delta, eager=True)
 
-        # stored state for exactly the touched groups: bucket-pruned read
-        snap = self.table.current_snapshot()
+        # one job over the pinned delta: the view buckets it touches, and
+        # how many groups COULD have lost a stored extreme. A dirty group
+        # has _r reaching the stored extreme, which in turn exceeds _g (see
+        # _lost), so a group whose retracted extreme does not beat its own
+        # growth can never be dirty, whatever is stored
+        can_lose = functools.reduce(
+            operator.or_,
+            [_lost(s, F.col(f"_r_{s.alias}")) for s in ext_specs],
+            F.lit(False),
+        )
         with phase("mv.bucket_collect"):
-            tb = sorted(
-                r[0]
-                for r in delta.select(
-                    bucket_expr(gcols, snap.n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+            summ = delta.agg(
+                F.collect_set(bucket_expr(gcols, vsnap.n_buckets)).alias("tb"),
+                F.count(F.when(can_lose, 1)).alias("n_can"),
+            ).first()
+        tb = sorted(summ["tb"])
+        n_can = summ["n_can"]
+        # stored state for exactly the touched groups: bucket-pruned read
         with phase("mv.stored_plan"):
             stored = self.table.read_buckets(tb) if tb else self.table.read()
             merged = _null_safe_join(delta, stored, gcols, "left")
@@ -415,7 +455,7 @@ class IncrementalAggView:
                     .alias(s.alias)
                 )
             elif s.kind in ("sum", "avg"):
-                st = _stype(s)
+                st = stype[s.alias]
                 out_cols.append(
                     (
                         F.coalesce(F.col(f"{s.alias}__s"), F.lit(0).cast(st))
@@ -429,39 +469,25 @@ class IncrementalAggView:
                     ).alias(f"{s.alias}__n")
                 )
             else:
-                # monotone growth is safe; a retraction TOUCHING the stored
-                # extreme may have removed the extreme row → group dirty
                 ext = F.greatest if s.kind == "max" else F.least
                 cand = ext(F.col(s.alias), F.col(f"_g_{s.alias}"))
-                tie = (
-                    F.col(f"_r_{s.alias}") >= F.col(s.alias)
-                    if s.kind == "max"
-                    else F.col(f"_r_{s.alias}") <= F.col(s.alias)
-                )
-                dirty = F.coalesce(
-                    F.col(s.alias).isNotNull()
-                    & F.col(f"_r_{s.alias}").isNotNull()
-                    & tie,
-                    F.lit(False),
-                )
-                out_cols.append(
-                    F.when(dirty, F.lit(None)).otherwise(cand).alias(s.alias)
-                )
-                dirty_flags.append(dirty.alias(f"_dirty_{s.alias}"))
+                if n_can:
+                    dirty = _lost(s, F.col(s.alias))
+                    cand = F.when(dirty, F.lit(None)).otherwise(cand)
+                    dirty_flags.append(dirty.alias(f"_dirty_{s.alias}"))
+                out_cols.append(cand.alias(s.alias))
         rows = merged.select(*out_cols, *dirty_flags)
-        if has_extremes and dirty_flags:
+        keep = rows.columns[: len(out_cols)]
+
+        n_dirty = 0
+        if dirty_flags:
             # the dirty probe (count) and the merge both consume rows —
             # pin the stored-state join once
             with phase("mv.rows_barrier"):
                 rows = materialize_barrier(rows, eager=True)
-
-        n_dirty = 0
-        if has_extremes and dirty_flags:
-            any_dirty = None
-            for s in self.specs:
-                if s.kind in ("min", "max"):
-                    f_ = F.col(f"_dirty_{s.alias}")
-                    any_dirty = f_ if any_dirty is None else (any_dirty | f_)
+            any_dirty = functools.reduce(
+                operator.or_, [F.col(f"_dirty_{s.alias}") for s in ext_specs]
+            )
             dirty_groups = rows.filter(any_dirty).select(*gcols)
             # rows is pinned, so this reads local blocks — but cap the
             # collect: a MASS retraction could have millions of dirty
@@ -475,20 +501,20 @@ class IncrementalAggView:
             )
             if n_dirty:
                 # recompute extremes for dirty groups only. Small dirty
-                # sets (the common case — a retraction must TIE a stored
-                # extreme) compile to a LITERAL predicate, which pushes to
-                # the parquet scan: on a base cluster_by'd on the group
-                # dimension, file/row-group min-max stats skip everything
-                # else, so the rescan reads ~the dirty groups' rows. Large
-                # dirty sets fall back to a broadcast semi-join (runtime
+                # sets (the common case — a retraction must remove a
+                # stored extreme that no post-image reaches) compile to a
+                # LITERAL predicate, which pushes to the parquet scan: on
+                # a base cluster_by'd on the group dimension,
+                # file/row-group min-max stats skip everything else, so
+                # the rescan reads ~the dirty groups' rows. Large dirty
+                # sets fall back to a broadcast semi-join (runtime
                 # filtering, no pushdown) — the honest full-scan cost of
                 # mass retraction.
                 ext_aggs = [
                     (F.min(s.col) if s.kind == "min" else F.max(s.col)).alias(
                         f"_rc_{s.alias}"
                     )
-                    for s in self.specs
-                    if s.kind in ("min", "max")
+                    for s in ext_specs
                 ]
                 base_rows = self.base.read(snapshot=base_snap)
                 if n_dirty <= 1000:
@@ -521,33 +547,19 @@ class IncrementalAggView:
                     )
                 recomp = pruned.groupBy(*gcols).agg(*ext_aggs)
                 rows = _null_safe_join(rows, recomp, gcols, "left")
-                fixed = []
-                for c in rows.columns:
-                    if c.startswith("_rc_") or c.startswith("_dirty_"):
-                        continue
-                    s = next(
-                        (
-                            x
-                            for x in self.specs
-                            if x.kind in ("min", "max") and x.alias == c
-                        ),
-                        None,
-                    )
-                    if s is None:
-                        fixed.append(F.col(c))
-                    else:
-                        fixed.append(
-                            F.when(
-                                F.col(f"_dirty_{s.alias}"), F.col(f"_rc_{s.alias}")
-                            )
-                            .otherwise(F.col(s.alias))
-                            .alias(s.alias)
-                        )
-                rows = rows.select(*fixed)
+                ext_aliases = {s.alias for s in ext_specs}
+                rows = rows.select(
+                    *[
+                        F.when(F.col(f"_dirty_{c}"), F.col(f"_rc_{c}"))
+                        .otherwise(F.col(c))
+                        .alias(c)
+                        if c in ext_aliases
+                        else F.col(c)
+                        for c in keep
+                    ]
+                )
             else:
-                rows = rows.drop(*[c for c in rows.columns if c.startswith("_dirty_")])
-        else:
-            rows = rows.drop(*[c for c in rows.columns if c.startswith("_dirty_")])
+                rows = rows.select(*keep)
 
         rows = rows.withColumn(
             "op", F.when(F.col(self._N) <= 0, "delete").otherwise("upsert")
@@ -556,6 +568,7 @@ class IncrementalAggView:
             "batch_id": batch_id,
             "run_scope": self._SCOPE,
             "mv_refresh_to": to,
+            "mv_dirty_rescans": n_dirty,
         }
         with phase("mv.merge"):
             if self.write_mode == "mor":
@@ -574,6 +587,7 @@ class IncrementalAggView:
             "from": frm,
             "to": to,
             "noop": False,
+            "dirty_candidates": n_can,
             "dirty_rescans": n_dirty,
             **metrics,
         }

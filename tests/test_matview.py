@@ -341,3 +341,67 @@ def test_cascaded_consumers_over_mor_view(spark, tmp_path, base):
     assert "g3" not in got
     # reload keeps the mode
     assert IncrementalAggView.load(spark, str(tmp_path / "mvm")).write_mode == "mor"
+
+
+@pytest.mark.parametrize("kind", ["max", "min"])
+def test_extreme_group_dirty_only_when_really_lost(spark, tmp_path, kind):
+    """A retraction touching the stored extreme rescans the base only
+    when no post-image reaches that extreme: an update past it, or an
+    equal value arriving from another key, leaves the new extreme known
+    from the delta alone. Every refresh's rescan count is also in its
+    commit summary (``mv_dirty_rescans``). Values are negated for the
+    min view, so the same steps exercise the flipped comparisons."""
+    sign = 1 if kind == "max" else -1
+    t = LakeTable.create(
+        spark, str(tmp_path / "b"), SCHEMA, ["repo", "path"], n_buckets=4
+    )
+
+    def commit(rows, mor=True):
+        rows = [
+            (r, p, g, None if v is None else sign * v, None, op)
+            for r, p, g, v, op in rows
+        ]
+        (t.merge_mor if mor else t.merge)(_up(spark, rows))
+
+    commit(
+        [
+            ("r1", "a", "g1", 10, "insert"),
+            ("r1", "b", "g1", 20, "insert"),
+            ("r2", "a", "g2", 7, "insert"),
+        ],
+        mor=False,
+    )
+    view = IncrementalAggView.create(
+        spark,
+        str(tmp_path / "mv"),
+        t,
+        ["grp"],
+        [AggSpec("count", None, "n"), AggSpec(kind, "v", "ext")],
+        n_buckets=4,
+    )
+    steps = [
+        # the extreme row itself moves past the stored extreme
+        ([("r1", "b", "g1", 25, "update")], 0, 25),
+        # the extreme row leaves, an equal value arrives on another key
+        (
+            [("r1", "b", None, None, "delete"), ("r1", "c", "g1", 25, "insert")],
+            0,
+            25,
+        ),
+        # the extreme row is lowered below the next value: really lost
+        ([("r1", "c", "g1", 1, "update")], 1, 10),
+        # the extreme row is deleted with no growth at all
+        ([("r1", "a", None, None, "delete")], 1, 1),
+    ]
+    for rows, rescans, ext in steps:
+        commit(rows)
+        stats = view.refresh()
+        if rescans:
+            assert stats["dirty_rescans"] >= 1, rows
+        else:
+            assert stats["dirty_rescans"] == 0, rows
+        _assert_consistent(view)
+        got = {r["grp"]: r["ext"] for r in view.read().collect()}
+        assert got["g1"] == sign * ext and got["g2"] == sign * 7
+        head = view.table.history().first()["summary"]
+        assert head["mv_dirty_rescans"] == str(stats["dirty_rescans"])
