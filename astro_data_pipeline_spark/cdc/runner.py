@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from ..lakehouse import LakeTable
 from ..lakehouse.table import Snapshot, bucket_expr, is_lossless_widening, observed_metrics
-from ..perf import phase
+from ..session import step
 from . import apply as A
 
 
@@ -120,7 +120,8 @@ class CdcRunner:
         sequential loop; cow always runs at 1, because its merge reads
         the base it rewrites.
         """
-        assert mode in ("mor", "cow")
+        if mode not in ("mor", "cow"):
+            raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
         self.spark = spark
         self.table = table
         self.run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
@@ -142,13 +143,12 @@ class CdcRunner:
         every wide value back to the stale table type. Both promotions
         are metadata-only commits; zero data files move. Returns the
         head the batches are planned against."""
-        with phase("runner.evolve"):
-            self.table.evolve_to(
-                events.schema,
-                reserved={"lsn", "ts", "op"},
-                summary={"run_id": self.run_id},
-            )
-            return self.table.current_snapshot()
+        self.table.evolve_to(
+            events.schema,
+            reserved={"lsn", "ts", "op"},
+            summary={"run_id": self.run_id},
+        )
+        return self.table.current_snapshot()
 
     # -------------------------------------------------------------- apply
 
@@ -174,25 +174,26 @@ class CdcRunner:
             .sample(fraction=0.02, seed=42)
         )
         counts = sample.groupBy("repo", "path").agg(F.count("*").alias("n"))
-        # phase 1 (always): one job, two scalars to the driver. The common
-        # case — no key anywhere near hot — stops here.
-        stats = counts.agg(
-            F.sum("n").alias("total"), F.max("n").alias("max_n")
-        ).collect()[0]
-        total = int(stats["total"] or 0)
-        if total == 0:
-            return []
-        # floor of 5 sampled hits: below that the "hot" signal is sampling
-        # noise (Poisson), and a key too small to clear 5 hits is far too
-        # small to skew a reducer anyway
-        cutoff = max(int(total * self.hot_share), 5)
-        if int(stats["max_n"]) <= cutoff:
-            return []
-        # phase 2 (rare): pull only the keys above the cutoff
-        return [
-            (r["repo"], r["path"])
-            for r in counts.filter(F.col("n") > cutoff).collect()
-        ]
+        with step(self.spark, "runner.hot_keys"):
+            # phase 1 (always): one job, two scalars to the driver. The
+            # common case — no key anywhere near hot — stops here.
+            stats = counts.agg(
+                F.sum("n").alias("total"), F.max("n").alias("max_n")
+            ).collect()[0]
+            total = int(stats["total"] or 0)
+            if total == 0:
+                return []
+            # floor of 5 sampled hits: below that the "hot" signal is
+            # sampling noise (Poisson), and a key too small to clear 5 hits
+            # is far too small to skew a reducer anyway
+            cutoff = max(int(total * self.hot_share), 5)
+            if int(stats["max_n"]) <= cutoff:
+                return []
+            # phase 2 (rare): pull only the keys above the cutoff
+            return [
+                (r["repo"], r["path"])
+                for r in counts.filter(F.col("n") > cutoff).collect()
+            ]
 
     def _build_rows(self, events: DataFrame, snap: Snapshot, hot: list[tuple[str, str]]):
         """The per-batch lazy plan: quarantine-observed validation →
@@ -239,9 +240,8 @@ class CdcRunner:
         """Plan step: the skip check, then the batch's lazy rows and its
         commit manifest. ``hot`` is called only for a batch that will be
         applied, so a skipped batch never pays for hot-key detection."""
-        with phase("runner.skip_check"):
-            if batch_id in committed:
-                return BatchReport(batch_id, lsn_lo, lsn_hi, status="skipped")
+        if batch_id in committed:
+            return BatchReport(batch_id, lsn_lo, lsn_hi, status="skipped")
         hot_keys = hot()
         obs, rows = self._build_rows(events, snap, hot_keys)
         manifest = {
@@ -259,40 +259,43 @@ class CdcRunner:
         pre-assigned ``commit_id``; they stay invisible until the finish
         step commits them. CoW probes the touched buckets with a
         column-pruned key scan (content never read) and merges them,
-        which commits against the head the merge reads itself."""
-        if self.mode == "mor":
-            return self.table.mor_write(
+        which commits against the head the merge reads itself. Runs in a
+        pool thread during ``replay``, so its step is opened here."""
+        with step(self.spark, "runner.write"):
+            if self.mode == "mor":
+                return self.table.mor_write(
+                    b.rows,
+                    commit_id,
+                    op_col="op",
+                    delete_op="delete",
+                    bucket_aligned=True,
+                    snapshot=snap,
+                )
+            # quarantine-bound rows (null key cols) never reach the merge —
+            # without this filter their hash bucket would be spuriously
+            # rewritten on every batch carrying a corrupt stripe
+            keyed = b.events
+            for c in snap.key_cols:
+                keyed = keyed.filter(F.col(c).isNotNull())
+            touched = [
+                r[0]
+                for r in keyed.select(bucket_expr(snap.key_cols, snap.n_buckets))
+                .distinct()
+                .collect()
+            ]
+            return touched, self.table.merge(
                 b.rows,
-                commit_id,
                 op_col="op",
                 delete_op="delete",
-                bucket_aligned=True,
-                snapshot=snap,
+                touched_buckets=touched,
+                summary=b.manifest,
             )
-        # quarantine-bound rows (null key cols) never reach the merge —
-        # without this filter their hash bucket would be spuriously
-        # rewritten on every batch carrying a corrupt stripe
-        keyed = b.events
-        for c in snap.key_cols:
-            keyed = keyed.filter(F.col(c).isNotNull())
-        touched = [
-            r[0]
-            for r in keyed.select(bucket_expr(snap.key_cols, snap.n_buckets))
-            .distinct()
-            .collect()
-        ]
-        return touched, self.table.merge(
-            b.rows,
-            op_col="op",
-            delete_op="delete",
-            touched_buckets=touched,
-            summary=b.manifest,
-        )
 
     def _finish(self, b: _Batch, written, expect_parent: int) -> BatchReport:
         """Finish step: commit (MoR's ordered finalize onto
         ``expect_parent``; a CoW merge has already committed), count the
-        batch's quarantined rows, report."""
+        batch's quarantined rows (a job only when the observation is
+        empty), report."""
         if self.mode == "mor":
             snap, metrics = self.table.mor_finalize(
                 written, summary=b.manifest, expect_parent=expect_parent
@@ -304,7 +307,7 @@ class CdcRunner:
             # without ever executing the batch plan (sparse LSN ranges,
             # all-quarantine batches), so the observation never fills
             ran = bool(touched)
-        with phase("runner.obs_get"):
+        with step(self.spark, "runner.finish"):
             n_bad = observed_metrics(b.obs, b.events, [_quarantined()], ran=ran)[
                 "rows_quarantined"
             ]
@@ -344,9 +347,8 @@ class CdcRunner:
         chain (one JSON parse per snapshot), O(batches × snapshots) over
         a long-lived table.
         """
-        with phase("runner.skip_check"):
-            if committed is None:
-                committed = self.table.committed_batch_ids()
+        if committed is None:
+            committed = self.table.committed_batch_ids()
         snap = self._evolve_if_needed(events)
 
         def hot() -> list[tuple[str, str]]:
@@ -403,30 +405,30 @@ class CdcRunner:
         runner, same table+log) must skip the committed prefix and
         converge to the same final state.
         """
-        with phase("runner.lsn_bounds"):
-            # Footer-stats fast path: when the log came from
-            # ``read_event_log`` the min/max LSN was already read from
-            # parquet row-group statistics on the driver (microseconds) —
-            # no cluster job. Anything else (filtered/limited/streaming
-            # DataFrames) falls back to a real aggregation.
-            lo_hi = getattr(events, "_adps_lsn_bounds", None)
+        # Footer-stats fast path: when the log came from
+        # ``read_event_log`` the min/max LSN was already read from parquet
+        # row-group statistics on the driver (microseconds) — no cluster
+        # job. Anything else (filtered/limited/streaming DataFrames) falls
+        # back to a real aggregation.
+        lo_hi = getattr(events, "_adps_lsn_bounds", None)
+        with step(self.spark, "runner.plan"):
             if lo_hi is None:
                 lo_hi = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
-        if lo_hi[0] is None:
             # no orderable LSNs at all. A truly empty log is a no-op, but
             # a non-empty all-null-lsn log must still flow through the
             # validate/quarantine path (not vanish with zero batches and
             # zero metrics) — same contract as the streaming bridge.
-            if events.limit(1).count() == 0:
-                return []
+            empty = lo_hi[0] is None and events.limit(1).count() == 0
+        if empty:
+            return []
+        if lo_hi[0] is None:
             return [
                 self.apply_batch(events, "lsn:null-only", 0, 0, hot_keys=[])
             ]
         ranges = lsn_ranges(int(lo_hi[0]), int(lo_hi[1]), n_batches)
         # ledger snapshot ONCE per replay — batches this replay itself
         # commits can't be in the skip set
-        with phase("runner.skip_check"):
-            committed = self.table.committed_batch_ids()
+        committed = self.table.committed_batch_ids()
         # evolve once up front: the unified log schema is constant across
         # batches, so per-batch evolution checks are redundant
         base = self._evolve_if_needed(events)
@@ -453,17 +455,14 @@ class CdcRunner:
                 # first applied batch: warm-start salt set + async
                 # detection over the full log
                 hot = self._prior_hot_keys()
-                with phase("runner.hot_submit"):
-                    hot_fut = pool.submit(self.detect_hot_keys, events)
+                hot_fut = pool.submit(self.detect_hot_keys, events)
             elif hot_fut is not None:
-                with phase("runner.hot_wait"):
-                    # REPLACE the warm-start set, don't union: unioning
-                    # makes the hot set monotone across runs (manifest ->
-                    # warm start -> union -> manifest), so a key hot once
-                    # would stay salted forever and any non-empty set
-                    # forces the two-stage collapse plan on every future
-                    # batch
-                    hot = sorted(set(hot_fut.result()))
+                # REPLACE the warm-start set, don't union: unioning makes
+                # the hot set monotone across runs (manifest -> warm start
+                # -> union -> manifest), so a key hot once would stay
+                # salted forever and any non-empty set forces the
+                # two-stage collapse plan on every future batch
+                hot = sorted(set(hot_fut.result()))
                 hot_fut = None
             return hot
 

@@ -70,7 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..perf import phase
+from ..session import materialize_barrier, step
 from .table import LakeTable, bucket_expr, null_safe_join as _null_safe_join
 
 _KINDS = ("count", "sum", "avg", "min", "max")
@@ -344,17 +344,15 @@ class IncrementalAggView:
         ``dirty_rescans``; the refresh commit's summary records
         ``mv_dirty_rescans``, so ``view.table.history()`` shows per
         refresh whether it rescanned."""
-        with phase("mv.pre"):
-            base_snap = self.base.current_snapshot()
-            to = base_snap.snapshot_id
-            if full:
-                return self._refresh_full(base_snap)
-            frm = self.last_refresh_to()
-            if to == frm:
-                return {"from": frm, "to": to, "noop": True}
-            batch_id = f"mv:{frm}->{to}"
-            skip = batch_id in self.table.committed_batch_ids(run_scope=self._SCOPE)
-        if skip:
+        base_snap = self.base.current_snapshot()
+        to = base_snap.snapshot_id
+        if full:
+            return self._refresh_full(base_snap)
+        frm = self.last_refresh_to()
+        if to == frm:
+            return {"from": frm, "to": to, "noop": True}
+        batch_id = f"mv:{frm}->{to}"
+        if batch_id in self.table.committed_batch_ids(run_scope=self._SCOPE):
             return {"from": frm, "to": to, "noop": True, "ledger_skip": True}
 
         gcols = self.group_cols
@@ -368,7 +366,7 @@ class IncrementalAggView:
         ext_specs = [s for s in self.specs if s.kind in ("min", "max")]
         # projected changelog: the base's payload columns (content blobs)
         # must never ride the refresh shuffle
-        with phase("mv.changes_plan"):
+        with step(self.spark, "matview.changes_plan"):
             ch = self.base.changes(
                 frm,
                 to,
@@ -414,26 +412,22 @@ class IncrementalAggView:
                 aggs.append(ext(grow).alias(f"_g_{s.alias}"))
                 aggs.append(ext(shrink).alias(f"_r_{s.alias}"))
         delta = contrib.groupBy(*gcols).agg(*aggs)
-        # one row per changed group, consumed by the summary job below,
-        # the merge and — only when some group can be dirty — the rows
-        # barrier: pin it once instead of re-running the changes() scan
-        # per consumer
-        from ..session import materialize_barrier
-
-        with phase("mv.delta_barrier"):
-            delta = materialize_barrier(delta, eager=True)
-
-        # one job over the pinned delta: the view buckets it touches, and
-        # how many groups COULD have lost a stored extreme. A dirty group
-        # has _r reaching the stored extreme, which in turn exceeds _g (see
-        # _lost), so a group whose retracted extreme does not beat its own
-        # growth can never be dirty, whatever is stored
+        # A dirty group has _r reaching the stored extreme, which in turn
+        # exceeds _g (see _lost), so a group whose retracted extreme does
+        # not beat its own growth can never be dirty, whatever is stored
         can_lose = functools.reduce(
             operator.or_,
             [_lost(s, F.col(f"_r_{s.alias}")) for s in ext_specs],
             F.lit(False),
         )
-        with phase("mv.bucket_collect"):
+        with step(self.spark, "matview.delta"):
+            # one row per changed group, consumed by the summary job below,
+            # the merge and — only when some group can be dirty — the rows
+            # barrier: pin it once instead of re-running the changes() scan
+            # per consumer
+            delta = materialize_barrier(delta, eager=True)
+            # one job over the pinned delta: the view buckets it touches,
+            # and how many groups COULD have lost a stored extreme
             summ = delta.agg(
                 F.collect_set(bucket_expr(gcols, vsnap.n_buckets)).alias("tb"),
                 F.count(F.when(can_lose, 1)).alias("n_can"),
@@ -441,7 +435,7 @@ class IncrementalAggView:
         tb = sorted(summ["tb"])
         n_can = summ["n_can"]
         # stored state for exactly the touched groups: bucket-pruned read
-        with phase("mv.stored_plan"):
+        with step(self.spark, "matview.stored"):
             stored = self.table.read_buckets(tb) if tb else self.table.read()
             merged = _null_safe_join(delta, stored, gcols, "left")
 
@@ -483,7 +477,7 @@ class IncrementalAggView:
         if dirty_flags:
             # the dirty probe (count) and the merge both consume rows —
             # pin the stored-state join once
-            with phase("mv.rows_barrier"):
+            with step(self.spark, "matview.rows_barrier"):
                 rows = materialize_barrier(rows, eager=True)
             any_dirty = functools.reduce(
                 operator.or_, [F.col(f"_dirty_{s.alias}") for s in ext_specs]
@@ -494,11 +488,11 @@ class IncrementalAggView:
             # groups, and the literal-predicate path only wants ≤1000;
             # limit(1001) proves which side we're on without ever
             # materializing an unbounded set on the driver
-            with phase("mv.dirty_probe"):
+            with step(self.spark, "matview.dirty_probe"):
                 dirty_vals = dirty_groups.limit(1001).collect()
-            n_dirty = (
-                len(dirty_vals) if len(dirty_vals) <= 1000 else dirty_groups.count()
-            )
+                n_dirty = (
+                    len(dirty_vals) if len(dirty_vals) <= 1000 else dirty_groups.count()
+                )
             if n_dirty:
                 # recompute extremes for dirty groups only. Small dirty
                 # sets (the common case — a retraction must remove a
@@ -570,7 +564,7 @@ class IncrementalAggView:
             "mv_refresh_to": to,
             "mv_dirty_rescans": n_dirty,
         }
-        with phase("mv.merge"):
+        with step(self.spark, "matview.merge"):
             if self.write_mode == "mor":
                 # delta-append refresh: the view keeps its own changelog
                 # so cascaded consumers (replicas, views-over-views) can

@@ -89,7 +89,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..perf import phase
+from ..session import step
 from . import stats as _stats
 
 BUCKET_COL = "_bucket"
@@ -967,7 +967,9 @@ class LakeTable:
         schema = self._internal_schema(snap) if with_internals else snap.schema
         if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        # over 32 paths, Spark lists them with a job of its own
+        with step(self.spark, "table.scan"):
+            return self.spark.read.schema(schema).parquet(*paths)
 
     def _resolve(
         self, df: DataFrame, snap: Snapshot, fuse_bucket: bool = False
@@ -1089,28 +1091,29 @@ class LakeTable:
         types = {f.name: f.dataType for f in snap.schema.fields}
         key_types = [types[c] for c in snap.key_cols]
         vals = [key[c] for c in snap.key_cols]
-        bucket = self._local_bucket(vals, key_types, snap.n_buckets)
-        if bucket is None:
-            row = self.spark.range(1).select(
-                *[F.lit(key[c]).cast(types[c]).alias(c) for c in snap.key_cols]
-            )
-            bucket = row.select(bucket_expr(snap.key_cols, snap.n_buckets)).collect()[0][0]
-        base_paths, _, _ = self._point_base_paths(snap, int(bucket), key, types)
-        delta_paths = [
-            os.path.join(self.root, p)
-            for p in snap.delta_files.get(str(int(bucket)), [])
-        ]
-        if delta_paths:
-            df = self._resolve(
-                self._scan(snap, base_paths + delta_paths, with_internals=True), snap
-            )
-        else:
-            df = self._scan(snap, base_paths, with_internals=False)
-        pred = None
-        for c in snap.key_cols:
-            p = F.col(c) == F.lit(key[c]).cast(types[c])
-            pred = p if pred is None else (pred & p)
-        return df.filter(pred)
+        with step(self.spark, "table.read_key"):
+            bucket = self._local_bucket(vals, key_types, snap.n_buckets)
+            if bucket is None:
+                row = self.spark.range(1).select(
+                    *[F.lit(key[c]).cast(types[c]).alias(c) for c in snap.key_cols]
+                )
+                bucket = row.select(bucket_expr(snap.key_cols, snap.n_buckets)).collect()[0][0]
+            base_paths, _, _ = self._point_base_paths(snap, int(bucket), key, types)
+            delta_paths = [
+                os.path.join(self.root, p)
+                for p in snap.delta_files.get(str(int(bucket)), [])
+            ]
+            if delta_paths:
+                df = self._resolve(
+                    self._scan(snap, base_paths + delta_paths, with_internals=True), snap
+                )
+            else:
+                df = self._scan(snap, base_paths, with_internals=False)
+            pred = None
+            for c in snap.key_cols:
+                p = F.col(c) == F.lit(key[c]).cast(types[c])
+                pred = p if pred is None else (pred & p)
+            return df.filter(pred)
 
     def read_key_local(
         self, key: dict, snapshot: Snapshot | None = None
@@ -1139,7 +1142,8 @@ class LakeTable:
         vals = [key[c] for c in snap.key_cols]
         bucket = self._local_bucket(vals, key_types, snap.n_buckets)
         if bucket is None:
-            rows = self.read_key(key, snapshot=snap).collect()
+            with step(self.spark, "table.read_key"):
+                rows = self.read_key(key, snapshot=snap).collect()
             return rows[0].asDict() if rows else None
 
         import pyarrow as pa
@@ -1341,11 +1345,12 @@ class LakeTable:
 
         # Net winner per key across the in-range deltas (same W1 primitive
         # as read-time resolution, tombstones kept for classification).
-        deltas = self._scan(
-            to_snap,
-            [os.path.join(self.root, p) for ps in delta_files.values() for p in ps],
-            with_internals=True,
-        )
+        with step(self.spark, "table.changes"):
+            deltas = self._scan(
+                to_snap,
+                [os.path.join(self.root, p) for ps in delta_files.values() for p in ps],
+                with_internals=True,
+            )
         w = F.struct(*[F.col(c) for c in val_cols], F.col(TOMBSTONE_COL))
         net = (
             deltas.groupBy(*key_cols)
@@ -1363,7 +1368,8 @@ class LakeTable:
         # ``from``'s bucket spec; across a rebucket those ids belong to a
         # different layout, so probe all buckets.
         touched = sorted(int(b) for b in delta_files) if spec_stable else None
-        prior_scan = self.read(snapshot=from_snap, buckets=touched)
+        with step(self.spark, "table.changes"):
+            prior_scan = self.read(snapshot=from_snap, buckets=touched)
         if with_preimage:
             # ``from`` may predate schema evolution: columns added since
             # null-fill, widened columns cast up to the ``to`` type, so the
@@ -2030,108 +2036,109 @@ class LakeTable:
         table_cols = [f.name for f in cur.schema.fields]
         val_cols = [c for c in table_cols if c not in key_cols]
 
-        updates = self._conform_types(updates, cur)
-        upd = updates.withColumn(BUCKET_COL, bucket_expr(key_cols, cur.n_buckets))
-        if touched_buckets is None:
-            touched = sorted(r[0] for r in upd.select(BUCKET_COL).distinct().collect())
-        else:
-            touched = sorted(touched_buckets)
+        with step(self.spark, "table.merge"):
+            updates = self._conform_types(updates, cur)
+            upd = updates.withColumn(BUCKET_COL, bucket_expr(key_cols, cur.n_buckets))
+            if touched_buckets is None:
+                touched = sorted(r[0] for r in upd.select(BUCKET_COL).distinct().collect())
+            else:
+                touched = sorted(touched_buckets)
 
-        new_files: dict[str, list[str]] = {
-            b: list(paths) for b, paths in cur.files.items() if int(b) not in touched
-        }
-        commit_id = self._alloc_commit_id(cur)
-        totals = {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0,
-                  "rows_delete_noop": 0}
-        new_rels: list[str] = []
+            new_files: dict[str, list[str]] = {
+                b: list(paths) for b, paths in cur.files.items() if int(b) not in touched
+            }
+            commit_id = self._alloc_commit_id(cur)
+            totals = {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0,
+                      "rows_delete_noop": 0}
+            new_rels: list[str] = []
 
-        if touched:
-            base = self.read_buckets(touched)
-            # disambiguate update-side columns (keys included) before the join
-            u = upd.select(
-                *[F.col(c).alias(f"_u_{c}") for c in key_cols],
-                F.col(BUCKET_COL).alias("_u_bucket"),
-                F.col(op_col).alias("_u_op"),
-                *[F.col(c).alias(f"_u_{c}") for c in val_cols],
-            ).withColumn("_u_present", F.lit(True))
-            b = base.withColumn("_b_present", F.lit(True))
+            if touched:
+                base = self.read_buckets(touched)
+                # disambiguate update-side columns (keys included) before the join
+                u = upd.select(
+                    *[F.col(c).alias(f"_u_{c}") for c in key_cols],
+                    F.col(BUCKET_COL).alias("_u_bucket"),
+                    F.col(op_col).alias("_u_op"),
+                    *[F.col(c).alias(f"_u_{c}") for c in val_cols],
+                ).withColumn("_u_present", F.lit(True))
+                b = base.withColumn("_b_present", F.lit(True))
 
-            # null-safe key equality: a NULL merge key must match its
-            # base row exactly as merge-on-read's groupBy resolution
-            # groups it — plain `=` never matches NULL, silently turning
-            # deletes of such keys into no-ops and upserts into
-            # accumulating duplicates (CoW would diverge from MoR on the
-            # same input). <=> is still an equi-join key for the planner.
-            joined = b.join(
-                u,
-                on=functools.reduce(
-                    operator.and_,
-                    [F.col(c).eqNullSafe(F.col(f"_u_{c}")) for c in key_cols],
-                ),
-                how="full_outer",
-            )
-            u_here = F.col("_u_present").isNotNull()
-            b_here = F.col("_b_present").isNotNull()
-            # coalesce: a NULL op must mean "not a delete", not SQL NULL —
-            # otherwise filter(~(u_here & is_del)) silently DROPS the base
-            # row (a phantom delete) while every classification counter
-            # skips it (F.count(F.when(NULL, 1)) counts nothing)
-            is_del = F.coalesce(F.col("_u_op") == delete_op, F.lit(False))
-
-            clf_aggs = [
-                F.count(F.when(u_here & ~b_here & ~is_del, 1)).alias("rows_inserted"),
-                F.count(F.when(u_here & b_here & ~is_del, 1)).alias("rows_updated"),
-                F.count(F.when(u_here & b_here & is_del, 1)).alias("rows_deleted"),
-                F.count(F.when(u_here & ~b_here & is_del, 1)).alias("rows_delete_noop"),
-                # contract check, free on the write action: an update row
-                # whose bucket the caller's touched_buckets missed would be
-                # written but never registered (silent row loss) — count it
-                # here and refuse to commit below
-                F.count(
-                    F.when(u_here & ~F.col("_u_bucket").isin(touched), 1)
-                ).alias("rows_outside_touched"),
-            ]
-            obs = Observation()
-            observed = joined.observe(obs, *clf_aggs)
-            result = observed.filter(~(u_here & is_del)).select(
-                *[
-                    F.coalesce(F.col(c), F.col(f"_u_{c}")).alias(c)
-                    for c in key_cols
-                ],
-                *[
-                    F.when(u_here, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c)
-                    for c in val_cols
-                ],
-                F.lit(commit_id).cast("long").alias(SEQ_COL),
-                F.lit(False).alias(TOMBSTONE_COL),
-                F.coalesce(
-                    F.col("_u_bucket"), bucket_expr(key_cols, cur.n_buckets)
-                ).alias(BUCKET_COL),
-            )
-
-            # co-locate buckets before the partitioned write: one shuffle,
-            # files land one-per-bucket-per-task. A CoW rewrite of a
-            # touched bucket is delta-free, so compact will never revisit
-            # it — restore the cluster sort HERE or those buckets lose
-            # data skipping until a manual re-cluster (the sort is a local
-            # add-on to a rewrite already being paid for; boundaries are
-            # spec literals)
-            _, written = self._write_buckets(
-                result.repartition(len(touched), F.col(BUCKET_COL)),
-                cur, commit_id, "commit", spec=cur.cluster_spec,
-            )
-            totals = observed_metrics(obs, joined, clf_aggs)
-            outside = totals.pop("rows_outside_touched", 0)
-            if outside:
-                # files are written but NO snapshot references them (the
-                # orphan commit dir is GC'd by expire_snapshots) — refuse
-                # to commit a merge that would drop these rows
-                raise ValueError(
-                    f"touched_buckets missed {outside} update row(s); "
-                    "pass the full bucket set (or None to derive it)"
+                # null-safe key equality: a NULL merge key must match its
+                # base row exactly as merge-on-read's groupBy resolution
+                # groups it — plain `=` never matches NULL, silently turning
+                # deletes of such keys into no-ops and upserts into
+                # accumulating duplicates (CoW would diverge from MoR on the
+                # same input). <=> is still an equi-join key for the planner.
+                joined = b.join(
+                    u,
+                    on=functools.reduce(
+                        operator.and_,
+                        [F.col(c).eqNullSafe(F.col(f"_u_{c}")) for c in key_cols],
+                    ),
+                    how="full_outer",
                 )
-            new_files.update(written)
-            new_rels = [p for rels in written.values() for p in rels]
+                u_here = F.col("_u_present").isNotNull()
+                b_here = F.col("_b_present").isNotNull()
+                # coalesce: a NULL op must mean "not a delete", not SQL NULL —
+                # otherwise filter(~(u_here & is_del)) silently DROPS the base
+                # row (a phantom delete) while every classification counter
+                # skips it (F.count(F.when(NULL, 1)) counts nothing)
+                is_del = F.coalesce(F.col("_u_op") == delete_op, F.lit(False))
+
+                clf_aggs = [
+                    F.count(F.when(u_here & ~b_here & ~is_del, 1)).alias("rows_inserted"),
+                    F.count(F.when(u_here & b_here & ~is_del, 1)).alias("rows_updated"),
+                    F.count(F.when(u_here & b_here & is_del, 1)).alias("rows_deleted"),
+                    F.count(F.when(u_here & ~b_here & is_del, 1)).alias("rows_delete_noop"),
+                    # contract check, free on the write action: an update row
+                    # whose bucket the caller's touched_buckets missed would be
+                    # written but never registered (silent row loss) — count it
+                    # here and refuse to commit below
+                    F.count(
+                        F.when(u_here & ~F.col("_u_bucket").isin(touched), 1)
+                    ).alias("rows_outside_touched"),
+                ]
+                obs = Observation()
+                observed = joined.observe(obs, *clf_aggs)
+                result = observed.filter(~(u_here & is_del)).select(
+                    *[
+                        F.coalesce(F.col(c), F.col(f"_u_{c}")).alias(c)
+                        for c in key_cols
+                    ],
+                    *[
+                        F.when(u_here, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c)
+                        for c in val_cols
+                    ],
+                    F.lit(commit_id).cast("long").alias(SEQ_COL),
+                    F.lit(False).alias(TOMBSTONE_COL),
+                    F.coalesce(
+                        F.col("_u_bucket"), bucket_expr(key_cols, cur.n_buckets)
+                    ).alias(BUCKET_COL),
+                )
+
+                # co-locate buckets before the partitioned write: one shuffle,
+                # files land one-per-bucket-per-task. A CoW rewrite of a
+                # touched bucket is delta-free, so compact will never revisit
+                # it — restore the cluster sort HERE or those buckets lose
+                # data skipping until a manual re-cluster (the sort is a local
+                # add-on to a rewrite already being paid for; boundaries are
+                # spec literals)
+                _, written = self._write_buckets(
+                    result.repartition(len(touched), F.col(BUCKET_COL)),
+                    cur, commit_id, "commit", spec=cur.cluster_spec,
+                )
+                totals = observed_metrics(obs, joined, clf_aggs)
+                outside = totals.pop("rows_outside_touched", 0)
+                if outside:
+                    # files are written but NO snapshot references them (the
+                    # orphan commit dir is GC'd by expire_snapshots) — refuse
+                    # to commit a merge that would drop these rows
+                    raise ValueError(
+                        f"touched_buckets missed {outside} update row(s); "
+                        "pass the full bucket set (or None to derive it)"
+                    )
+                new_files.update(written)
+                new_rels = [p for rels in written.values() for p in rels]
 
         # CoW rewrite of a touched bucket folds in and supersedes its deltas
         new_deltas = {
@@ -2258,9 +2265,8 @@ class LakeTable:
             if bucket_aligned
             else delta.repartition(cur.n_buckets, F.col(BUCKET_COL))
         )
-        with phase("mor.write_action"):
+        with step(self.spark, "table.mor_write"):
             rel_dir, files = self._write_buckets(to_write, cur, commit_id, "delta")
-        with phase("mor.obs_get"):
             totals = observed_metrics(obs, updates, clf_aggs)
         return {"commit_id": commit_id, "rel_dir": rel_dir, "files": files, "totals": totals}
 
@@ -2299,13 +2305,12 @@ class LakeTable:
         for bk, rels in write["files"].items():
             new_deltas.setdefault(bk, []).extend(rels)
 
-        with phase("mor.commit"):
-            snap = cur.child(
-                snapshot_id=commit_id,
-                delta_files=new_deltas,
-                summary={"operation": "merge-mor", **totals, **(summary or {})},
-            )
-            self._publish(snap, expected_head=cur.snapshot_id)
+        snap = cur.child(
+            snapshot_id=commit_id,
+            delta_files=new_deltas,
+            summary={"operation": "merge-mor", **totals, **(summary or {})},
+        )
+        self._publish(snap, expected_head=cur.snapshot_id)
         return snap, {"totals": totals}
 
     def compact(self, min_deltas: int = 1, summary: dict | None = None) -> Snapshot | None:
@@ -2326,22 +2331,23 @@ class LakeTable:
         # bucket-fused resolve: LWW resolution and write alignment share
         # one shuffle (resolve-then-repartition would move the whole
         # victim set through two exchanges — measured ~2x compaction wall)
-        paths, _ = self._bucket_paths(cur, victims, include_deltas=True)
-        resolved = (
-            self._resolve(
-                self._scan(cur, paths, with_internals=True), cur, fuse_bucket=True
+        with step(self.spark, "table.compact"):
+            paths, _ = self._bucket_paths(cur, victims, include_deltas=True)
+            resolved = (
+                self._resolve(
+                    self._scan(cur, paths, with_internals=True), cur, fuse_bucket=True
+                )
+                .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
+                .withColumn(TOMBSTONE_COL, F.lit(False))
             )
-            .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
-            .withColumn(TOMBSTONE_COL, F.lit(False))
-        )
-        # maintain the active clustering through compaction: one
-        # within-partition sort on the already-bucket-fused stream (no
-        # extra shuffle) keeps file/row-group min-max stats tight instead
-        # of silently degrading data skipping until the next manual
-        # OPTIMIZE
-        _, written = self._write_buckets(
-            resolved, cur, commit_id, "commit", spec=cur.cluster_spec
-        )
+            # maintain the active clustering through compaction: one
+            # within-partition sort on the already-bucket-fused stream (no
+            # extra shuffle) keeps file/row-group min-max stats tight instead
+            # of silently degrading data skipping until the next manual
+            # OPTIMIZE
+            _, written = self._write_buckets(
+                resolved, cur, commit_id, "commit", spec=cur.cluster_spec
+            )
         new_files = {b: list(p) for b, p in cur.files.items()}
         new_deltas = {
             b: list(p) for b, p in cur.delta_files.items() if int(b) not in victims

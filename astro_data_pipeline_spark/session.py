@@ -10,10 +10,9 @@ tests, bench, driver — runs the same engine configuration.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _scratch_dir() -> str:
@@ -49,14 +48,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32;
+    ``shuffle_partitions`` to ``min(2 * cpus, 64)``. ``extra_conf`` is the
+    one way to override any other setting below.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(min(cpus * 2, 64)))
-        )
+        shuffle_partitions = min(cpus * 2, 64)
     # SPARK_GRAFT_MASTER overrides the thread-local stand-in, e.g.
     # local-cluster[4,8,8192] for REAL separate executor JVMs (the
     # north rule's N-vs-4N *executors* shape) or spark://host:7077.
@@ -88,11 +87,8 @@ def get_spark(
         # cluster at 100 TB; on content-heavy logs a 128MB split decodes
         # ~0.5 GB of strings in ONE task, capping scan parallelism at
         # file_size/128MB tasks — under-using a 32-core box on the
-        # sandbox-sized inputs. Overridable per run.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"),
-        )
+        # sandbox-sized inputs.
+        .config("spark.sql.files.maxPartitionBytes", "33554432")
         # Concurrent-task throttle for memory-bandwidth-bound stages.
         # The replay's heavy stage (string decode + sort + Arrow + parquet
         # encode) saturates a single socket's memory bus at ~8 concurrent
@@ -100,8 +96,8 @@ def get_spark(
         # throughput (measured: local[32] 1.6x slower than local[8] at
         # task.cpus=1; equal at task.cpus=4). On a multi-executor cluster
         # each executor has its own bus, so the default stays 1; fat
-        # single-node deployments should raise it.
-        .config("spark.task.cpus", os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
+        # single-node deployments should raise it (``extra_conf``).
+        .config("spark.task.cpus", "1")
         # Shuffle/scratch on tmpfs when available: this sandbox's virtual
         # disk is shared with co-tenants whose IO bursts stall our shuffle
         # writes; a real cluster node owns its local NVMe. RAM-backed
@@ -113,18 +109,12 @@ def get_spark(
         # bytes lifted the 32-core replay 67% (306k -> 512k events/s at
         # sf1.0) while costing nothing at 8 cores. The same trade wins on
         # real clusters whenever shuffle crosses a network.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"),
-        )
+        .config("spark.io.compression.codec", "zstd")
         # Same bytes-for-CPU trade on the table files themselves: zstd
         # parquet output measured +11% replay throughput over snappy at 32
         # cores (A/B at sf1.0), and smaller base/delta files are a pure
         # win for the read path at 100 TB.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Parquet dictionary encoding is wasted work on near-unique
         # columns: the writer hashes every value into a per-chunk
         # dictionary that always overflows and falls back to PLAIN, so
@@ -163,6 +153,30 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+@contextmanager
+def step(spark: SparkSession, name: str):
+    """Tag every Spark job this thread submits inside the block with
+    ``adps:<name>`` (``<layer>.<step>``, e.g. ``table.mor_write``).
+
+    A job tag, not the job description or group: those belong to the
+    caller (cancellation groups, a profiler's own descriptions), and a
+    tag sits beside both. Tags are per thread, so a step opened in a
+    pool thread marks only that thread's jobs, and nested steps add
+    their tags side by side. The tag is removed on exit only if this
+    call added it. An offline event log names every job's tags in the
+    ``spark.job.tags`` property of its ``SparkListenerJobStart``."""
+    sc = spark.sparkContext
+    tag = f"adps:{name}"
+    added = tag not in sc.getJobTags()
+    if added:
+        sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        if added:
+            sc.removeJobTag(tag)
 
 
 def materialize_barrier(df, eager: bool = False):

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..cdc.runner import CdcRunner
 from ..lakehouse import LakeTable
 from ..lakehouse.table import ledger_records
+from ..session import step
 
 
 class StreamApplier:
@@ -110,11 +111,12 @@ class StreamApplier:
         from ..cdc.apply import valid_predicate
 
         ok = valid_predicate()
-        lo_hi = batch_df.agg(
-            F.min(F.when(ok, F.col("lsn"))),
-            F.max(F.when(ok, F.col("lsn"))),
-            F.count("*"),
-        ).collect()[0]
+        with step(batch_df.sparkSession, "streaming.bounds"):
+            lo_hi = batch_df.agg(
+                F.min(F.when(ok, F.col("lsn"))),
+                F.max(F.when(ok, F.col("lsn"))),
+                F.count("*"),
+            ).collect()[0]
         if int(lo_hi[2]) == 0:
             return None
         if lo_hi[0] is None:

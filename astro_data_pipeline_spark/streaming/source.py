@@ -15,7 +15,7 @@ net per-key diff — downstream state reconstruction is one LWW collapse
 by ``(key, max _change_commit)``, the same primitive everything else in
 the engine uses (and the stateful streaming twin already implements).
 
-Safety contract (shared by both readers, and by ``LakeTable.changes``):
+Safety contract (shared with ``LakeTable.changes``):
 a batch ``(start, end]`` is ``changelog_commits(commits_between(...))``
 from ``lakehouse/table.py`` — see ``commits_between`` for the walk and
 its refusals (non-ancestor, restore-undone or expired offsets) and
@@ -23,15 +23,9 @@ its refusals (non-ancestor, restore-undone or expired offsets) and
 commits are transparent; a CoW merge or unknown operation fails the
 stream).
 
-Two readers behind one format:
-
-- default: a ``SimpleDataSourceStreamReader`` reading on the driver —
-  right for changelog tailing, where a micro-batch is one commit's
-  bounded delta set.
-- ``.option("partitioned", "true")``: a ``DataSourceStreamReader``
-  whose offset planning is identical but whose batches fan out one
-  ``InputPartition`` PER DELTA FILE, read executor-side — the scale
-  path for fan-in of large commits.
+Each micro-batch fans out one ``InputPartition`` per delta file, read
+executor-side: the rows never pass through the driver, however large
+the commits in the batch.
 
 Usage::
 
@@ -43,7 +37,6 @@ Usage::
         spark.readStream.format("laketable_changes")
         .option("root", table.root)
         .option("start_snapshot", "0")   # optional; default: tail from now
-        .option("partitioned", "true")   # optional; default: driver-side
         .load()
     )
 """
@@ -52,15 +45,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 from ..lakehouse.table import (
     changelog_commits,
@@ -109,48 +96,15 @@ def _file_rows(root: str, rel: str, field_names: list[str]):
         ) + (int(row["_seq"]), bool(row.get("_tombstone") or False))
 
 
-class _ChangelogReader(SimpleDataSourceStreamReader):
-    """Driver-side changelog reader: offsets are snapshot ids; a batch is
-    the delta rows of the commits in ``(start, end]``, in commit order."""
-
-    def __init__(self, root: str, start_snapshot: int | None, field_names: list[str]):
-        self.root = root
-        self.start_snapshot = start_snapshot
-        self.field_names = field_names
-
-    def initialOffset(self) -> dict:
-        if self.start_snapshot is not None:
-            return {"snapshot_id": int(self.start_snapshot)}
-        return {"snapshot_id": _head(self.root)}
-
-    def read(self, start: dict):
-        end = {"snapshot_id": _head(self.root)}
-        return iter(self._rows(start["snapshot_id"], end["snapshot_id"])), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # recovery replay of a planned-but-uncommitted batch: offsets are
-        # snapshot ids over immutable history, so the re-read is exact
-        return iter(self._rows(start["snapshot_id"], end["snapshot_id"]))
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing to clean: history lives in the table's snapshots
-
-    def _rows(self, s0: int, s1: int) -> list[tuple]:
-        out: list[tuple] = []
-        for rel in _changelog_files(self.root, s0, s1):
-            out.extend(_file_rows(self.root, rel, self.field_names))
-        return out
-
-
 class _DeltaFilePartition(InputPartition):
     def __init__(self, rel: str | None):
         self.rel = rel
 
 
-class _PartitionedChangelogReader(DataSourceStreamReader):
-    """Executor-side changelog reader: identical offset planning, but
-    each micro-batch fans out one InputPartition per delta file — the
-    rows never pass through the driver."""
+class _ChangelogReader(DataSourceStreamReader):
+    """Changelog reader: offsets are snapshot ids; a batch is the delta
+    rows of the commits in ``(start, end]``, one InputPartition per delta
+    file, listed in commit order (every row carries its commit seq)."""
 
     def __init__(self, root: str, start_snapshot: int | None, field_names: list[str]):
         self.root = root
@@ -202,24 +156,13 @@ class LakeTableChangesDataSource(DataSource):
             raise FileNotFoundError(f"no committed snapshot at {root}")
         return T.StructType(list(snap.schema.fields) + _INTERNALS)
 
-    def _reader_args(self, schema: T.StructType):
-        root = self.options["root"]
+    def streamReader(self, schema: T.StructType) -> _ChangelogReader:
         start = self.options.get("start_snapshot")
-        field_names = [f.name for f in schema.fields[: -len(_INTERNALS)]]
-        return root, (int(start) if start is not None else None), field_names
-
-    def streamReader(self, schema: T.StructType) -> _PartitionedChangelogReader:
-        if str(self.options.get("partitioned", "false")).lower() != "true":
-            # raising THIS error class is the documented fallback switch:
-            # the runner then asks for simpleStreamReader
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
-        return _PartitionedChangelogReader(*self._reader_args(schema))
-
-    def simpleStreamReader(self, schema: T.StructType) -> _ChangelogReader:
-        return _ChangelogReader(*self._reader_args(schema))
+        return _ChangelogReader(
+            self.options["root"],
+            int(start) if start is not None else None,
+            [f.name for f in schema.fields[: -len(_INTERNALS)]],
+        )
 
 
 def register_changelog_source(spark: SparkSession) -> str:

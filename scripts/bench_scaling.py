@@ -368,8 +368,10 @@ def write_report(pairs: list[tuple[dict, dict]], sf: float, path: str) -> list[d
             "ways; both attacks lost wall-clock, which pins the plateau on\n"
             "aggregate memory traffic (scan-side string decode + parquet\n"
             "encode), not on the exchange:\n\n"
-            "- Measured shuffle volume (`scripts/measure_shuffle_bytes.py`,\n"
-            "  UI REST stage metrics, sf1.0): the whole replay moves\n"
+            "- Measured shuffle volume (historical: Spark UI REST stage\n"
+            "  metrics, sf1.0, read by a script deleted after commit `5583cd1`;\n"
+            "  `scripts/cdcbench_ab.py` now reports shuffle-write bytes per\n"
+            "  engine step from a traced event log): the whole replay moves\n"
             "  **70.1 compressed bytes/event** through its single\n"
             "  content-bearing exchange (429 MB total for 6.12M events) —\n"
             "  ~36 MB/s at the 32-core wall time, two orders below this\n"

@@ -9,12 +9,15 @@
 side that goes first alternating by seed (even seeds: parent first). Each
 run is appended to ``--out`` as it finishes, so an interrupted batch keeps
 what it measured. A traced run also records, from the checkout's event
-log, every job described as the matview refresh with its input bytes and
-every file-listing job with the descriptions of the jobs around it.
+log, every job described as the matview refresh with its input bytes,
+every file-listing job with the descriptions of the jobs around it, and
+per engine step (the ``adps:<layer>.<step>`` job tags the engine sets) the
+jobs, tasks, executor CPU, input bytes and shuffle-write bytes, plus the
+jobs that carry no engine tag.
 
 ``render`` skips runs that carry an ``excluded`` reason and prints the
-Markdown tables: each traced pair's refresh
-figures, every untraced run per seed, then per workload and metric the
+Markdown tables: each traced pair's refresh figures and each traced
+run's engine steps, every untraced run per seed, then per workload and metric the
 parent and change medians, the parent's interquartile range and the
 pairs the change wins.
 """
@@ -30,6 +33,7 @@ import subprocess
 import sys
 
 REFRESH = "lakehouse.matview:refresh"
+STEP_FIGURES = ("tasks", "executor_cpu_s", "input_bytes", "shuffle_write_bytes")
 LOWER_IS_BETTER = ("setup_s", "ingest_cpu_ms_per_event", "bytes_per_event")
 
 
@@ -39,8 +43,12 @@ def _seeds(spec: str) -> list[int]:
 
 
 def _jobs(checkout: str) -> dict:
-    """Refresh jobs (input bytes) and listing jobs from the event log the
-    traced run left in ``checkout``."""
+    """From the event log the traced run left in ``checkout``: refresh
+    jobs (input bytes), listing jobs, the per-step totals of the jobs the
+    engine tagged ``adps:<layer>.<step>`` and the jobs with no such tag.
+
+    A job inside nested steps carries all their tags; it is counted once,
+    under the sorted tags joined by ``+``."""
     paths = glob.glob(os.path.join(checkout, "cdcbench", ".work", "eventlog", "*"))
     jobs: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
@@ -49,15 +57,25 @@ def _jobs(checkout: str) -> dict:
             ev = json.loads(line)
             kind = ev.get("Event")
             if kind == "SparkListenerJobStart":
-                desc = (ev.get("Properties") or {}).get("spark.job.description") or ""
-                jobs[ev["Job ID"]] = {"desc": desc, "input_bytes": 0}
+                props = ev.get("Properties") or {}
+                tags = (props.get("spark.job.tags") or "").split(",")
+                jobs[ev["Job ID"]] = {
+                    "desc": props.get("spark.job.description") or "",
+                    "step": "+".join(sorted(t[5:] for t in tags if t.startswith("adps:"))),
+                    **dict.fromkeys(STEP_FIGURES, 0),
+                }
                 for sid in ev.get("Stage IDs", []):
                     stage_job.setdefault(sid, ev["Job ID"])
             elif kind == "SparkListenerTaskEnd" and ev.get("Task Metrics"):
                 jid = stage_job.get(ev["Stage ID"])
                 if jid in jobs:
-                    read = ev["Task Metrics"].get("Input Metrics", {}).get("Bytes Read", 0)
-                    jobs[jid]["input_bytes"] += read
+                    m, j = ev["Task Metrics"], jobs[jid]
+                    j["tasks"] += 1
+                    j["executor_cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
+                    j["input_bytes"] += m.get("Input Metrics", {}).get("Bytes Read", 0)
+                    j["shuffle_write_bytes"] += m.get("Shuffle Write Metrics", {}).get(
+                        "Shuffle Bytes Written", 0
+                    )
     order = sorted(jobs)
 
     def near(i: int, step: int) -> str | None:
@@ -74,7 +92,16 @@ def _jobs(checkout: str) -> dict:
         if jobs[j]["desc"].startswith("Listing leaf files")
     ]
     refresh = [jobs[j]["input_bytes"] for j in order if jobs[j]["desc"] == REFRESH]
-    return {"refresh_job_input_bytes": refresh, "listing_jobs": listing}
+    steps: dict[str, dict] = {}
+    for j in order:
+        if jobs[j]["step"]:
+            st = steps.setdefault(jobs[j]["step"], dict.fromkeys(("jobs", *STEP_FIGURES), 0))
+            st["jobs"] += 1
+            for k in STEP_FIGURES:
+                st[k] += jobs[j][k]
+    untagged = [{"job": j, "desc": jobs[j]["desc"][:60]} for j in order if not jobs[j]["step"]]
+    return {"refresh_job_input_bytes": refresh, "listing_jobs": listing,
+            "steps": steps, "untagged_jobs": untagged}
 
 
 def _run_one(checkout: str, workload: str, seed: int, trace: int) -> dict:
@@ -146,6 +173,23 @@ def _render_traced(runs: list[dict]) -> None:
         }
         for name, cell in cells.items():
             print(f"| {name} | {cell(side['parent'])} | {cell(side['change'])} |")
+        for x in ("parent", "change"):
+            _render_steps(x, side[x])
+
+
+def _render_steps(side: str, r: dict) -> None:
+    """The engine's tagged steps of one traced run, and its untagged jobs
+    (a run of code that sets no tags has no steps and prints nothing)."""
+    if not r.get("steps"):
+        return
+    print(f"\n{side}: jobs per engine step\n")
+    print("| step | jobs | " + " | ".join(STEP_FIGURES) + " |")
+    print("|---|---|" + "---|" * len(STEP_FIGURES))
+    for name, st in sorted(r["steps"].items(), key=lambda kv: -kv[1]["executor_cpu_s"]):
+        print(f"| `{name}` | {st['jobs']} | {st['tasks']} | {st['executor_cpu_s']:.3f} | "
+              f"{st['input_bytes']:,} | {st['shuffle_write_bytes']:,} |")
+    print(f"\nuntagged jobs ({len(r['untagged_jobs'])}): "
+          + "; ".join(f"{j['job']} {j['desc'] or '(no description)'}" for j in r["untagged_jobs"]))
 
 
 def render(args) -> None:

@@ -908,3 +908,76 @@ def test_hot_key_detection_ignores_quarantine_rows(spark, tmp_path):
     runner = CdcRunner(spark, None, run_id="nullhot")
     hot = runner.detect_hot_keys(events)
     assert hot == [] or all(r is not None and p is not None for r, p in hot)
+
+
+def test_runner_rejects_unknown_mode(spark):
+    # a real raise: an assert would vanish under python -O
+    with pytest.raises(ValueError, match="'mor' or 'cow'"):
+        CdcRunner(spark, None, mode="bogus")
+
+
+def test_engine_jobs_carry_step_tags(spark, tmp_path, fixture_meta):
+    """Every job a replay (pool threads included) and a view refresh
+    submit carries an ``adps:<layer>.<step>`` job tag, beside the caller's
+    own job group and description; a step whose body raises leaves the
+    thread's tags as it found them."""
+    from astro_data_pipeline_spark.lakehouse.matview import AggSpec, IncrementalAggView
+    from astro_data_pipeline_spark.session import step
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs_after(floor: int) -> dict[int, tuple]:
+        """job id -> (tags, job group, description) of every job above
+        ``floor``, from the status store (newest first)."""
+        jsc.listenerBus().waitUntilEmpty()
+        opt = lambda o: o.get() if o.isDefined() else None  # noqa: E731
+        out = {}
+        for j in sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            jsc.statusStore().jobsList(None)
+        ):
+            if j.jobId() <= floor:
+                break
+            tags = set(j.jobTags().mkString(",").split(","))
+            out[j.jobId()] = (tags, opt(j.jobGroup()), opt(j.description()))
+        return out
+
+    table = _new_table(spark, tmp_path)
+    CdcRunner(spark, table, run_id="seed").replay(
+        read_event_log(spark, fixture_meta["v1_path"]), n_batches=1
+    )
+    view = IncrementalAggView.create(
+        spark, str(tmp_path / "mv"), table, ["repo"],
+        [AggSpec("count", None, "n"), AggSpec("max", "last_lsn", "hi")],
+    )
+    jsc.listenerBus().waitUntilEmpty()
+    floor = jsc.statusStore().jobsList(None).head().jobId()  # the newest job so far
+    sc.setJobGroup("g", "d")
+    try:
+        CdcRunner(spark, table, run_id="tagged").replay(
+            read_event_log(spark, fixture_meta["v2_path"]), n_batches=3
+        )
+        assert not view.refresh()["noop"]
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = jobs_after(floor)
+    assert jobs
+    untagged = [j for j, (tags, _, _) in jobs.items()
+                if not any(t.startswith("adps:") for t in tags)]
+    assert untagged == []
+    all_tags = set().union(*(tags for tags, _, _ in jobs.values()))
+    assert {"adps:runner.write", "adps:table.mor_write", "adps:matview.delta",
+            "adps:matview.merge"} <= all_tags
+    # pool threads carry their own tags and none of the caller's group
+    pool = {"adps:runner.write", "adps:runner.hot_keys"}
+    main = [(g, d) for tags, g, d in jobs.values() if not tags & pool]
+    assert main and all(gd == ("g", "d") for gd in main)
+
+    before = set(sc.getJobTags())
+    with pytest.raises(RuntimeError, match="boom"):
+        with step(spark, "test.outer"):
+            with step(spark, "test.outer"):  # already set: left to the outer
+                pass
+            assert "adps:test.outer" in sc.getJobTags()
+            raise RuntimeError("boom")
+    assert set(sc.getJobTags()) == before

@@ -163,37 +163,25 @@ def test_expired_offset_fails_loudly_not_silently(spark, tmp_path, table):
         table.changes(2)
 
 
-def test_partitioned_reader_matches_simple_mode(spark, tmp_path, table):
-    """option('partitioned','true') fans each micro-batch out one
-    InputPartition per delta file, read executor-side — same offsets,
-    same rows, same restart semantics as the driver-side reader."""
-    fmt = register_changelog_source(spark)
-
-    def drain(out, ck):
-        q = (
-            spark.readStream.format(fmt)
-            .option("root", table.root)
-            .option("start_snapshot", "0")
-            .option("partitioned", "true")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    out, ck = str(tmp_path / "pout"), str(tmp_path / "pck")
-    got = drain(out, ck)
-    simple = _drain(spark, table, str(tmp_path / "sout"), str(tmp_path / "sck"), start=0)
-    assert got.exceptAll(simple).count() == 0
-    assert simple.exceptAll(got).count() == 0
+def test_executor_side_reader_rows_and_restart(spark, tmp_path, table):
+    """Each micro-batch fans out one InputPartition per delta file, read
+    executor-side: exactly the fixture's three commits' delta rows, and
+    on restart exactly the new commit's."""
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    got = _drain(spark, table, out, ck, start=0)
+    cols = ["k", "v", "_change_commit", "_is_delete"]
+    rows = sorted((tuple(r) for r in got.select(*cols).collect()), key=lambda t: (t[2], t[0]))
+    assert rows == [
+        ("a", 1, 2, False),
+        ("b", 2, 2, False),
+        ("a", 10, 3, False),
+        ("c", 3, 3, False),
+        ("b", None, 4, True),
+    ]
     assert got.count() == 5
     # restart: only new commits, executor-side
     table.merge_mor(_up(spark, [("p", 1, "insert")]))
-    got2 = drain(out, ck)
+    got2 = _drain(spark, table, out, ck)
     assert got2.count() == 6
     assert got2.filter(F.col("k") == "p").count() == 1
 
