@@ -436,7 +436,7 @@ class IncrementalAggView:
         n_can = summ["n_can"]
         # stored state for exactly the touched groups: bucket-pruned read
         with step(self.spark, "matview.stored"):
-            stored = self.table.read_buckets(tb) if tb else self.table.read()
+            stored = self.table.read(snapshot=vsnap, buckets=tb if tb else None)
             merged = _null_safe_join(delta, stored, gcols, "left")
 
         n_new = F.coalesce(F.col(self._N), F.lit(0)) + F.col("_dn")

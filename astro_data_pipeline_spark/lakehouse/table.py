@@ -69,6 +69,10 @@ Layout::
 
 ``LakeTable._write_buckets`` states the attempt-directory rule; only
 the winning attempt's files enter the snapshot manifest.
+``LakeTable._plan_read`` is the one statement of read-file selection:
+every snapshot read (full, bucket, point, range, compaction, clustering)
+scans the files it picks, and ``_read_plan`` resolves them. The one
+exception is ``changes()``, whose delta scan picks files by commit.
 """
 
 from __future__ import annotations
@@ -83,7 +87,7 @@ import random
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -201,6 +205,25 @@ class Snapshot:
             cluster_spec=d.get("cluster_spec"),
             file_stats=d.get("file_stats", {}),
         )
+
+
+class _ReadPlan(NamedTuple):
+    """The files one snapshot read scans (``LakeTable._plan_read``):
+    the kept base files and every delta of the same buckets, as
+    absolute paths, plus how many base files the stats pruned from."""
+
+    base: list[str]
+    deltas: list[str]
+    base_total: int
+
+    def report(self) -> dict:
+        kept = len(self.base)
+        return {
+            "base_files": self.base_total,
+            "kept": kept,
+            "pruned": self.base_total - kept,
+            "delta_files": len(self.deltas),
+        }
 
 
 def _carry_stats(
@@ -701,6 +724,14 @@ class LakeTable:
             )
         return snap
 
+    def _head(self, snapshot: Snapshot | None = None) -> Snapshot:
+        """``snapshot`` when the caller holds one, else this ref's head;
+        raises on a table with no commit."""
+        snap = snapshot or self.current_snapshot()
+        if snap is None:
+            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        return snap
+
     def snapshot(self, snapshot_id: int) -> Snapshot:
         """Public snapshot-by-id accessor (time travel): the metadata to
         hand to ``read(snapshot=...)``. Raises on an unknown id."""
@@ -917,7 +948,7 @@ class LakeTable:
 
     def _write_opts(self, snap: Snapshot) -> dict[str, str]:
         """Per-write parquet options: a bloom filter on every merge-key
-        column (conf ``spark.adps.parquet.bloom.enabled``, default on).
+        column, always.
 
         Point lookups filter on exact key equality, but hash bucketing
         scatters key VALUES uniformly across every file in the bucket —
@@ -941,12 +972,6 @@ class LakeTable:
         of its sizing loop, 1 KiB at 1% FPP, so filters span 1 KiB to
         1 MiB. parquet-mr reads the count only in its per-column form
         (``...candidates.number#<col>``); the bare key is ignored."""
-        try:
-            enabled = self.spark.conf.get("spark.adps.parquet.bloom.enabled", "true")
-        except Exception:
-            enabled = "true"
-        if str(enabled).lower() != "true":
-            return {}
         opts = {"parquet.bloom.filter.adaptive.enabled": "true"}
         for c in snap.key_cols:
             opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
@@ -1005,21 +1030,68 @@ class LakeTable:
             *[F.col(f"_w.{c}").alias(c) for c in val_cols],
         )
 
-    def _bucket_paths(
-        self, snap: Snapshot, buckets: list[int] | None, include_deltas: bool
-    ) -> tuple[list[str], bool]:
+    def _plan_read(
+        self,
+        snap: Snapshot,
+        buckets: list[int] | None = None,
+        bounds: dict[str, tuple] | None = None,
+    ) -> _ReadPlan:
+        """The one statement of read-file selection: the base files of
+        ``buckets`` (default: every bucket) that may hold a row inside
+        every ``bounds`` range (``{col: (lo, hi)}``, None = open end) per
+        the manifest stats, and EVERY delta file of those buckets.
+
+        Sound under merge-on-read: only base files prune. Within a bucket
+        every delta outranks every base row (CoW/compact rewrites fold
+        and supersede deltas), and base rows are key-unique — so for any
+        key the LWW winner over (deltas ∪ kept base rows) equals the
+        winner over everything: if the key has delta rows the base copy
+        never wins anyway, and if not, its single base row is either kept
+        or provably outside the range. NaN and NULL semantics are encoded
+        in the stats entries (``stats.file_overlaps``); a missing entry
+        never prunes."""
+        enc = {}
+        if bounds:
+            names = set(snap.schema.fieldNames())
+            for col, (lo, hi) in bounds.items():
+                if col not in names:
+                    raise ValueError(f"unknown column {col!r}")
+                enc[col] = (_stats.encode_bound(lo), _stats.encode_bound(hi))
         keys = (
             [str(b) for b in buckets]
             if buckets is not None
             else sorted(set(snap.files) | set(snap.delta_files))
         )
-        base = [os.path.join(self.root, p) for k in keys for p in snap.files.get(k, [])]
-        deltas = (
-            [os.path.join(self.root, p) for k in keys for p in snap.delta_files.get(k, [])]
-            if include_deltas
-            else []
+        base, total = [], 0
+        for k in keys:
+            for rel in snap.files.get(k, []):
+                total += 1
+                entry = snap.file_stats.get(rel, {})
+                if all(
+                    _stats.file_overlaps(entry.get(c), lo, hi)
+                    for c, (lo, hi) in enc.items()
+                ):
+                    base.append(os.path.join(self.root, rel))
+        deltas = [
+            os.path.join(self.root, p) for k in keys for p in snap.delta_files.get(k, [])
+        ]
+        return _ReadPlan(base, deltas, total)
+
+    def _read_plan(
+        self, snap: Snapshot, plan: _ReadPlan, fuse_bucket: bool = False
+    ) -> DataFrame:
+        """A plan's files as the snapshot's current state: LWW-resolved
+        when the plan holds deltas, a plain scan with zero resolution
+        cost when it holds none. ``fuse_bucket`` (a bucketed rewrite,
+        see ``_resolve``) always resolves: the write needs the bucket
+        column and its alignment."""
+        if not plan.deltas and not fuse_bucket:
+            return self._scan(snap, plan.base, with_internals=False)
+        return self._resolve(
+            self._scan(snap, plan.base + plan.deltas, with_internals=True),
+            snap,
+            fuse_bucket=fuse_bucket,
         )
-        return base + deltas, bool(deltas)
 
     def read(
         self, snapshot: Snapshot | None = None, buckets: list[int] | None = None
@@ -1027,46 +1099,70 @@ class LakeTable:
         """Current-state scan (default: current snapshot, all buckets).
         If merge-on-read deltas exist they are resolved (LWW by commit
         seq); a fully-compacted table reads with zero resolution cost."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        paths, has_deltas = self._bucket_paths(snap, buckets, include_deltas=True)
-        if not has_deltas:
-            return self._scan(snap, paths, with_internals=False)
-        return self._resolve(self._scan(snap, paths, with_internals=True), snap)
+        snap = self._head(snapshot)
+        return self._read_plan(snap, self._plan_read(snap, buckets))
 
     def read_buckets(self, buckets: list[int], snapshot: Snapshot | None = None) -> DataFrame:
         """Scan only the named buckets (partition pruning by file list)."""
         return self.read(snapshot=snapshot, buckets=buckets)
 
-    def _local_bucket(self, vals, key_types, n_buckets: int) -> int | None:
-        """Driver-side XXH64 twin of ``bucket_expr`` — zero Spark jobs
-        for the prune step — or None when the literals are not
-        EXACT-typed for the key columns: a Python-side coercion like
-        ``str(True)='True'`` diverges from Spark's cast (``'true'``) and
-        would hash into the wrong bucket (the silent-miss hazard), so
-        anything needing a cast must take the Spark expression, which IS
-        the cast. Bit-equality with ``F.xxhash64`` pinned by
-        tests/test_xxhash_twin.py. ONE implementation for every local
-        lookup path — a drifted copy would send the two paths to
-        different buckets."""
+    def _key_bucket(
+        self, snap: Snapshot, key: dict, cast: bool = True
+    ) -> tuple[int | None, dict[str, tuple]]:
+        """Bind a point key: its bucket, and the ``_plan_read`` bounds
+        that prune the bucket's base files through the manifest stats.
+
+        The key must bind exactly the key columns — a mis-bound key would
+        prune to the wrong bucket and return 0 rows instead of erroring
+        (a real raise: asserts vanish under python -O). The bucket comes
+        from the driver-side XXH64 twin of ``bucket_expr`` (zero Spark
+        jobs) when the literals are EXACT-typed for the TABLE's key
+        column types. Anything needing a cast takes the Spark expression,
+        which IS the cast: hashing the string '42' when the column is a
+        long, or ``str(True)='True'`` where Spark's cast gives 'true',
+        lands in the wrong bucket and silently misses an existing row.
+        ``cast=False`` returns None instead of running that job.
+        Bit-equality of the twin with ``F.xxhash64`` is pinned by
+        tests/test_xxhash_twin.py.
+
+        Bounds use only exact-typed int literals on stats-eligible
+        columns: a value needing a cast has unknown encoded bounds."""
         from ..functions import xxhash as _xx
 
-        if not _xx.supports(key_types):
-            return None
-        if not all(
-            isinstance(v, str)
-            if isinstance(dt, T.StringType)
-            else (isinstance(v, int) and not isinstance(v, bool))
+        if set(key) != set(snap.key_cols):
+            raise ValueError(f"key must bind exactly {snap.key_cols}, got {sorted(key)}")
+        types = {f.name: f.dataType for f in snap.schema.fields}
+        key_types = [types[c] for c in snap.key_cols]
+        vals = [key[c] for c in snap.key_cols]
+
+        def exact_int(v) -> bool:
+            return isinstance(v, int) and not isinstance(v, bool)
+
+        bounds = {
+            c: (v, v)
+            for c, v in zip(snap.key_cols, vals)
+            if exact_int(v) and isinstance(types[c], _stats._ELIGIBLE)
+        }
+        bucket = None
+        if _xx.supports(key_types) and all(
+            isinstance(v, str) if isinstance(dt, T.StringType) else exact_int(v)
             for v, dt in zip(vals, key_types)
         ):
-            return None
-        try:
-            return _xx.key_bucket(vals, key_types, n_buckets)
-        except (ValueError, TypeError, OverflowError):
-            # e.g. an int out of the column type's range — Spark's cast
-            # semantics decide what that key means
-            return None
+            try:
+                bucket = _xx.key_bucket(vals, key_types, snap.n_buckets)
+            except (ValueError, TypeError, OverflowError):
+                # e.g. an int out of the column type's range — Spark's
+                # cast semantics decide what that key means
+                pass
+        if bucket is None and cast:
+            with step(self.spark, "table.read_key"):
+                row = self.spark.range(1).select(
+                    *[F.lit(key[c]).cast(types[c]).alias(c) for c in snap.key_cols]
+                )
+                bucket = int(
+                    row.select(bucket_expr(snap.key_cols, snap.n_buckets)).collect()[0][0]
+                )
+        return bucket, bounds
 
     def read_key(self, key: dict[str, str], snapshot: Snapshot | None = None) -> DataFrame:
         """Point lookup of one merge key: current row (0 or 1 rows).
@@ -1074,46 +1170,23 @@ class LakeTable:
         The engine's read-back analog of the reference's cone search
         (SURVEY.md §3.3): coarse prune first (the key hashes to exactly
         one bucket — only that bucket's files are scanned), then the
-        exact predicate refines inside it. At 100 TB this touches
-        1/n_buckets of the table regardless of table size.
+        manifest stats narrow the bucket's base files (~one file on a
+        key-clustered table), the parquet bloom filters drop row groups
+        inside whatever survives, and the exact predicate refines. At
+        100 TB this touches 1/n_buckets of the table regardless of table
+        size.
         """
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        # a mis-bound key would prune to the wrong bucket and return 0
-        # rows instead of erroring — guard with a real raise (asserts
-        # vanish under python -O)
-        if set(key) != set(snap.key_cols):
-            raise ValueError(f"key must bind exactly {snap.key_cols}, got {sorted(key)}")
-        # probe with the TABLE's key column types: hashing the string '42'
-        # when the column is a long lands in the wrong bucket and the
-        # pruned scan silently misses an existing row
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        key_types = [types[c] for c in snap.key_cols]
-        vals = [key[c] for c in snap.key_cols]
+        snap = self._head(snapshot)
         with step(self.spark, "table.read_key"):
-            bucket = self._local_bucket(vals, key_types, snap.n_buckets)
-            if bucket is None:
-                row = self.spark.range(1).select(
-                    *[F.lit(key[c]).cast(types[c]).alias(c) for c in snap.key_cols]
-                )
-                bucket = row.select(bucket_expr(snap.key_cols, snap.n_buckets)).collect()[0][0]
-            base_paths, _, _ = self._point_base_paths(snap, int(bucket), key, types)
-            delta_paths = [
-                os.path.join(self.root, p)
-                for p in snap.delta_files.get(str(int(bucket)), [])
-            ]
-            if delta_paths:
-                df = self._resolve(
-                    self._scan(snap, base_paths + delta_paths, with_internals=True), snap
-                )
-            else:
-                df = self._scan(snap, base_paths, with_internals=False)
-            pred = None
-            for c in snap.key_cols:
-                p = F.col(c) == F.lit(key[c]).cast(types[c])
-                pred = p if pred is None else (pred & p)
-            return df.filter(pred)
+            bucket, bounds = self._key_bucket(snap, key)
+            df = self._read_plan(snap, self._plan_read(snap, [bucket], bounds))
+        types = {f.name: f.dataType for f in snap.schema.fields}
+        return df.filter(
+            functools.reduce(
+                operator.and_,
+                [F.col(c) == F.lit(key[c]).cast(types[c]) for c in snap.key_cols],
+            )
+        )
 
     def read_key_local(
         self, key: dict, snapshot: Snapshot | None = None
@@ -1127,20 +1200,14 @@ class LakeTable:
         Spark job per lookup, which is the whole cost of a point read
         under concurrent load (reference analog: the <100 ms point-query
         band db_performance_test.py holds Postgres to; a Spark job's
-        floor is the scheduler, not the data). Values needing a cast
+        floor is the scheduler, not the data). pyarrow's ``filters``
+        prune row groups on min/max statistics only and never open a
+        bloom filter, so the manifest stats prune is the last one before
+        a surviving file's key column is decoded. Values needing a cast
         fall back to ``read_key`` — Spark's cast semantics decide what
         such a key means, exactly as the write path did."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        if set(key) != set(snap.key_cols):
-            raise ValueError(
-                f"key must bind exactly {snap.key_cols}, got {sorted(key)}"
-            )
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        key_types = [types[c] for c in snap.key_cols]
-        vals = [key[c] for c in snap.key_cols]
-        bucket = self._local_bucket(vals, key_types, snap.n_buckets)
+        snap = self._head(snapshot)
+        bucket, bounds = self._key_bucket(snap, key, cast=False)
         if bucket is None:
             with step(self.spark, "table.read_key"):
                 rows = self.read_key(key, snapshot=snap).collect()
@@ -1149,14 +1216,10 @@ class LakeTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        base_paths, _, _ = self._point_base_paths(snap, int(bucket), key, types)
-        delta_paths = [
-            os.path.join(self.root, p)
-            for p in snap.delta_files.get(str(int(bucket)), [])
-        ]
+        plan = self._plan_read(snap, [bucket], bounds)
         filters = [(c, "=", key[c]) for c in snap.key_cols]
         best: tuple[int, dict] | None = None
-        for path in base_paths + delta_paths:
+        for path in plan.base + plan.deltas:
             try:
                 tbl = pq.read_table(path, filters=filters)
             except pa.ArrowInvalid:
@@ -1177,62 +1240,14 @@ class LakeTable:
             return None
         return {f.name: row.get(f.name) for f in snap.schema.fields}
 
-    def _point_base_paths(
-        self, snap: Snapshot, bucket: int, key: dict, types: dict
-    ) -> tuple[list[str], int, int]:
-        """Base files of one bucket that can contain ``key`` per the
-        manifest stats (absolute paths, plus kept/total counts): second
-        prune stage after bucket hashing. On a key-clustered table
-        (``cluster_by`` on a key column) this narrows the bucket's file
-        list to ~one file at PLANNING time. On the Spark ``read_key``
-        path the parquet bloom filters then drop non-matching row groups
-        inside whatever survives; ``read_key_local``'s pyarrow reader
-        never opens them (its ``filters`` prune row groups on min/max
-        statistics only), so there this stats prune is the last one
-        before a surviving file's key column is decoded. Sound under
-        merge-on-read for the same reason as ``read_between``: only base
-        files prune, every delta in the bucket is scanned, and within a
-        bucket every delta outranks every base row. Pruning uses only
-        EXACT-typed int literals — a value needing a cast has unknown
-        encoded bounds, and a missing/unsupported stats entry keeps the
-        file."""
-        rels = snap.files.get(str(bucket), [])
-        total = len(rels)
-        bounds = []
-        for c in snap.key_cols:
-            v = key[c]
-            if (
-                isinstance(v, int)
-                and not isinstance(v, bool)
-                and isinstance(types[c], _stats._ELIGIBLE)
-            ):
-                bounds.append((c, _stats.encode_bound(v)))
-        kept = []
-        for rel in rels:
-            entry = snap.file_stats.get(rel, {})
-            if all(_stats.file_overlaps(entry.get(c), ev, ev) for c, ev in bounds):
-                kept.append(os.path.join(self.root, rel))
-        return kept, len(kept), total
-
     def point_prune_report(self, key: dict, snapshot: Snapshot | None = None) -> dict:
-        """Observability twin of ``read_key``'s planning: how many of the
-        key's bucket files the manifest stats keep vs skip."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        row = self.spark.range(1).select(
-            *[F.lit(key[c]).cast(types[c]).alias(c) for c in snap.key_cols]
-        )
-        bucket = int(row.select(bucket_expr(snap.key_cols, snap.n_buckets)).collect()[0][0])
-        _, kept, total = self._point_base_paths(snap, bucket, key, types)
-        return {
-            "bucket": bucket,
-            "base_files": total,
-            "kept": kept,
-            "pruned": total - kept,
-            "delta_files": len(snap.delta_files.get(str(bucket), [])),
-        }
+        """Observability twin of ``read_key``'s planning: the key's
+        bucket and how many of its base files the manifest stats keep vs
+        skip. Binds the key exactly as the read does (same refusals; no
+        Spark job for a key the XXH64 twin hashes)."""
+        snap = self._head(snapshot)
+        bucket, bounds = self._key_bucket(snap, key)
+        return {"bucket": bucket, **self._plan_read(snap, [bucket], bounds).report()}
 
     def changes(
         self,
@@ -1452,9 +1467,7 @@ class LakeTable:
         would RESURRECT its old values into the "new" column (the hazard
         Iceberg solves with field IDs). ``rebucket`` rewrites every file
         and clears the set."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         schema = cur.schema
         existing = {f.name for f in schema.fields}
         for nf in new_fields:
@@ -1501,9 +1514,7 @@ class LakeTable:
         written (a crash can never leave a half-evolved schema, and the
         snapshot chain — walked by resume ledgers — grows by one, not
         two)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         table_types = {f.name: f.dataType for f in cur.schema.fields}
         skip = set(reserved) | set(cur.dropped_cols)
         new = [
@@ -1559,9 +1570,7 @@ class LakeTable:
         to prevent). Key columns cannot be dropped. Time travel to a
         pre-drop snapshot still reads the column (snapshots are
         self-describing)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         existing = {f.name for f in cur.schema.fields}
         for n in names:
             if n not in existing:
@@ -1618,9 +1627,7 @@ class LakeTable:
         Reference analog: the live-table ALTER migrations that grow
         column capacity without rewriting rows (the additive-evolution
         sibling of V2__Add_Workflow_Versioning_Support.sql)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         fields = {f.name: f for f in cur.schema.fields}
         for name, new_t in changes.items():
             if name not in fields:
@@ -1663,9 +1670,7 @@ class LakeTable:
         pays to rewrite into a new partition spec — paid once, amortized
         over the pruning/parallelism the new count buys as a table grows
         past its original layout."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         if n_buckets == cur.n_buckets:
             return cur
         if n_buckets < 1:
@@ -1673,7 +1678,7 @@ class LakeTable:
         key_cols = cur.key_cols
         commit_id = self._alloc_commit_id(cur)
         result = (
-            self.read()
+            self.read(snapshot=cur)
             .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
             .withColumn(TOMBSTONE_COL, F.lit(False))
             .withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets))
@@ -1752,9 +1757,7 @@ class LakeTable:
         surface maintenance decisions and skew investigations read."""
         import json as _json
 
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        snap = self._head(snapshot)
         # when a REAL column owns the "_n_rows" name, the stats entry
         # under that key is ITS range, not a file count — leave it in
         # col_stats and report no count (mirrors row_count())
@@ -1795,9 +1798,7 @@ class LakeTable:
         growth), live branch refs (they pin history). The reference runs
         its maintenance blind on a timer (maintenance_dag); a 100-TB
         table wants it driven by these numbers instead."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        snap = self._head(snapshot)
         spec = snap.cluster_spec
         target = int(spec["target_rows_per_file"]) if spec else None
         buckets = []
@@ -1893,9 +1894,7 @@ class LakeTable:
         deltas exist (upsert-vs-insert is unknowable without resolving)
         or any file predates row-count stats: None means "don't know",
         never an approximation."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        snap = self._head(snapshot)
         if any(snap.delta_files.values()):
             return None
         if any(f.name == "_n_rows" for f in snap.schema.fields):
@@ -1925,9 +1924,7 @@ class LakeTable:
         The scan and the commit are not one atomic unit: a concurrent
         writer landing between them raises ``CommitConflictError`` at
         publish (CAS) — re-run under ``commit_with_retries``."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         key_cols = cur.key_cols
         updates = self.read(snapshot=cur).filter(predicate).select(*key_cols)
         for f in cur.schema.fields:
@@ -1951,9 +1948,7 @@ class LakeTable:
         touched buckets. Key columns cannot be SET (that is a
         delete+insert, and a silently rekeyed row would shadow another
         key's history)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         key_cols = cur.key_cols
         bad = [c for c in set if c in key_cols]
         if bad:
@@ -2029,9 +2024,7 @@ class LakeTable:
             # data lands — a crash between evolve and merge would then make
             # exactly-once resume skip the data forever
             self.evolve_to(updates.schema, reserved={op_col})
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         key_cols = cur.key_cols
         table_cols = [f.name for f in cur.schema.fields]
         val_cols = [c for c in table_cols if c not in key_cols]
@@ -2053,7 +2046,7 @@ class LakeTable:
             new_rels: list[str] = []
 
             if touched:
-                base = self.read_buckets(touched)
+                base = self.read_buckets(touched, snapshot=cur)
                 # disambiguate update-side columns (keys included) before the join
                 u = upd.select(
                     *[F.col(c).alias(f"_u_{c}") for c in key_cols],
@@ -2196,9 +2189,7 @@ class LakeTable:
             # data lands — a crash between evolve and merge would then make
             # exactly-once resume skip the data forever
             self.evolve_to(updates.schema, reserved={op_col})
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         commit_id = self._alloc_commit_id(cur)
         w = self.mor_write(
             updates, commit_id, op_col=op_col, delete_op=delete_op,
@@ -2223,9 +2214,7 @@ class LakeTable:
         the version hint). Thread-safe across distinct commit_ids."""
         from pyspark.sql import Observation
 
-        cur = snapshot or self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head(snapshot)
         key_cols = cur.key_cols
         val_cols = [f.name for f in cur.schema.fields if f.name not in key_cols]
         updates = self._conform_types(updates, cur)
@@ -2280,9 +2269,7 @@ class LakeTable:
         new snapshot and flip the version hint. Must be called in commit_id
         order; ``expect_parent`` asserts the chain didn't move underneath."""
         commit_id, totals = write["commit_id"], write["totals"]
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         # these guards protect the on-disk ledger (an out-of-order
         # finalize would commit a snapshot whose parent skips a commit) —
         # real raises, not asserts that python -O strips
@@ -2319,9 +2306,7 @@ class LakeTable:
         ≥ ``min_deltas`` delta files are resolved (LWW by _seq, tombstones
         dropped) and rewritten; others untouched. Returns None if nothing
         to compact."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         victims = sorted(
             int(b) for b, fs in cur.delta_files.items() if len(fs) >= min_deltas
         )
@@ -2332,11 +2317,8 @@ class LakeTable:
         # one shuffle (resolve-then-repartition would move the whole
         # victim set through two exchanges — measured ~2x compaction wall)
         with step(self.spark, "table.compact"):
-            paths, _ = self._bucket_paths(cur, victims, include_deltas=True)
             resolved = (
-                self._resolve(
-                    self._scan(cur, paths, with_internals=True), cur, fuse_bucket=True
-                )
+                self._read_plan(cur, self._plan_read(cur, victims), fuse_bucket=True)
                 .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
                 .withColumn(TOMBSTONE_COL, F.lit(False))
             )
@@ -2402,9 +2384,7 @@ class LakeTable:
         runs it ONCE and persists the boundaries in ``cluster_spec`` so
         maintenance rewrites never re-scan the table for them."""
         sample = self._scan(
-            cur,
-            [os.path.join(self.root, p) for ps in cur.files.values() for p in ps],
-            with_internals=False,
+            cur, self._plan_read(cur).base, with_internals=False
         ).select(*cols)
         qs = [i / (1 << bits) for i in range(1, 1 << bits)]
         return sample.approxQuantile(cols, qs, 0.01)
@@ -2463,9 +2443,7 @@ class LakeTable:
         compaction); buckets and key layout are unchanged, so
         point-lookup pruning is unaffected."""
         cols = [col] if isinstance(col, str) else list(col)
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         field_types = {f.name: f.dataType for f in cur.schema.fields}
         for c in cols:
             if c not in field_types:
@@ -2485,11 +2463,8 @@ class LakeTable:
         if target_rows_per_file < 1:
             raise ValueError("target_rows_per_file must be >= 1")
         commit_id = self._alloc_commit_id(cur)
-        paths, _ = self._bucket_paths(cur, None, include_deltas=True)
         resolved = (
-            self._resolve(
-                self._scan(cur, paths, with_internals=True), cur, fuse_bucket=True
-            )
+            self._read_plan(cur, self._plan_read(cur), fuse_bucket=True)
             .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
             .withColumn(TOMBSTONE_COL, F.lit(False))
         )
@@ -2526,23 +2501,6 @@ class LakeTable:
         self._publish(snap, expected_head=cur.snapshot_id)
         return snap
 
-    def _prune_base_paths(
-        self, snap: Snapshot, col: str, lo, hi
-    ) -> tuple[list[str], int, int]:
-        """Base-file paths (absolute) overlapping [lo, hi] per the
-        manifest stats, plus (kept, total) counts. Files without a stats
-        entry are kept — missing means unprunable, never empty."""
-        elo, ehi = _stats.encode_bound(lo), _stats.encode_bound(hi)
-        kept: list[str] = []
-        total = 0
-        for _b, rels in sorted(snap.files.items()):
-            for rel in rels:
-                total += 1
-                entry = snap.file_stats.get(rel, {}).get(col)
-                if _stats.file_overlaps(entry, elo, ehi):
-                    kept.append(os.path.join(self.root, rel))
-        return kept, len(kept), total
-
     def read_between(
         self, col: str, lo=None, hi=None, snapshot: Snapshot | None = None
     ) -> DataFrame:
@@ -2551,34 +2509,10 @@ class LakeTable:
         opens for skipped files, which at 10^5-10^6 files is the
         difference between a driver dict walk and a distributed footer
         storm. The exact predicate still applies on top (stats prune
-        files, never rows).
-
-        Sound under merge-on-read: only BASE files prune; every delta
-        file is always scanned. Within a bucket every delta outranks
-        every base row (CoW/compact rewrites fold and supersede deltas),
-        and base rows are key-unique — so for any key the LWW winner over
-        (all deltas ∪ kept base rows) equals the winner over everything:
-        if the key has delta rows the base copy never wins anyway, and if
-        not, its single base row is either kept or provably outside the
-        range. NaN and NULL semantics are encoded in the stats entries
-        (``stats.file_overlaps``); unknown entries never prune."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        if col not in {f.name for f in snap.schema.fields}:
-            raise ValueError(f"unknown column {col!r}")
-        base_paths, _, _ = self._prune_base_paths(snap, col, lo, hi)
-        delta_paths = [
-            os.path.join(self.root, p)
-            for b in sorted(snap.delta_files)
-            for p in snap.delta_files[b]
-        ]
-        if delta_paths:
-            df = self._resolve(
-                self._scan(snap, base_paths + delta_paths, with_internals=True), snap
-            )
-        else:
-            df = self._scan(snap, base_paths, with_internals=False)
+        files, never rows). Only base files prune; every delta file is
+        always scanned (``_plan_read`` states why that is sound)."""
+        snap = self._head(snapshot)
+        df = self._read_plan(snap, self._plan_read(snap, bounds={col: (lo, hi)}))
         pred = F.lit(True)
         if lo is not None:
             pred = pred & (F.col(col) >= F.lit(lo))
@@ -2591,17 +2525,9 @@ class LakeTable:
     ) -> dict:
         """Observability twin of ``read_between``: how many base files the
         manifest stats would skip for this range (delta files are never
-        pruned)."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
-        _, kept, total = self._prune_base_paths(snap, col, lo, hi)
-        return {
-            "base_files": total,
-            "kept": kept,
-            "pruned": total - kept,
-            "delta_files": sum(len(v) for v in snap.delta_files.values()),
-        }
+        pruned). Plans, and so refuses, exactly as the read does."""
+        snap = self._head(snapshot)
+        return self._plan_read(snap, bounds={col: (lo, hi)}).report()
 
     def scan_advice(
         self,
@@ -2620,9 +2546,7 @@ class LakeTable:
         and act on ``advice`` programmatically (each entry carries an
         ``action`` token matching an engine method, plus the measured
         numbers behind it)."""
-        snap = snapshot or self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        snap = self._head(snapshot)
         rep = self.prune_report(col, lo, hi, snapshot=snap)
         base, pruned = rep["base_files"], rep["pruned"]
         spec = snap.cluster_spec
@@ -2824,9 +2748,7 @@ class LakeTable:
         FRESH checkpoint dir and the SAME run_id so retained epochs skip
         by batch id while rolled-back epochs re-apply (contract pinned by
         ``test_stream_restore_rewind_requires_fresh_checkpoint``)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.root}")
+        cur = self._head()
         if snapshot_id == cur.snapshot_id:
             raise ValueError(f"snapshot {snapshot_id} is already current")
         try:

@@ -169,9 +169,8 @@ def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
     CdcRunner(spark, table, run_id="r1", mode="mor").replay(events, n_batches=2)
     snap = table.current_snapshot()
     victims = sorted(int(b) for b in snap.delta_files)
-    paths, _ = table._bucket_paths(snap, victims, include_deltas=True)
-    resolved = table._resolve(
-        table._scan(snap, paths, with_internals=True), snap, fuse_bucket=True
+    resolved = table._read_plan(
+        snap, table._plan_read(snap, victims), fuse_bucket=True
     )
     assert plan(resolved, "simple").count("Exchange") == 1
 

@@ -90,17 +90,6 @@ def test_bloom_filter_sized_to_the_file(spark, tmp_path):
     assert big.read_key({"k": 20_000}).count() == 0
 
 
-def test_bloom_filter_conf_gate(spark, tmp_path):
-    spark.conf.set("spark.adps.parquet.bloom.enabled", "false")
-    try:
-        t = _mk(spark, tmp_path)
-        rel = next(iter(t.current_snapshot().files.values()))[0]
-        offs, _ = _bloom_offsets(spark, os.path.join(t.root, rel))
-        assert offs["k"] == -1, offs
-    finally:
-        spark.conf.set("spark.adps.parquet.bloom.enabled", "true")
-
-
 def test_point_prune_after_key_clustering(spark, tmp_path):
     """cluster_by on the key column restores value locality, so the
     manifest stats narrow a point lookup to ~one base file per bucket."""
@@ -127,6 +116,8 @@ def test_point_prune_sound_under_mor_deltas(spark, tmp_path):
     assert [(r["k"], r["v"]) for r in got] == [(77, 70007)]
     rep = t.point_prune_report({"k": 77})
     assert rep["delta_files"] >= 1
+    # the report twin counts exactly the files its read scans
+    assert len(t.read_key({"k": 77}).inputFiles()) == rep["kept"] + rep["delta_files"]
 
 
 def test_point_prune_string_key_keeps_all(spark, tmp_path):

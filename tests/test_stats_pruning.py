@@ -120,6 +120,38 @@ def test_read_between_mor_adversarial(spark, table):
         .collect()
     }
     assert got == ref
+    # the report twin counts exactly the files its read scans
+    rep = table.prune_report("v", 100.0, 200.0)
+    assert rep["pruned"] > 0 and rep["delta_files"] >= 1, rep
+    scanned = table.read_between("v", 100.0, 200.0).inputFiles()
+    assert len(scanned) == rep["kept"] + rep["delta_files"]
+
+
+def test_reports_validate_like_their_reads(spark, table):
+    """A report twin refuses what its read refuses, and an int-key point
+    report hashes its bucket on the driver (no Spark job)."""
+    with pytest.raises(ValueError, match="unknown column"):
+        table.read_between("nope", 1, 2)
+    with pytest.raises(ValueError, match="unknown column"):
+        table.prune_report("nope", 1, 2)
+    with pytest.raises(ValueError, match="unknown column"):
+        table.scan_advice("nope", 1, 2)
+    for bad in ({"id": 1, "bogus": 2}, {}):
+        with pytest.raises(ValueError, match="key must bind exactly"):
+            table.read_key(bad)
+        with pytest.raises(ValueError, match="key must bind exactly"):
+            table.point_prune_report(bad)
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def newest_job() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).head().jobId()
+
+    before = newest_job()
+    rep = table.point_prune_report({"id": 1})
+    assert newest_job() == before
+    assert rep["kept"] >= 1, rep  # the file holding id 1 is never pruned
 
 
 def test_nan_rows_survive_pruned_lower_bound(spark, tmp_path):
