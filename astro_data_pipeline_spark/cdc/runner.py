@@ -35,6 +35,14 @@ from ..session import step
 from . import apply as A
 
 
+# how many reducers a hot key's events are spread over by the salted
+# two-stage LWW collapse
+N_SALTS = 8
+# the share of the sampled events a single key must exceed to count as
+# hot (``CdcRunner.detect_hot_keys``)
+HOT_SHARE = 0.01
+
+
 class KilledError(RuntimeError):
     """Injected mid-run failure (kill/resume tests)."""
 
@@ -91,22 +99,13 @@ class CdcRunner:
         spark: SparkSession,
         table: LakeTable,
         run_id: str | None = None,
-        n_salts: int = 8,
-        hot_share: float = 0.01,
-        salt_auto: bool = True,
         mode: str = "mor",
         compact_every: int | None = None,
         pipeline_depth: int = 4,
     ):
-        """``n_salts``: how many reducers a hot key's events are spread
-        over by the salted two-stage LWW collapse.
-
-        ``hot_share``: the share of the sampled events a single key must
-        exceed to count as hot (``detect_hot_keys``).
-
-        ``salt_auto``: detect hot keys automatically — once per replayed
-        log, or per ``apply_batch`` call that passes no ``hot_keys``.
-        Off, nothing is salted unless the caller names the keys.
+        """Hot keys are detected automatically — once per replayed log,
+        or per ``apply_batch`` call that passes no ``hot_keys`` — and
+        salted over ``N_SALTS`` reducers.
 
         ``mode``: 'mor' (merge-on-read appends — the 10^10-scale ingest
         path, zero write amplification) or 'cow' (copy-on-write join —
@@ -125,9 +124,6 @@ class CdcRunner:
         self.spark = spark
         self.table = table
         self.run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
-        self.n_salts = n_salts
-        self.hot_share = hot_share
-        self.salt_auto = salt_auto
         self.mode = mode
         self.compact_every = compact_every
         self.pipeline_depth = max(int(pipeline_depth), 1)
@@ -157,7 +153,7 @@ class CdcRunner:
         ``events`` (one cheap column-pruned job). Key-level, not
         repo-level: the collapse shuffles on the storage bucket =
         hash(repo, path), so a repo with many paths spreads evenly no
-        matter how large — only a single key owning > hot_share of the
+        matter how large — only a single key owning > HOT_SHARE of the
         batch (a file rewritten millions of times) can skew a reducer.
         Salting on repo hotness would trigger on Zipf repo-size skew the
         bucket hash already neutralizes. A key that hot is near-certain
@@ -186,7 +182,7 @@ class CdcRunner:
             # floor of 5 sampled hits: below that the "hot" signal is
             # sampling noise (Poisson), and a key too small to clear 5 hits
             # is far too small to skew a reducer anyway
-            cutoff = max(int(total * self.hot_share), 5)
+            cutoff = max(int(total * HOT_SHARE), 5)
             if int(stats["max_n"]) <= cutoff:
                 return []
             # phase 2 (rare): pull only the keys above the cutoff
@@ -217,7 +213,7 @@ class CdcRunner:
         collapsed = A.lww_collapse(
             valid,
             hot_keys=hot,
-            n_salts=self.n_salts,
+            n_salts=N_SALTS,
             bucket=bucket_expr(snap.key_cols, snap.n_buckets),
             n_partitions=snap.n_buckets,
         )
@@ -340,7 +336,7 @@ class CdcRunner:
         ``observe``.
 
         ``hot_keys``: the salt set; None detects it from ``events`` (one
-        sampled job) when ``salt_auto`` is on.
+        sampled job), ``[]`` salts nothing.
 
         ``committed``: pass the ledger snapshot when applying many
         batches — the per-batch fallback re-walks the whole snapshot
@@ -352,9 +348,7 @@ class CdcRunner:
         snap = self._evolve_if_needed(events)
 
         def hot() -> list[tuple[str, str]]:
-            if hot_keys is not None:
-                return hot_keys
-            return self.detect_hot_keys(events) if self.salt_auto else []
+            return hot_keys if hot_keys is not None else self.detect_hot_keys(events)
 
         b = self._plan(events, batch_id, lsn_lo, lsn_hi, snap, committed, hot)
         if isinstance(b, BatchReport):
@@ -449,8 +443,6 @@ class CdcRunner:
 
         def batch_hot() -> list[tuple[str, str]]:
             nonlocal hot, hot_fut
-            if not self.salt_auto:
-                return []
             if hot is None:
                 # first applied batch: warm-start salt set + async
                 # detection over the full log

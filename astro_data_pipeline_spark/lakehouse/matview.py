@@ -343,11 +343,16 @@ class IncrementalAggView:
         The returned stats carry ``dirty_candidates`` and
         ``dirty_rescans``; the refresh commit's summary records
         ``mv_dirty_rescans``, so ``view.table.history()`` shows per
-        refresh whether it rescanned."""
+        refresh whether it rescanned.
+
+        The view head is read first and committed on, so a refresh
+        committed meanwhile by another handle raises
+        ``CommitConflictError`` instead of landing the range twice."""
         base_snap = self.base.current_snapshot()
         to = base_snap.snapshot_id
         if full:
             return self._refresh_full(base_snap)
+        vsnap = self.table.current_snapshot()
         frm = self.last_refresh_to()
         if to == frm:
             return {"from": frm, "to": to, "noop": True}
@@ -361,7 +366,6 @@ class IncrementalAggView:
         # may double as an agg col)
         carry = gcols + [c for c in sorted(need) if c not in gcols]
         base_keys = set(base_snap.key_cols)
-        vsnap = self.table.current_snapshot()
         stype = self._sum_types(vsnap)
         ext_specs = [s for s in self.specs if s.kind in ("min", "max")]
         # projected changelog: the base's payload columns (content blobs)
@@ -569,13 +573,15 @@ class IncrementalAggView:
                 # delta-append refresh: the view keeps its own changelog
                 # so cascaded consumers (replicas, views-over-views) can
                 # follow
-                _, metrics = self.table.merge_mor(rows, summary=refresh_summary)
+                _, metrics = self.table.merge_mor(
+                    rows, summary=refresh_summary, snapshot=vsnap
+                )
             else:
                 # the groups the merge touches are exactly the delta's
                 # groups, whose buckets the stored-state read already
                 # collected
                 _, metrics = self.table.merge(
-                    rows, summary=refresh_summary, touched_buckets=tb
+                    rows, summary=refresh_summary, touched_buckets=tb, snapshot=vsnap
                 )
         return {
             "from": frm,
@@ -590,7 +596,8 @@ class IncrementalAggView:
         """Full rebuild: recompute every group, delete groups that died."""
         to = base_snap.snapshot_id
         fresh = self._full_storage(base_snap)
-        stored_keys = self.table.read().select(*self.group_cols)
+        vsnap = self.table.current_snapshot()
+        stored_keys = self.table.read(snapshot=vsnap).select(*self.group_cols)
         dead = _null_safe_join(stored_keys, fresh, self.group_cols, "left_anti")
         vcols = [c for c in fresh.columns if c not in self.group_cols]
         dead_rows = dead.select(
@@ -608,5 +615,6 @@ class IncrementalAggView:
                 "run_scope": self._SCOPE,
                 "mv_refresh_to": to,
             },
+            snapshot=vsnap,
         )
         return {"from": None, "to": to, "noop": False, "full": True, **metrics}

@@ -47,6 +47,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize_barrier, step
 from .table import LakeTable, bucket_expr, is_lossless_widening
 
 
@@ -165,14 +166,13 @@ class MergeBuilder:
                     )
         src = source.alias("s")
         # bucket pruning: the clause join touches only the source's buckets
-        tb = sorted(
-            r[0]
-            for r in src.select(
-                bucket_expr(key_cols, cur.n_buckets).alias("b")
+        with step(self.table.spark, "table.merge"):
+            tb = sorted(
+                r[0]
+                for r in src.select(bucket_expr(key_cols, cur.n_buckets).alias("b"))
+                .distinct()
+                .collect()
             )
-            .distinct()
-            .collect()
-        )
         tgt = (
             self.table.read_buckets(tb, snapshot=cur)
             .withColumn("_t_present", F.lit(True))
@@ -240,7 +240,10 @@ class MergeBuilder:
             F.col("_mb_op").isNotNull()
         )
         merge_fn = self.table.merge if mode == "cow" else self.table.merge_mor
-        kwargs = {"op_col": "_mb_op", "summary": summary}
+        # commit on the snapshot the clause join read: a commit landing in
+        # between would otherwise be overwritten by rows routed against
+        # state it replaced
+        kwargs = {"op_col": "_mb_op", "summary": summary, "snapshot": cur}
         if mode == "cow":
             # pin the routed rows: the CoW merge full-outer-joins its
             # updates against the SAME stored buckets the clause join
@@ -248,8 +251,8 @@ class MergeBuilder:
             # scan) re-executes inside the merge, doubling the target
             # read. MoR consumes the rows in ONE action (delta write +
             # observed metrics), so pinning there would only add a copy.
-            from ..session import materialize_barrier
-
-            rows = materialize_barrier(rows, eager=False)
+            # Pinning plans the clause join, whose broadcast job runs here.
+            with step(self.table.spark, "table.merge"):
+                rows = materialize_barrier(rows, eager=False)
             kwargs["touched_buckets"] = tb
         return merge_fn(rows, **kwargs)

@@ -73,6 +73,11 @@ the winning attempt's files enter the snapshot manifest.
 every snapshot read (full, bucket, point, range, compaction, clustering)
 scans the files it picks, and ``_read_plan`` resolves them. The one
 exception is ``changes()``, whose delta scan picks files by commit.
+``LakeTable._commit`` is the one commit point on the write side: every
+commit but ``create``'s root and ``restore``'s child of its target takes
+its id, its child snapshot and its compare-and-swap there. ``_rewritten``
+is the one manifest edit of a bucket rewrite (CoW merge, compaction,
+rebucket, clustering).
 """
 
 from __future__ import annotations
@@ -226,19 +231,6 @@ class _ReadPlan(NamedTuple):
         }
 
 
-def _carry_stats(
-    old: dict[str, dict], files: dict[str, list[str]], added: dict[str, dict]
-) -> dict[str, dict]:
-    """File-stats map for a child snapshot: old entries survive only for
-    base files still referenced (rewritten/removed files drop theirs —
-    the map never outgrows the live file set), new files bring their
-    freshly collected entries."""
-    live = {p for fs in files.values() for p in fs}
-    out = {p: s for p, s in old.items() if p in live}
-    out.update(added)
-    return out
-
-
 def _widened(
     cur: Snapshot, widen: dict[str, T.DataType], added: list[T.StructField] | None = None
 ) -> dict[str, Any]:
@@ -276,6 +268,30 @@ def _widened(
             for p, e in cur.file_stats.items()
         }
     return {"schema_json": schema.jsonValue(), "file_stats": stats}
+
+
+def _rewritten(
+    root: str, cur: Snapshot, written: dict[str, list[str]], buckets: list[int] | None = None
+) -> dict[str, Any]:
+    """Child-snapshot overrides (``files``, ``delta_files``,
+    ``file_stats``) for a commit that rewrote ``buckets`` (None: every
+    bucket) of ``cur`` into ``written``: each named bucket's base files
+    become its written files (a bucket with none written drops out) and
+    its deltas drop, because the rewrite folded them in. Stats survive
+    for the base files still referenced and are collected for the new
+    ones, so the map never outgrows the live file set."""
+    if buckets is None:
+        files, deltas = {}, {}
+    else:
+        names = {str(b) for b in buckets}
+        files = {b: fs for b, fs in cur.files.items() if b not in names}
+        deltas = {b: fs for b, fs in cur.delta_files.items() if b not in names}
+    files.update(written)
+    live = {p for fs in files.values() for p in fs}
+    stats = {p: e for p, e in cur.file_stats.items() if p in live}
+    new_rels = [p for fs in written.values() for p in fs]
+    stats.update(_stats.collect_file_stats(root, new_rels, cur.schema))
+    return {"files": files, "delta_files": deltas, "file_stats": stats}
 
 
 def commit_files(snap: Snapshot) -> dict[str, list[str]]:
@@ -891,8 +907,9 @@ class LakeTable:
         return max(cur.snapshot_id, self._max_snapshot_file_id()) + 1
 
     def _publish(self, snap: Snapshot, *, expected_head: int | None) -> None:
-        """THE commit point, multi-writer safe: compare-and-swap this
-        view's ref (main's version hint or a branch ref). Commits only
+        """The compare-and-swap under every commit (``_commit``),
+        multi-writer safe: swap this view's ref (main's version hint or
+        a branch ref). Commits only
         if the ref still names ``expected_head`` (the snapshot the
         operation planned against) AND the snapshot id is unclaimed;
         otherwise raises :class:`CommitConflictError` — the operation
@@ -923,6 +940,25 @@ class LakeTable:
                 )
             self._write_snapshot(snap)
             self._commit_hint(snap.snapshot_id)
+
+    def _commit(
+        self, cur: Snapshot, summary: dict, *, commit_id: int | None = None, **overrides: Any
+    ) -> Snapshot:
+        """THE commit point: publish ``cur.child(**overrides)`` as the new
+        head, compare-and-swapped against ``cur`` (the snapshot the
+        operation planned on). The id is allocated here unless the caller
+        wrote data files under a pre-assigned one, which must outrank
+        ``cur``: ``_seq``-based LWW needs every commit to beat everything
+        it supersedes (ids may SKIP over other refs' commits)."""
+        if commit_id is None:
+            commit_id = self._alloc_commit_id(cur)
+        elif commit_id <= cur.snapshot_id:
+            raise CommitConflictError(
+                f"non-monotonic commit {commit_id} onto {cur.snapshot_id}"
+            )
+        snap = cur.child(snapshot_id=commit_id, summary=summary, **overrides)
+        self._publish(snap, expected_head=cur.snapshot_id)
+        return snap
 
     def commit_with_retries(
         self,
@@ -1481,13 +1517,11 @@ class LakeTable:
                     "rewrite the table"
                 )
             schema = schema.add(nf)
-        snap = cur.child(
-            snapshot_id=self._alloc_commit_id(cur),
+        return self._commit(
+            cur,
+            {"operation": "add-columns", **(summary or {})},
             schema_json=schema.jsonValue(),
-            summary={"operation": "add-columns", **(summary or {})},
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def evolve_to(
         self,
@@ -1530,32 +1564,21 @@ class LakeTable:
             and f.name not in cur.key_cols
             and is_lossless_widening(table_types[f.name], f.dataType)
         }
-        if new and widen:
-            snap = cur.child(
-                snapshot_id=self._alloc_commit_id(cur),
-                **_widened(cur, widen, new),
-                summary={
-                    "operation": "evolve",
-                    "evolved_columns": [f.name for f in new],
-                    "widened": {n: t.simpleString() for n, t in widen.items()},
-                    **(summary or {}),
-                },
-            )
-            self._publish(snap, expected_head=cur.snapshot_id)
-            return [snap]
+        if not new and not widen:
+            return []
+        fields: dict[str, Any] = {}
         if new:
-            return [
-                self.add_columns(
-                    new,
-                    summary={
-                        "evolved_columns": [f.name for f in new],
-                        **(summary or {}),
-                    },
-                )
-            ]
+            fields["evolved_columns"] = [f.name for f in new]
         if widen:
-            return [self.widen_columns(widen, summary=summary)]
-        return []
+            fields["widened"] = {n: t.simpleString() for n, t in widen.items()}
+        op = "evolve" if new and widen else "add-columns" if new else "widen-columns"
+        return [
+            self._commit(
+                cur,
+                {"operation": op, **fields, **(summary or {})},
+                **_widened(cur, widen, new),
+            )
+        ]
 
     def drop_columns(self, names: list[str], summary: dict | None = None) -> Snapshot:
         """Drop value columns as a METADATA-ONLY commit — zero files
@@ -1584,8 +1607,9 @@ class LakeTable:
         keeps_cluster = not (
             cur.cluster_spec and set(cur.cluster_spec["cols"]) & doomed
         )
-        snap = cur.child(
-            snapshot_id=self._alloc_commit_id(cur),
+        return self._commit(
+            cur,
+            {"operation": "drop-columns", "dropped": sorted(doomed), **(summary or {})},
             schema_json=schema.jsonValue(),
             # dropping a clustered column retires the spec: maintenance
             # rewrites must not sort by a name scans can no longer read
@@ -1598,10 +1622,7 @@ class LakeTable:
                 for p, e in cur.file_stats.items()
                 if (kept := {c: s for c, s in e.items() if c not in doomed})
             },
-            summary={"operation": "drop-columns", "dropped": sorted(doomed), **(summary or {})},
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def widen_columns(
         self, changes: dict[str, T.DataType], summary: dict | None = None
@@ -1645,17 +1666,15 @@ class LakeTable:
                     f"{old_t.simpleString()} -> {new_t.simpleString()} is "
                     f"not a lossless widening for column {name!r}"
                 )
-        snap = cur.child(
-            snapshot_id=self._alloc_commit_id(cur),
-            **_widened(cur, changes),
-            summary={
+        return self._commit(
+            cur,
+            {
                 "operation": "widen-columns",
                 "widened": {n: t.simpleString() for n, t in changes.items()},
                 **(summary or {}),
             },
+            **_widened(cur, changes),
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def rebucket(self, n_buckets: int, summary: dict | None = None) -> Snapshot:
         """Partition-spec evolution (Iceberg bucket-count change): rewrite
@@ -1687,30 +1706,27 @@ class LakeTable:
         # sort AND the same file-size split — one wide sorted file per
         # bucket would leave every file spanning the whole value range
         # (zero data skipping) while the spec still claimed clustering
-        _, files = self._write_buckets(
-            result.repartition(n_buckets, F.col(BUCKET_COL)),
-            cur, commit_id, "commit", spec=cur.cluster_spec,
-        )
-        new_rels = [p for rels in files.values() for p in rels]
-        snap = cur.child(
-            snapshot_id=commit_id,
-            n_buckets=n_buckets,
-            files=files,
-            delta_files={},
-            file_stats=_stats.collect_file_stats(self.root, new_rels, cur.schema),
-            # a rebucket rewrites EVERY file via read() under the current
-            # schema, so previously-dropped physical columns are purged
-            # and their names become safe to reuse
-            dropped_cols=[],
-            summary={
+        with step(self.spark, "table.rebucket"):
+            _, files = self._write_buckets(
+                result.repartition(n_buckets, F.col(BUCKET_COL)),
+                cur, commit_id, "commit", spec=cur.cluster_spec,
+            )
+        return self._commit(
+            cur,
+            {
                 "operation": "rebucket",
                 "from_buckets": cur.n_buckets,
                 "to_buckets": n_buckets,
                 **(summary or {}),
             },
+            commit_id=commit_id,
+            n_buckets=n_buckets,
+            **_rewritten(self.root, cur, files),
+            # a rebucket rewrites EVERY file via read() under the current
+            # schema, so previously-dropped physical columns are purged
+            # and their names become safe to reuse
+            dropped_cols=[],
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def _write_buckets(
         self, df: DataFrame, cur: Snapshot, commit_id: int, kind: str, spec: dict | None = None
@@ -1921,9 +1937,10 @@ class LakeTable:
         rewrite, the 100-TB shape for selective deletes (GDPR erasure of
         one repo); ``mode='cow'`` rewrites only the touched buckets.
 
-        The scan and the commit are not one atomic unit: a concurrent
-        writer landing between them raises ``CommitConflictError`` at
-        publish (CAS) — re-run under ``commit_with_retries``."""
+        The merge plans and commits on the snapshot the scan read, so a
+        concurrent writer landing between them raises
+        ``CommitConflictError`` at publish (CAS) — re-run under
+        ``commit_with_retries``."""
         cur = self._head()
         key_cols = cur.key_cols
         updates = self.read(snapshot=cur).filter(predicate).select(*key_cols)
@@ -1932,7 +1949,9 @@ class LakeTable:
                 updates = updates.withColumn(f.name, F.lit(None).cast(f.dataType))
         updates = updates.withColumn("op", F.lit("delete"))
         fn = self.merge_mor if mode == "mor" else self.merge
-        return fn(updates, summary={"statement": "delete_where", **(summary or {})})
+        return fn(
+            updates, summary={"statement": "delete_where", **(summary or {})}, snapshot=cur
+        )
 
     def update_where(
         self,
@@ -1947,7 +1966,8 @@ class LakeTable:
         ``mor`` appends the new versions (O(matches)), ``cow`` rewrites
         touched buckets. Key columns cannot be SET (that is a
         delete+insert, and a silently rekeyed row would shadow another
-        key's history)."""
+        key's history). Commits on the snapshot it read, like
+        ``delete_where``."""
         cur = self._head()
         key_cols = cur.key_cols
         bad = [c for c in set if c in key_cols]
@@ -1973,7 +1993,9 @@ class LakeTable:
             .withColumn("op", F.lit("update"))
         )
         fn = self.merge_mor if mode == "mor" else self.merge
-        return fn(updates, summary={"statement": "update_where", **(summary or {})})
+        return fn(
+            updates, summary={"statement": "update_where", **(summary or {})}, snapshot=cur
+        )
 
     def merge_builder(self, source: DataFrame):
         """Fluent ``MERGE INTO`` clause builder (Delta/Iceberg analog):
@@ -1985,6 +2007,25 @@ class LakeTable:
 
         return MergeBuilder(self, source)
 
+    def _merge_base(
+        self, updates: DataFrame, op_col: str, evolve_schema: bool, snapshot: Snapshot | None
+    ) -> Snapshot:
+        """The snapshot a merge plans and commits on: the caller's
+        ``snapshot``, else the head after the optional evolve commit
+        (which moves the head, so the two exclude each other)."""
+        if evolve_schema:
+            if snapshot is not None:
+                raise ValueError(
+                    "snapshot= cannot be combined with evolve_schema=True: "
+                    "the evolve commit moves the head past it"
+                )
+            # deliberately NOT the caller's summary: a batch_id stamped on
+            # the metadata commit would mark the batch committed before its
+            # data lands — a crash between evolve and merge would then make
+            # exactly-once resume skip the data forever
+            self.evolve_to(updates.schema, reserved={op_col})
+        return self._head(snapshot)
+
     def merge(
         self,
         updates: DataFrame,
@@ -1993,6 +2034,7 @@ class LakeTable:
         summary: dict | None = None,
         touched_buckets: list[int] | None = None,
         evolve_schema: bool = False,
+        snapshot: Snapshot | None = None,
     ) -> tuple[Snapshot, dict]:
         """Key-partitioned MERGE (upsert-or-delete), copy-on-write at
         bucket granularity, in ONE pass over the data.
@@ -2015,16 +2057,14 @@ class LakeTable:
         ``evolve_schema``: first ADD/WIDEN the table to accept the batch's
         columns (``evolve_to``, Delta ``mergeSchema`` analog) instead of
         dropping unknown columns / refusing wider types.
+
+        ``snapshot``: the snapshot the caller read ``updates`` from. The
+        merge plans on it and commits only while it is still the head,
+        else raises ``CommitConflictError`` (see ``_merge_base``).
         """
         from pyspark.sql import Observation
 
-        if evolve_schema:
-            # deliberately NOT the caller's summary: a batch_id stamped on
-            # the metadata commit would mark the batch committed before its
-            # data lands — a crash between evolve and merge would then make
-            # exactly-once resume skip the data forever
-            self.evolve_to(updates.schema, reserved={op_col})
-        cur = self._head()
+        cur = self._merge_base(updates, op_col, evolve_schema, snapshot)
         key_cols = cur.key_cols
         table_cols = [f.name for f in cur.schema.fields]
         val_cols = [c for c in table_cols if c not in key_cols]
@@ -2037,13 +2077,10 @@ class LakeTable:
             else:
                 touched = sorted(touched_buckets)
 
-            new_files: dict[str, list[str]] = {
-                b: list(paths) for b, paths in cur.files.items() if int(b) not in touched
-            }
             commit_id = self._alloc_commit_id(cur)
             totals = {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0,
                       "rows_delete_noop": 0}
-            new_rels: list[str] = []
+            written: dict[str, list[str]] = {}
 
             if touched:
                 base = self.read_buckets(touched, snapshot=cur)
@@ -2130,27 +2167,14 @@ class LakeTable:
                         f"touched_buckets missed {outside} update row(s); "
                         "pass the full bucket set (or None to derive it)"
                     )
-                new_files.update(written)
-                new_rels = [p for rels in written.values() for p in rels]
 
         # CoW rewrite of a touched bucket folds in and supersedes its deltas
-        new_deltas = {
-            b: list(paths)
-            for b, paths in cur.delta_files.items()
-            if int(b) not in touched
-        }
-        snap = cur.child(
-            snapshot_id=commit_id,
-            files=new_files,
-            delta_files=new_deltas,
-            file_stats=_carry_stats(
-                cur.file_stats,
-                new_files,
-                _stats.collect_file_stats(self.root, new_rels, cur.schema),
-            ),
-            summary={"operation": "merge", **totals, **(summary or {})},
+        snap = self._commit(
+            cur,
+            {"operation": "merge", **totals, **(summary or {})},
+            commit_id=commit_id,
+            **_rewritten(self.root, cur, written, touched),
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
         return snap, {"totals": totals}
 
     def merge_mor(
@@ -2161,6 +2185,7 @@ class LakeTable:
         summary: dict | None = None,
         bucket_aligned: bool = False,
         evolve_schema: bool = False,
+        snapshot: Snapshot | None = None,
     ) -> tuple[Snapshot, dict]:
         """Merge-on-read MERGE: append per-bucket delta files (upserts +
         tombstones) stamped with this commit's sequence — O(batch) write,
@@ -2180,16 +2205,8 @@ class LakeTable:
         while commits stay strictly ordered (the pipelined-ingest shape:
         writes race, the ledger serializes).
 
-        ``evolve_schema``: first ADD/WIDEN the table to accept the batch's
-        columns (``evolve_to``) instead of dropping unknown columns /
-        refusing wider types."""
-        if evolve_schema:
-            # deliberately NOT the caller's summary: a batch_id stamped on
-            # the metadata commit would mark the batch committed before its
-            # data lands — a crash between evolve and merge would then make
-            # exactly-once resume skip the data forever
-            self.evolve_to(updates.schema, reserved={op_col})
-        cur = self._head()
+        ``evolve_schema`` and ``snapshot``: as in ``merge``."""
+        cur = self._merge_base(updates, op_col, evolve_schema, snapshot)
         commit_id = self._alloc_commit_id(cur)
         w = self.mor_write(
             updates, commit_id, op_col=op_col, delete_op=delete_op,
@@ -2270,9 +2287,9 @@ class LakeTable:
         order; ``expect_parent`` asserts the chain didn't move underneath."""
         commit_id, totals = write["commit_id"], write["totals"]
         cur = self._head()
-        # these guards protect the on-disk ledger (an out-of-order
-        # finalize would commit a snapshot whose parent skips a commit) —
-        # real raises, not asserts that python -O strips
+        # this guard and _commit's id check protect the on-disk ledger (an
+        # out-of-order finalize would commit a snapshot whose parent skips
+        # a commit) — real raises, not asserts that python -O strips
         # CommitConflictError (a RuntimeError): under single-writer
         # pipelining these indicate an ordering bug; under multi-writer
         # racing they are ordinary conflicts commit_with_retries re-runs
@@ -2280,24 +2297,15 @@ class LakeTable:
             raise CommitConflictError(
                 f"commit order violated: parent {cur.snapshot_id} != {expect_parent}"
             )
-        # commit ids may SKIP (global allocation across refs steps over
-        # branch commits and orphan claims) but must outrank the parent:
-        # _seq-based LWW needs every commit to beat everything it
-        # supersedes
-        if commit_id <= cur.snapshot_id:
-            raise CommitConflictError(
-                f"non-monotonic commit {commit_id} onto {cur.snapshot_id}"
-            )
         new_deltas = {b: list(p) for b, p in cur.delta_files.items()}
         for bk, rels in write["files"].items():
             new_deltas.setdefault(bk, []).extend(rels)
-
-        snap = cur.child(
-            snapshot_id=commit_id,
+        snap = self._commit(
+            cur,
+            {"operation": "merge-mor", **totals, **(summary or {})},
+            commit_id=commit_id,
             delta_files=new_deltas,
-            summary={"operation": "merge-mor", **totals, **(summary or {})},
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
         return snap, {"totals": totals}
 
     def compact(self, min_deltas: int = 1, summary: dict | None = None) -> Snapshot | None:
@@ -2330,35 +2338,12 @@ class LakeTable:
             _, written = self._write_buckets(
                 resolved, cur, commit_id, "commit", spec=cur.cluster_spec
             )
-        new_files = {b: list(p) for b, p in cur.files.items()}
-        new_deltas = {
-            b: list(p) for b, p in cur.delta_files.items() if int(b) not in victims
-        }
-        new_rels: list[str] = []
-        for bk in victims:
-            rels = written.get(str(bk))
-            if rels:
-                new_files[str(bk)] = rels
-                new_rels += rels
-            else:
-                new_files.pop(str(bk), None)  # bucket fully deleted
-        snap = cur.child(
-            snapshot_id=commit_id,
-            files=new_files,
-            delta_files=new_deltas,
-            file_stats=_carry_stats(
-                cur.file_stats,
-                new_files,
-                _stats.collect_file_stats(self.root, new_rels, cur.schema),
-            ),
-            summary={
-                "operation": "compact",
-                "compacted_buckets": victims,
-                **(summary or {}),
-            },
+        return self._commit(
+            cur,
+            {"operation": "compact", "compacted_buckets": victims, **(summary or {})},
+            commit_id=commit_id,
+            **_rewritten(self.root, cur, written, victims),
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def _cluster_sort_key(self, cur: Snapshot, spec: dict) -> F.Column:
         """Sort key for the active cluster spec: the column itself for
@@ -2387,7 +2372,8 @@ class LakeTable:
             cur, self._plan_read(cur).base, with_internals=False
         ).select(*cols)
         qs = [i / (1 << bits) for i in range(1, 1 << bits)]
-        return sample.approxQuantile(cols, qs, 0.01)
+        with step(self.spark, "table.cluster"):
+            return sample.approxQuantile(cols, qs, 0.01)
 
     def _zorder_expr_from(
         self, cols: list[str], bits: int, all_bounds: list[list[float]]
@@ -2482,24 +2468,21 @@ class LakeTable:
         # the fused resolve leaves rows clustered by bucket; the spec's
         # sort + file cap make the partitioned writer cut each bucket's
         # stream into consecutive value-ranged files — the point of the op
-        _, new_files = self._write_buckets(resolved, cur, commit_id, "commit", spec=spec)
-        new_rels = [p for rels in new_files.values() for p in rels]
-        snap = cur.child(
-            snapshot_id=commit_id,
-            files=new_files,
-            delta_files={},
-            cluster_spec=spec,
-            file_stats=_stats.collect_file_stats(self.root, new_rels, cur.schema),
-            summary={
+        with step(self.spark, "table.cluster"):
+            _, written = self._write_buckets(resolved, cur, commit_id, "commit", spec=spec)
+        return self._commit(
+            cur,
+            {
                 "operation": "cluster",
                 "cluster_col": cols[0] if len(cols) == 1 else cols,
                 "target_rows_per_file": target_rows_per_file,
-                "n_files": len(new_rels),
+                "n_files": sum(len(fs) for fs in written.values()),
                 **(summary or {}),
             },
+            commit_id=commit_id,
+            cluster_spec=spec,
+            **_rewritten(self.root, cur, written),
         )
-        self._publish(snap, expected_head=cur.snapshot_id)
-        return snap
 
     def read_between(
         self, col: str, lo=None, hi=None, snapshot: Snapshot | None = None

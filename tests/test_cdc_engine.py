@@ -764,22 +764,22 @@ def test_workflow_activation_merge_idempotent(spark, tmp_path):
             content=f"active={version};traffic=100.0",
         )
 
-    runner = CdcRunner(spark, table, run_id="wf", mode="mor", salt_auto=False)
+    runner = CdcRunner(spark, table, run_id="wf", mode="mor")
     b1 = spark.createDataFrame(pd.DataFrame([
         activation(1, "calib", "fits", "v1"),
         activation(2, "stack", "fits", "v1"),
     ]))
-    runner.apply_batch(b1, "act:1", 0, 2)
+    runner.apply_batch(b1, "act:1", 0, 2, hot_keys=[])
     b2 = spark.createDataFrame(pd.DataFrame([
         activation(3, "calib", "fits", "v2"),  # activate v2 → closes v1
     ]))
-    runner.apply_batch(b2, "act:2", 2, 3)
+    runner.apply_batch(b2, "act:2", 2, 3, hot_keys=[])
     state = table.read().toPandas().sort_values("repo").reset_index(drop=True)
     assert list(state["commit"]) == ["v2", "v1"]  # calib flipped, stack kept
 
     # same batch id re-applied → skipped, snapshot unchanged
     snap_before = table.current_snapshot().snapshot_id
-    rep = runner.apply_batch(b2, "act:2", 2, 3)
+    rep = runner.apply_batch(b2, "act:2", 2, 3, hot_keys=[])
     assert rep.status == "skipped"
     assert table.current_snapshot().snapshot_id == snap_before
 
@@ -787,7 +787,7 @@ def test_workflow_activation_merge_idempotent(spark, tmp_path):
     b3 = spark.createDataFrame(pd.DataFrame([
         activation(4, "calib", "fits", "v2"),
     ]))
-    runner.apply_batch(b3, "act:3", 3, 4)
+    runner.apply_batch(b3, "act:3", 3, 4, hot_keys=[])
     state2 = table.read().toPandas().sort_values("repo").reset_index(drop=True)
     assert list(state2["commit"]) == ["v2", "v1"]
     assert list(state2["content_sha256"]) == list(state["content_sha256"])
@@ -796,7 +796,7 @@ def test_workflow_activation_merge_idempotent(spark, tmp_path):
     b4 = spark.createDataFrame(pd.DataFrame([
         activation(5, "calib", "fits", "v1"),
     ]))
-    runner.apply_batch(b4, "act:4", 4, 5)
+    runner.apply_batch(b4, "act:4", 4, 5, hot_keys=[])
     assert list(
         table.read().toPandas().sort_values("repo")["commit"]
     ) == ["v1", "v1"]

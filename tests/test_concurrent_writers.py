@@ -262,3 +262,73 @@ def test_create_race_is_exclusive(spark, tmp_path):
     assert results.count("ok") == 1 and results.count("lost") == 3
     t = LakeTable.load(spark, root)
     assert t.current_snapshot().snapshot_id == 1
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "delete_where-mor",
+        "delete_where-cow",
+        "update_where",
+        "merge_builder-cow",
+        "merge_builder-mor",
+        "refresh",
+    ],
+)
+def test_read_then_commit_ops_conflict_on_interloper(spark, table, tmp_path, case):
+    """delete_where, update_where, a merge builder and a view refresh plan
+    their rows on the snapshot they read, so a commit that lands before
+    their merge commits must raise CommitConflictError — never be
+    overwritten (a lost update), missed (a concurrent insert that matches
+    the delete predicate) or doubled (one refresh range committed twice).
+    The interloper's commit stays the head."""
+    from pyspark.sql import functions as F
+
+    from astro_data_pipeline_spark.lakehouse.matview import AggSpec, IncrementalAggView
+
+    table.merge(_updates(spark, [("r1", "a", 1, "insert"), ("r2", "b", 2, "insert")]))
+    target = table
+    mode = "mor" if case.endswith("mor") or case == "update_where" else "cow"
+    other = LakeTable.load(spark, table.root)
+
+    def interlope():
+        other.merge_mor(_updates(spark, [("r1", "a", 50, "update"), ("r9", "z", 1, "insert")]))
+
+    if case == "refresh":
+        view = IncrementalAggView.create(
+            spark, str(tmp_path / "mv"), table, ["repo"], [AggSpec("count", None, "n")]
+        )
+        table.merge_mor(_updates(spark, [("r3", "c", 3, "insert")]))
+        target = view.table
+
+        def interlope():
+            IncrementalAggView.load(spark, view.root, base=table).refresh()
+
+        run = view.refresh
+    elif case.startswith("delete_where"):
+        def run():
+            table.delete_where(F.col("v") == 1, mode=mode)
+    elif case == "update_where":
+        def run():
+            table.update_where({"v": F.col("v") + 1}, F.col("v") == 1)
+    else:
+        src = spark.createDataFrame([("r1", "a")], "repo string, path string")
+
+        def run():
+            table.merge_builder(src).when_matched_update(
+                set={"v": F.col("t.v") + 1}
+            ).execute(mode)
+
+    name = "merge_mor" if mode == "mor" else "merge"
+    real = getattr(target, name)
+    landed = []
+
+    def interloped(*args, **kwargs):
+        interlope()
+        landed.append(LakeTable.load(spark, target.root).current_snapshot().snapshot_id)
+        return real(*args, **kwargs)
+
+    setattr(target, name, interloped)
+    with pytest.raises(CommitConflictError):
+        run()
+    assert landed and target.current_snapshot().snapshot_id == landed[0]

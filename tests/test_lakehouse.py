@@ -667,3 +667,90 @@ def test_null_safe_join_refuses_outer_joins(spark):
     for how in ("full", "right", "full_outer", "right_outer"):
         with pytest.raises(ValueError, match="unsupported how"):
             null_safe_join(a, b, ["k"], how)
+
+
+def test_rewrite_commits_keep_the_manifest_rule(spark, table):
+    """Every bucket rewrite (CoW merge, compact, rebucket, cluster_by) and
+    the merge-on-read append between them leaves a manifest that agrees
+    with itself: the commit's parent is the previous head, file stats
+    cover exactly the base files, a rewritten bucket keeps no delta, the
+    commit's own files are exactly its attempt directory's, and the table
+    reads back as a Python model of the same operations. A CoW delete of
+    every row of a bucket drops that bucket from the manifest."""
+    import glob
+
+    from astro_data_pipeline_spark.lakehouse.table import bucket_expr, commit_files
+
+    keys = [(f"r{i}", "p") for i in range(40)]
+    bucket_of = {
+        (r["repo"], r["path"]): r["b"]
+        for r in spark.createDataFrame(keys, "repo string, path string")
+        .withColumn("b", bucket_expr(["repo", "path"], 4))
+        .collect()
+    }
+    model: dict = {}
+
+    def commit(run, rewritten):
+        """Run one commit; ``rewritten`` names the buckets it rewrote
+        (None: every bucket)."""
+        prev = table.current_snapshot().snapshot_id
+        run()
+        snap = table.current_snapshot()
+        assert snap.parent_id == prev
+        base = {p for fs in snap.files.values() for p in fs}
+        assert set(snap.file_stats) == base
+        if rewritten is None:
+            assert not any(snap.delta_files.values())
+        for b in rewritten or []:
+            assert not snap.delta_files.get(str(b))
+        own = {
+            os.path.relpath(p, table.root)
+            for kind in ("commit", "delta")
+            for p in glob.glob(
+                os.path.join(table.root, "data", f"{kind}-{snap.snapshot_id}-*", "*", "*.parquet")
+            )
+        }
+        assert {p for fs in commit_files(snap).values() for p in fs} == own
+        got = {(r["repo"], r["path"]): r["v"] for r in table.read().collect()}
+        assert got == model
+        return snap
+
+    def apply(rows):
+        for repo, path, v, op in rows:
+            if op == "delete":
+                model.pop((repo, path), None)
+            else:
+                model[(repo, path)] = v
+        return _updates(spark, rows)
+
+    seed = apply([(r, p, i, "insert") for i, (r, p) in enumerate(keys)])
+    commit(lambda: table.merge(seed), sorted(set(bucket_of.values())))
+    assert len(table.current_snapshot().files) == 4
+
+    # 1. CoW merge touching 2 of the 4 buckets
+    pick = [next(k for k in keys if bucket_of[k] == b) for b in (0, 1)]
+    upd = apply([(r, p, 100 + model[(r, p)], "update") for r, p in pick])
+    commit(lambda: table.merge(upd), [0, 1])
+
+    # 2. merge-on-read: deltas in every bucket
+    mor = apply(
+        [(r, p, -i, "update") for i, (r, p) in enumerate(keys) if i % 3 == 0]
+        + [(r, p, None, "delete") for i, (r, p) in enumerate(keys) if i % 5 == 1]
+    )
+    snap = commit(lambda: table.merge_mor(mor), [])
+    assert str(2) in snap.delta_files
+
+    # 3. CoW merge deleting every live row of bucket 2
+    doomed = apply([(r, p, None, "delete") for (r, p) in list(model) if bucket_of[(r, p)] == 2])
+    snap = commit(lambda: table.merge(doomed), [2])
+    assert "2" not in snap.files and "2" not in snap.delta_files
+
+    # 4. compact folds the remaining deltas
+    snap = commit(lambda: table.compact(), None)
+    assert snap.summary["compacted_buckets"]
+
+    # 5. rebucket, 6. cluster_by: whole-table rewrites
+    snap = commit(lambda: table.rebucket(8), None)
+    assert snap.n_buckets == 8
+    snap = commit(lambda: table.cluster_by("v", 5), None)
+    assert snap.cluster_spec["cols"] == ["v"]

@@ -191,3 +191,33 @@ def test_zorder_boundaries_persisted_in_spec(spark, table):
     assert spec["cols"] == ["x", "y"]
     assert spec["boundaries"] is not None and len(spec["boundaries"]) == 2
     assert all(len(b) > 0 for b in spec["boundaries"])
+
+
+def test_rebucket_cluster_and_merge_builder_jobs_carry_step_tags(spark, table):
+    """rebucket's write, a two-column cluster_by (its quantile pass and
+    its write) and a merge builder's bucket collect carry an
+    ``adps:<layer>.<step>`` job tag, like every other engine job."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        return list(
+            sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                jsc.statusStore().jobsList(None)
+            )
+        )
+
+    floor = max(j.jobId() for j in jobs())
+    table.rebucket(4)
+    table.cluster_by(["x", "y"], 400)
+    src = spark.createDataFrame([(1, 7)], "k long, x long")
+    table.merge_builder(src).when_matched_update(set={"x": F.col("s.x")}).execute()
+    newer = [j for j in jobs() if j.jobId() > floor]
+    assert newer
+    untagged = [
+        j.jobId()
+        for j in newer
+        if not any(t.startswith("adps:") for t in j.jobTags().mkString(",").split(","))
+    ]
+    assert untagged == []
