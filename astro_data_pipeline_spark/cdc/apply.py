@@ -85,7 +85,6 @@ def lww_collapse(
     hot_keys: list[tuple[str, str]] | None = None,
     n_salts: int = 8,
     bucket: F.Column | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """LSN-ordered last-writer-wins: ≤1 row per (repo, path).
 
@@ -123,20 +122,20 @@ def lww_collapse(
     observation-based metrics — measured 15-40x slower than the linear
     two-stage plan on a hot-burst batch.
 
-    **Bucket fusion** (``bucket`` + ``n_partitions`` given): the sink
-    wants output hash-clustered on the storage bucket — a deterministic
-    function of the group keys. Instead of collapse-shuffle followed by
-    a second content-bearing repartition-shuffle, the final grouping
-    becomes ``repartition(n_partitions, bucket)`` + ``groupBy(bucket,
-    repo, path)``: HashPartitioning(bucket) already satisfies the
-    aggregate's ClusteredDistribution(bucket, repo, path), so Catalyst
-    inserts no further exchange — ONE shuffle serves both the collapse
-    and the sink alignment, and everything downstream (sha derivation,
-    partitioned write) stays in that stage.
+    **Bucket fusion** (``bucket`` given): the sink wants output
+    hash-clustered on the storage bucket — a deterministic function of
+    the group keys. The final grouping becomes ``repartition(bucket)`` +
+    ``groupBy(bucket, repo, path)``: HashPartitioning(bucket) already
+    satisfies the aggregate's ClusteredDistribution, so ONE shuffle
+    serves both the collapse and the sink alignment, and everything
+    downstream (sha derivation, partitioned write) stays in that stage.
+    The exchange carries no partition count: AQE sizes it from the
+    measured map output, merging partitions but never splitting one, so
+    each bucket still lands in one task and one file per commit.
     """
     payload = [c for c in events.columns if c not in ("repo", "path")]
     w = F.struct(*[F.col(c) for c in payload]).alias("w")
-    fused = bucket is not None and n_partitions is not None
+    fused = bucket is not None
     bkt = [F.col("_bucket")] if fused else []
 
     # deterministic order for LSN ties (see docstring + lww_tie_expr);
@@ -148,9 +147,11 @@ def lww_collapse(
         return F.struct(F.col(prefix + "lsn"), t.alias("tie"))
 
     if not hot_keys:
-        src = events.withColumn("_bucket", bucket).repartition(
-            n_partitions, F.col("_bucket")
-        ) if fused else events
+        src = (
+            events.withColumn("_bucket", bucket).repartition(F.col("_bucket"))
+            if fused
+            else events
+        )
         collapsed = src.groupBy(*bkt, "repo", "path").agg(
             F.max_by(w, _ord()).alias("w")
         )
@@ -168,9 +169,7 @@ def lww_collapse(
         .agg(F.max_by(w, _ord()).alias("w"))
     )
     if fused:
-        stage1 = stage1.withColumn("_bucket", bucket).repartition(
-            n_partitions, F.col("_bucket")
-        )
+        stage1 = stage1.withColumn("_bucket", bucket).repartition(F.col("_bucket"))
     stage2 = stage1.groupBy(*bkt, "repo", "path").agg(
         F.max_by(F.col("w"), _ord("w.")).alias("w")
     )

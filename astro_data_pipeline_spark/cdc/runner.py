@@ -200,13 +200,13 @@ class CdcRunner:
         Bucket-fused collapse: ONE content-bearing shuffle serves both
         the LWW groupBy and the sink's bucket alignment (hash on the
         bucket — a function of the group keys — satisfies the agg's
-        required distribution, so no second exchange). The explicit
-        fixed-width repartition also pins the downstream sha/write
-        stage at n_buckets tasks; without it the work lands in an
-        AQE-coalesced post-agg stage (~64MB advisory => a handful of
-        partitions) and 2-4 tasks serialize the whole batch's content
-        (measured 10x+ stage blowups with the Arrow sha; the same
-        coalesce starves the parquet write even on the JVM path).
+        required distribution, so no second exchange). The exchange has
+        no fixed width: AQE coalesces it from measured map-output bytes
+        (never splitting a bucket), so a 4k-event batch writes in one
+        task instead of one per bucket. On local[4] (BENCH/WIDTH.md)
+        that cut cdcbench bulk_replay ingest CPU 0.58 -> 0.35 ms/event,
+        and the sf0.1 replay (612k events, 64 buckets) 10.7 -> 7.9 s
+        wall, 37.3 -> 26.5 CPU-s.
         """
         obs = Observation()
         valid = events.observe(obs, _quarantined()).filter(A.valid_predicate())
@@ -215,7 +215,6 @@ class CdcRunner:
             hot_keys=hot,
             n_salts=N_SALTS,
             bucket=bucket_expr(snap.key_cols, snap.n_buckets),
-            n_partitions=snap.n_buckets,
         )
         return obs, A.to_table_rows(collapsed, snap.schema)
 

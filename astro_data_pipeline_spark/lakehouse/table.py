@@ -1053,7 +1053,7 @@ class LakeTable:
         if fuse_bucket:
             df = df.withColumn(
                 BUCKET_COL, bucket_expr(key_cols, snap.n_buckets)
-            ).repartition(snap.n_buckets, F.col(BUCKET_COL))
+            ).repartition(F.col(BUCKET_COL))
             bkt = [F.col(BUCKET_COL)]
         resolved = df.groupBy(*bkt, *key_cols).agg(
             F.max_by(w, F.coalesce(F.col(SEQ_COL), F.lit(0))).alias("_w")
@@ -1708,7 +1708,7 @@ class LakeTable:
         # (zero data skipping) while the spec still claimed clustering
         with step(self.spark, "table.rebucket"):
             _, files = self._write_buckets(
-                result.repartition(n_buckets, F.col(BUCKET_COL)),
+                result.repartition(F.col(BUCKET_COL)),
                 cur, commit_id, "commit", spec=cur.cluster_spec,
             )
         return self._commit(
@@ -2146,15 +2146,16 @@ class LakeTable:
                     ).alias(BUCKET_COL),
                 )
 
-                # co-locate buckets before the partitioned write: one shuffle,
-                # files land one-per-bucket-per-task. A CoW rewrite of a
+                # co-locate buckets before the partitioned write: one shuffle
+                # that AQE coalesces but never splits, so each bucket's rows
+                # stay in one task and land as one file. A CoW rewrite of a
                 # touched bucket is delta-free, so compact will never revisit
                 # it — restore the cluster sort HERE or those buckets lose
                 # data skipping until a manual re-cluster (the sort is a local
                 # add-on to a rewrite already being paid for; boundaries are
                 # spec literals)
                 _, written = self._write_buckets(
-                    result.repartition(len(touched), F.col(BUCKET_COL)),
+                    result.repartition(F.col(BUCKET_COL)),
                     cur, commit_id, "commit", spec=cur.cluster_spec,
                 )
                 totals = observed_metrics(obs, joined, clf_aggs)
@@ -2260,17 +2261,12 @@ class LakeTable:
             )
         )
         # bucket-align before the partitioned write: without this, every
-        # upstream shuffle partition fans out one file per bucket it
-        # touches (partitions × buckets small files per commit — poison
-        # for read/compaction at scale); with it, ~one file per bucket.
-        # The extra shuffle moves only the key-collapsed batch. Callers
-        # that already repartitioned by the bucket expression pass
-        # ``bucket_aligned=True`` to skip the redundant shuffle.
-        to_write = (
-            delta
-            if bucket_aligned
-            else delta.repartition(cur.n_buckets, F.col(BUCKET_COL))
-        )
+        # upstream partition fans out one file per bucket it touches
+        # (partitions × buckets small files per commit); with it, one file
+        # per bucket, in as few tasks as AQE sizes from the batch's bytes
+        # (a ~50-row batch: 1 task, not n_buckets). Callers that already
+        # repartitioned by the bucket expression pass ``bucket_aligned=True``.
+        to_write = delta if bucket_aligned else delta.repartition(F.col(BUCKET_COL))
         with step(self.spark, "table.mor_write"):
             rel_dir, files = self._write_buckets(to_write, cur, commit_id, "delta")
             totals = observed_metrics(obs, updates, clf_aggs)

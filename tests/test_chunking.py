@@ -134,3 +134,61 @@ def test_substring_overlap_pairs_find_the_quote(spark, tmp_path):
            for r in dedup_substring_overlap_pairs(spark, sf).collect()}
     assert (1, 2) in got and got[(1, 2)] >= 2, got
     assert all(3 not in k for k in got), got
+
+
+def test_duplicate_passage_windows_match_python_slices(spark, tmp_path):
+    """``dedup_duplicate_passage_fraction`` cuts each doc into
+    floor(len/16) disjoint 16-word passages. Docs under 16 words, exact
+    multiples of 16 and 16k±1 words are checked against a pure-Python
+    split/slice model: passage counts, cross-doc duplicate counts and the
+    rounded fraction. Shared 16-word blocks are placed at and off the
+    window boundaries, so a window that slips by one word changes the
+    duplicate counts."""
+    import math
+    import random
+
+    from astro_data_pipeline_spark.textops.dedup import (
+        _PASSAGE_WORDS as W,
+        dedup_duplicate_passage_fraction,
+    )
+
+    rng = random.Random(7)
+    blocks = [[f"s{b}w{i}" for i in range(W)] for b in range(3)]
+    lengths = [1, 2, 7, 15] + [W * k + d for k in (1, 2, 3, 5) for d in (-1, 0, 1)]
+    rows, uniq = [], 0
+    for doc_id, n in enumerate(lengths * 2):
+        ws = []
+        while len(ws) < n:
+            if rng.random() < 0.5:
+                ws += blocks[rng.randrange(len(blocks))]
+            else:
+                k = rng.choice((1, 3, W))
+                ws += [f"u{uniq + i}" for i in range(k)]
+                uniq += k
+        rows.append((doc_id, " ".join(ws[:n])))
+
+    passages = {}
+    for doc_id, text in rows:
+        ws = text.split(" ")
+        passages[doc_id] = [
+            " ".join(ws[p * W:(p + 1) * W]) for p in range(len(ws) // W)
+        ]
+    holders = {}
+    for doc_id, ps in passages.items():
+        for p in ps:
+            holders.setdefault(p, set()).add(doc_id)
+    want = {}
+    for doc_id, ps in passages.items():
+        if ps:
+            dup = sum(len(holders[p]) >= 2 for p in ps)
+            want[doc_id] = (len(ps), dup, math.floor(dup / len(ps) * 1e6 + 0.5) / 1e6)
+    assert any(0 < d < n for n, d, _ in want.values())
+
+    got = {
+        r["doc_id"]: (r["n_passages"], r["n_dup_passages"], r["dup_passage_fraction"])
+        for r in dedup_duplicate_passage_fraction(spark, _docs_dir(tmp_path, rows)).collect()
+    }
+    assert got.keys() == want.keys()
+    for doc_id, (n, dup, frac) in want.items():
+        assert got[doc_id][:2] == (n, dup), (doc_id, got[doc_id], want[doc_id])
+        assert float(got[doc_id][2]) == frac, (doc_id, got[doc_id], want[doc_id])

@@ -754,3 +754,75 @@ def test_rewrite_commits_keep_the_manifest_rule(spark, table):
     assert snap.n_buckets == 8
     snap = commit(lambda: table.cluster_by("v", 5), None)
     assert snap.cluster_spec["cols"] == ["v"]
+
+
+def _write_stage_tasks(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    task count of the final stage of the group's last job — the
+    partitioned file write."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    last = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    return out, tracker.getStageInfo(max(last.stageIds)).numTasks
+
+
+def test_bucketed_write_width_follows_data(spark, tmp_path):
+    """A small MoR batch and a small CoW merge into a 16-bucket table each
+    write in ONE task: the bucket exchange is sized by AQE from the
+    batch's bytes, not pinned at one task per bucket (16) or per touched
+    bucket. AQE never splits a partition, so every touched bucket still
+    gets exactly one file per commit, and the table reads back as the
+    pandas last-writer-wins model."""
+    import pandas as pd
+
+    from astro_data_pipeline_spark.lakehouse.table import bucket_expr
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], n_buckets=16)
+    batches = [
+        [(f"r{i % 5}", f"p{i}", i, "insert") for i in range(50)],
+        [("r0", "p0", 100, "update"), ("r1", "p1", None, "delete"),
+         ("r2", "p2", 7, "update"), ("r3", "p3", 8, "update"), ("r9", "new", 1, "insert")],
+    ]
+
+    def buckets_of(rows):
+        df = _updates(spark, rows).select(bucket_expr(["repo", "path"], 16).alias("b"))
+        return {str(r["b"]) for r in df.distinct().collect()}
+
+    mor_buckets = buckets_of(batches[0])
+    (snap, _), tasks = _write_stage_tasks(
+        spark, "width-mor", lambda: t.merge_mor(_updates(spark, batches[0]))
+    )
+    assert tasks == 1
+    assert set(snap.delta_files) == mor_buckets
+    assert all(len(fs) == 1 for fs in snap.delta_files.values())
+
+    cow_buckets = buckets_of(batches[1])
+    assert len(cow_buckets) >= 3
+    (snap, _), tasks = _write_stage_tasks(
+        spark, "width-cow", lambda: t.merge(_updates(spark, batches[1]))
+    )
+    assert tasks == 1
+    commit_dir = f"data/commit-{snap.snapshot_id}-"
+    rewritten = {b: fs for b, fs in snap.files.items() if fs[0].startswith(commit_dir)}
+    assert set(rewritten) == cow_buckets
+    assert all(len(fs) == 1 for fs in rewritten.values())
+    assert not set(snap.delta_files) & cow_buckets
+
+    log = pd.DataFrame(
+        [r for batch in batches for r in batch], columns=["repo", "path", "v", "op"]
+    )
+    key = ["repo", "path"]
+    want = log.drop_duplicates(key, keep="last")
+    want = want[want["op"] != "delete"].drop(columns="op")
+    got = t.read().toPandas()
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+        check_dtype=False,
+    )

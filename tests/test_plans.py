@@ -105,6 +105,14 @@ def _fixture_events(spark):
     return spark.createDataFrame(pdf)
 
 
+def _assert_bucket_exchange_sized_by_aqe(p: str) -> None:
+    """The bucket exchange carries no partition count (REPARTITION_BY_COL,
+    which AQE may coalesce), and no fixed-width REPARTITION_BY_NUM
+    exchange is left to pin the write stage at one task per bucket."""
+    assert "REPARTITION_BY_COL" in p, p
+    assert "REPARTITION_BY_NUM" not in p, p
+
+
 def test_cdc_collapse_is_single_shuffle(spark):
     """The bucket-fused LWW collapse must plan exactly ONE Exchange when
     no hot keys need salting: the repartition on the storage bucket
@@ -127,6 +135,7 @@ def test_cdc_collapse_is_single_shuffle(spark):
         _, rows = runner._build_rows(events, snap, hot=[])
         p = plan(rows, "simple")
         assert p.count("Exchange") == 1, p
+        _assert_bucket_exchange_sized_by_aqe(p)
 
 
 def test_cdc_collapse_salted_adds_one_stage(spark):
@@ -148,6 +157,7 @@ def test_cdc_collapse_salted_adds_one_stage(spark):
         _, rows = runner._build_rows(events, snap, hot=[("r0", "p0")])
         p = plan(rows, "simple")
         assert p.count("Exchange") == 2, p
+        _assert_bucket_exchange_sized_by_aqe(p)
 
 
 def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
@@ -172,7 +182,9 @@ def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
     resolved = table._read_plan(
         snap, table._plan_read(snap, victims), fuse_bucket=True
     )
-    assert plan(resolved, "simple").count("Exchange") == 1
+    p = plan(resolved, "simple")
+    assert p.count("Exchange") == 1, p
+    _assert_bucket_exchange_sized_by_aqe(p)
 
 
 def test_lsn_range_prunes_row_groups(spark, tmp_path):
