@@ -1242,11 +1242,10 @@ def cdc_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in [ex.submit(writer, 0), ex.submit(writer, 1)]:
                 f.result()  # re-raise writer failures
 
-        chain = table.snapshot_chain()
-        tags = {s.summary.get("batch_id") for s in chain} - {None}
+        tags = table.committed_batch_ids()
         if tags != {"w0-b1", "w0-b2", "w1-b1", "w1-b2"}:
             raise RuntimeError(f"dropped commit under concurrency: {sorted(tags)}")
-        if len(chain) != 5:
+        if len(chain := table.snapshot_chain()) != 5:
             raise RuntimeError(f"expected create+4 commits, chain={len(chain)}")
         return _materialize(
             spark, table.read().select("event_id", "user_id", "val")

@@ -17,9 +17,11 @@ Design:
   inherits the whole stack for free: bucketed MERGE apply, time travel,
   branches, optimistic concurrency, and — load-bearing here — the
   exactly-once batch ledger. Each refresh commits ONCE with
-  ``batch_id = "mv:<from>-><to>"``; a crashed-and-retried refresh either
-  re-runs from the same ``from`` (commit never landed) or is skipped by
-  the ledger (it did), so the view never double-applies a delta range.
+  ``batch_id = "mv:<from>-><to>"`` and ``lsn_hi = <to>``; the view's
+  horizon is its ledger's high-water mark (``LakeTable.ledger``), atomic
+  with the refreshed state and kept through compaction and expiry. A
+  refresh commits on the view head it read the horizon from, so neither
+  a retry nor a racing refresh ever double-applies a delta range.
 - **Retractable aggregates** (count / sum / avg) maintain running
   storage columns: ``new = old + Σ(post contributions) − Σ(pre-image
   contributions)``. One aggregation over the changed rows, one
@@ -219,11 +221,7 @@ class IncrementalAggView:
         state = view._full_storage(base_snap)
         view.table.merge(
             state.withColumn("op", F.lit("insert")),
-            summary={
-                "batch_id": f"mv:init->{base_snap.snapshot_id}",
-                "run_scope": cls._SCOPE,
-                "mv_refresh_to": base_snap.snapshot_id,
-            },
+            summary=cls._summary("init", base_snap.snapshot_id),
         )
         return view
 
@@ -240,22 +238,17 @@ class IncrementalAggView:
             spark, root, base, specs, write_mode=meta.get("write_mode", "cow")
         )
 
-    def last_refresh_to(self) -> int:
-        """The base snapshot id the view is current through — read from
-        the newest refresh commit's summary (authoritative: it lands
-        atomically WITH the refreshed state). If maintenance commits have
-        pushed every refresh summary out of the retained chain the
-        horizon is genuinely unknown and resuming from a guess would
-        double-apply a delta range — refuse loudly; ``refresh(full=True)``
-        rebuilds from the base head."""
-        for snap in self.table.snapshot_chain():
-            to = snap.summary.get("mv_refresh_to")
-            if to is not None:
-                return int(to)
-        raise ValueError(
-            "refresh horizon lost (refresh commits expired from the view's "
-            "chain); run refresh(full=True) to rebuild"
-        )
+    @classmethod
+    def _summary(cls, frm, to: int) -> dict:
+        """The ledger fields of a commit applying base range ``(frm, to]``
+        (``frm`` is ``"init"``/``"full"`` for a full computation).
+        ``mv_refresh_to`` repeats ``lsn_hi`` for history readers."""
+        return {
+            "batch_id": f"mv:{frm}->{to}",
+            "run_scope": cls._SCOPE,
+            "lsn_hi": to,
+            "mv_refresh_to": to,
+        }
 
     # -- reads ---------------------------------------------------------
 
@@ -337,28 +330,31 @@ class IncrementalAggView:
         them for dirty groups (a retraction reached the stored extreme
         and no post-image did) and rescan the base for those groups.
         ``full=True`` recomputes every group from the base head instead
-        (the escape hatch for a lost horizon or a CoW/compacted range the
-        changelog cannot replay).
+        (the escape hatch for a range the changelog cannot replay, or a
+        view restored to before its seed, whose ledger holds no refresh).
 
         The returned stats carry ``dirty_candidates`` and
         ``dirty_rescans``; the refresh commit's summary records
         ``mv_dirty_rescans``, so ``view.table.history()`` shows per
         refresh whether it rescanned.
 
-        The view head is read first and committed on, so a refresh
-        committed meanwhile by another handle raises
-        ``CommitConflictError`` instead of landing the range twice."""
+        ``from`` is the view ledger's high-water mark at the view head,
+        and the refresh commits on that head, so a refresh committed
+        meanwhile by another handle raises ``CommitConflictError``
+        instead of landing the range twice."""
         base_snap = self.base.current_snapshot()
         to = base_snap.snapshot_id
         if full:
             return self._refresh_full(base_snap)
         vsnap = self.table.current_snapshot()
-        frm = self.last_refresh_to()
+        frm = self.table.ledger(self._SCOPE, snapshot=vsnap).lsn_hi
+        if frm is None:
+            raise ValueError(
+                "refresh horizon lost (no refresh on the view's ledger); "
+                "run refresh(full=True) to rebuild"
+            )
         if to == frm:
             return {"from": frm, "to": to, "noop": True}
-        batch_id = f"mv:{frm}->{to}"
-        if batch_id in self.table.committed_batch_ids(run_scope=self._SCOPE):
-            return {"from": frm, "to": to, "noop": True, "ledger_skip": True}
 
         gcols = self.group_cols
         need = {s.col for s in self.specs if s.col is not None}
@@ -562,12 +558,7 @@ class IncrementalAggView:
         rows = rows.withColumn(
             "op", F.when(F.col(self._N) <= 0, "delete").otherwise("upsert")
         )
-        refresh_summary = {
-            "batch_id": batch_id,
-            "run_scope": self._SCOPE,
-            "mv_refresh_to": to,
-            "mv_dirty_rescans": n_dirty,
-        }
+        refresh_summary = {**self._summary(frm, to), "mv_dirty_rescans": n_dirty}
         with step(self.spark, "matview.merge"):
             if self.write_mode == "mor":
                 # delta-append refresh: the view keeps its own changelog
@@ -610,11 +601,7 @@ class IncrementalAggView:
         fn = self.table.merge_mor if self.write_mode == "mor" else self.table.merge
         _, metrics = fn(
             up.unionByName(dead_rows, allowMissingColumns=True),
-            summary={
-                "batch_id": f"mv:full->{to}",
-                "run_scope": self._SCOPE,
-                "mv_refresh_to": to,
-            },
+            summary=self._summary("full", to),
             snapshot=vsnap,
         )
         return {"from": None, "to": to, "noop": False, "full": True, **metrics}

@@ -15,11 +15,13 @@ Guarantees, all inherited from existing machinery rather than
 re-implemented:
 
 - **Exactly-once**: each sync is one MERGE on the replica stamped with
-  ``batch_id = "repl:<src_root>:<from>-><to>"`` under a replication
-  run-scope; a crashed-and-retried sync either re-runs the same range
-  or is skipped by the replica's ledger. The sync horizon rides the
-  replication commit's summary (atomic with the applied rows), exactly
-  like the matview refresh horizon.
+  ``batch_id = "repl:<src_root>:<from>-><to>"`` and ``lsn_hi = <to>``
+  under run scope ``replication:<src_root>``. The sync horizon is that
+  scope's high-water mark on the replica's ledger (``LakeTable.ledger``):
+  atomic with the applied rows, kept through compaction and expiry, one
+  per source. A sync commits on the replica head it read the horizon
+  from, so neither a retry nor a racing sync double-applies a range —
+  exactly like the matview refresh horizon.
 - **O(changed rows)**: the source side scans only the delta files of
   the in-range commits (``changes()``), projected to the replica's
   columns, so a column-pruned replica never moves the source's payload
@@ -49,8 +51,6 @@ class Replicator:
     always replicate — they are the merge identity on both sides.
     """
 
-    _SCOPE = "replication"
-
     def __init__(
         self,
         source: LakeTable,
@@ -59,6 +59,7 @@ class Replicator:
     ):
         self.source = source
         self.replica = replica
+        self._scope = f"replication:{source.root}"
         src_snap = source.current_snapshot()
         rep_snap = replica.current_snapshot()
         if src_snap is None or rep_snap is None:
@@ -132,15 +133,11 @@ class Replicator:
 
     # -- sync ----------------------------------------------------------
 
-    def _batch_id(self, frm, to: int) -> str:
-        return f"repl:{self.source.root}:{frm}->{to}"
-
     def _summary(self, frm, to: int) -> dict:
         return {
-            "batch_id": self._batch_id(frm, to),
-            "run_scope": self._SCOPE,
-            "repl_synced_to": to,
-            "repl_source": self.source.root,
+            "batch_id": f"repl:{self.source.root}:{frm}->{to}",
+            "run_scope": self._scope,
+            "lsn_hi": to,
         }
 
     def _initial_sync(self, src_snap) -> None:
@@ -154,21 +151,6 @@ class Replicator:
             rows, summary=self._summary("init", src_snap.snapshot_id)
         )
 
-    def synced_to(self) -> int:
-        """The source snapshot the replica is consistent with — read
-        from the newest replication commit (atomic with its rows). Lost
-        horizon (every replication commit expired from the replica's
-        chain) is loud: resuming from a guess would double-apply."""
-        for snap in self.replica.snapshot_chain():
-            if snap.summary.get("repl_source") == self.source.root:
-                to = snap.summary.get("repl_synced_to")
-                if to is not None:
-                    return int(to)
-        raise ValueError(
-            "replication horizon lost (replication commits expired from "
-            "the replica's chain); re-seed with create_replica"
-        )
-
     def sync(self, mode: str = "mor", evolve: bool = True) -> dict:
         """Apply the source's net changes since the last sync as ONE
         atomic MERGE on the replica. ``mode='mor'`` appends (the
@@ -180,15 +162,24 @@ class Replicator:
         ``evolve_schema`` adds them to the replica), and a losslessly
         WIDENED replicated column widens the replica the same way. With
         ``evolve=False`` an evolved batch fails the replica's
-        conformance check loudly instead."""
+        conformance check loudly instead.
+
+        ``from`` is this source's mark on the replica ledger at the
+        replica head, and the merge (evolve commit included) commits on
+        that head, so a sync committed meanwhile by another handle raises
+        ``CommitConflictError``. A replica with no mark from this source
+        raises: resuming from a guess would double-apply."""
         src_snap = self.source.current_snapshot()
         to = src_snap.snapshot_id
-        frm = self.synced_to()
+        rep_snap = self.replica.current_snapshot()
+        frm = self.replica.ledger(self._scope, snapshot=rep_snap).lsn_hi
+        if frm is None:
+            raise ValueError(
+                f"replication horizon lost (no sync from {self.source.root} "
+                "on the replica's ledger); re-seed with create_replica"
+            )
         if to == frm:
             return {"from": frm, "to": to, "noop": True}
-        batch_id = self._batch_id(frm, to)
-        if batch_id in self.replica.committed_batch_ids(run_scope=self._SCOPE):
-            return {"from": frm, "to": to, "noop": True, "ledger_skip": True}
         cols = self.columns
         ch = self.source.changes(frm, to, columns=cols)
         key_cols = src_snap.key_cols
@@ -200,5 +191,7 @@ class Replicator:
             .alias("op"),
         )
         fn = self.replica.merge_mor if mode == "mor" else self.replica.merge
-        _, metrics = fn(rows, summary=self._summary(frm, to), evolve_schema=evolve)
+        _, metrics = fn(
+            rows, summary=self._summary(frm, to), evolve_schema=evolve, snapshot=rep_snap
+        )
         return {"from": frm, "to": to, "noop": False, **metrics}

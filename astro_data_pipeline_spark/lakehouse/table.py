@@ -316,13 +316,30 @@ def commit_files(snap: Snapshot) -> dict[str, list[str]]:
 
 
 def ledger_records(snap: Snapshot):
-    """The exactly-once ledger records ``snap`` carries, as
-    ``{batch_id, run_scope, lsn_hi}`` dicts: its own batch (if it has
-    one), then the ``inherited_batches`` that ``expire_snapshots`` folded
-    into it from expired snapshots."""
+    """The exactly-once ledger records ``snap`` carries, as dicts of the
+    ``batch_id``, ``run_scope`` and ``lsn_hi`` its summary holds: its own
+    batch (if it has one), then the ``inherited_batches`` that
+    ``expire_snapshots`` folded into it from expired snapshots. ``lsn_hi``
+    is the source position the commit applied through: the WAL LSN for
+    replay batches and stream epochs, the source snapshot id (the
+    changelog's offset) for view refreshes and replica syncs."""
     if snap.summary.get("batch_id") is not None:
-        yield {k: snap.summary.get(k) for k in ("batch_id", "run_scope", "lsn_hi")}
+        yield {
+            k: snap.summary[k]
+            for k in ("batch_id", "run_scope", "lsn_hi")
+            if k in snap.summary
+        }
     yield from snap.summary.get("inherited_batches", [])
+
+
+class Ledger(NamedTuple):
+    """What one run scope has applied, as of one snapshot
+    (``LakeTable.ledger``): its committed batch ids and its high-water
+    mark, the largest non-negative ``lsn_hi`` among them (None if no
+    commit recorded one)."""
+
+    batch_ids: set
+    lsn_hi: int | None
 
 
 # ---------------------------------------------------- snapshot-chain reads
@@ -624,7 +641,7 @@ class LakeTable:
         """View of this table whose head is branch ``name`` (must exist —
         ``create_branch`` first). Every operation works on a branch view:
         merges, schema evolution, restore, time travel, the replay
-        runner's exactly-once ledger (``committed_batch_ids`` walks the
+        runner's exactly-once ledger (``ledger`` walks the
         branch's chain, which shares main's history up to the fork)."""
         t = LakeTable(self.spark, self.root, ref=name)
         if t.current_snapshot() is None:
@@ -825,20 +842,36 @@ class LakeTable:
         )
         return self.spark.createDataFrame(rows, schema)
 
-    def committed_batch_ids(self, run_scope: str | None = None) -> set:
-        """Batch ids already durably applied (exactly-once resume check).
-
-        Includes batches whose snapshots ``expire_snapshots`` has dropped:
-        expiry folds their ids into the oldest kept snapshot's
-        ``inherited_batches`` ledger, so the resume horizon is NOT capped
-        by the snapshot retention window (a resume over the full WAL must
-        skip every batch ever committed, not just the last ``keep_last``)."""
-        return {
-            r["batch_id"]
-            for snap in self.snapshot_chain()
+    def ledger(
+        self, run_scope: str | None = None, snapshot: Snapshot | None = None
+    ) -> Ledger:
+        """The exactly-once ledger of ``run_scope`` (default: every scope)
+        as of ``snapshot`` (default: this ref's head), from one chain walk
+        over every ``ledger_records`` entry: replay resume, stream epochs,
+        view refreshes and replica syncs all read it here. Expiry folds
+        expired commits' records into ``inherited_batches``, so neither
+        the batch ids nor the mark is capped by retention; a restore drops
+        the undone commits' records. The largest mark is the newest one
+        because every ledgered commit compare-and-swaps on the head it
+        read its mark from."""
+        head = (
+            read_hint(self._meta, self.ref) if snapshot is None else snapshot.snapshot_id
+        )
+        chain = [] if head is None else commits_between(self._meta, None, head)
+        records = [
+            r
+            for snap in chain
             for r in ledger_records(snap)
             if run_scope is None or r.get("run_scope") == run_scope
-        }
+        ]
+        marks = [int(r["lsn_hi"]) for r in records if r.get("lsn_hi") is not None]
+        hi = max((m for m in marks if m >= 0), default=None)
+        return Ledger({r["batch_id"] for r in records}, hi)
+
+    def committed_batch_ids(self, run_scope: str | None = None) -> set:
+        """Batch ids already durably applied (exactly-once resume check):
+        ``ledger(run_scope).batch_ids``."""
+        return self.ledger(run_scope).batch_ids
 
     def _atomic_write(self, path: str, payload: str) -> None:
         """Durable atomic file publish: write temp, fsync the DATA, rename,
@@ -1373,27 +1406,6 @@ class LakeTable:
                     f"changes(columns=...) not value columns of the table: {bad}"
                 )
             val_cols = [c for c in val_cols if c in set(columns)]
-        if not delta_files:
-            # same positional order as the non-empty branch (key cols,
-            # value cols, change_type) — table schemas need not list the
-            # key columns first, and positional consumers (unionAll,
-            # appending writers) must see one shape
-            fields = {f.name: f for f in to_snap.schema.fields}
-            empty = T.StructType(
-                [fields[c] for c in key_cols]
-                + [fields[c] for c in val_cols]
-                + [T.StructField("change_type", T.StringType())]
-                + (
-                    [
-                        T.StructField(f"_pre_{c}", fields[c].dataType)
-                        for c in val_cols
-                    ]
-                    if with_preimage
-                    else []
-                )
-            )
-            return self.spark.createDataFrame([], empty)
-
         # Net winner per key across the in-range deltas (same W1 primitive
         # as read-time resolution, tombstones kept for classification).
         with step(self.spark, "table.changes"):
@@ -1417,8 +1429,13 @@ class LakeTable:
         # straight off the commits' manifests), only the key columns.
         # Pruning is valid only while every in-range snapshot shares
         # ``from``'s bucket spec; across a rebucket those ids belong to a
-        # different layout, so probe all buckets.
-        touched = sorted(int(b) for b in delta_files) if spec_stable else None
+        # different layout, so probe all buckets. A range with no deltas
+        # probes none: both scans are then empty and no job runs.
+        touched = (
+            sorted(int(b) for b in delta_files)
+            if spec_stable or not delta_files
+            else None
+        )
         with step(self.spark, "table.changes"):
             prior_scan = self.read(snapshot=from_snap, buckets=touched)
         if with_preimage:
@@ -1528,6 +1545,7 @@ class LakeTable:
         batch_schema: T.StructType,
         reserved: frozenset[str] | set[str] = frozenset(),
         summary: dict | None = None,
+        snapshot: Snapshot | None = None,
     ) -> list[Snapshot]:
         """Evolve the table to accept ``batch_schema`` (Delta
         ``mergeSchema`` analog): ADD columns the table lacks and WIDEN
@@ -1547,8 +1565,9 @@ class LakeTable:
         batch both adds and widens, ONE combined metadata commit is
         written (a crash can never leave a half-evolved schema, and the
         snapshot chain — walked by resume ledgers — grows by one, not
-        two)."""
-        cur = self._head()
+        two). The commit compare-and-swaps against ``snapshot`` (default:
+        the head)."""
+        cur = self._head(snapshot)
         table_types = {f.name: f.dataType for f in cur.schema.fields}
         skip = set(reserved) | set(cur.dropped_cols)
         new = [
@@ -2011,20 +2030,18 @@ class LakeTable:
         self, updates: DataFrame, op_col: str, evolve_schema: bool, snapshot: Snapshot | None
     ) -> Snapshot:
         """The snapshot a merge plans and commits on: the caller's
-        ``snapshot``, else the head after the optional evolve commit
-        (which moves the head, so the two exclude each other)."""
+        ``snapshot`` (else the head), advanced by the optional evolve
+        commit. That commit compare-and-swaps against it, so a merge whose
+        rows were read at ``snapshot`` still commits only onto it."""
+        cur = self._head(snapshot)
         if evolve_schema:
-            if snapshot is not None:
-                raise ValueError(
-                    "snapshot= cannot be combined with evolve_schema=True: "
-                    "the evolve commit moves the head past it"
-                )
             # deliberately NOT the caller's summary: a batch_id stamped on
             # the metadata commit would mark the batch committed before its
             # data lands — a crash between evolve and merge would then make
             # exactly-once resume skip the data forever
-            self.evolve_to(updates.schema, reserved={op_col})
-        return self._head(snapshot)
+            evolved = self.evolve_to(updates.schema, reserved={op_col}, snapshot=cur)
+            cur = evolved[-1] if evolved else cur
+        return cur
 
     def merge(
         self,
@@ -2059,8 +2076,9 @@ class LakeTable:
         dropping unknown columns / refusing wider types.
 
         ``snapshot``: the snapshot the caller read ``updates`` from. The
-        merge plans on it and commits only while it is still the head,
-        else raises ``CommitConflictError`` (see ``_merge_base``).
+        merge (and the evolve commit, with ``evolve_schema``) plans on it
+        and commits only while it is still the head, else raises
+        ``CommitConflictError`` (see ``_merge_base``).
         """
         from pyspark.sql import Observation
 
@@ -2695,11 +2713,13 @@ class LakeTable:
         commits fall OFF the snapshot chain. That one choice makes every
         chain-walking contract correct with no special cases:
 
-        - ``committed_batch_ids`` no longer sees the undone commits, so
+        - ``ledger()`` no longer sees the undone commits, so
           their batch ids leave the exactly-once ledger and a WAL replay
           RE-APPLIES them — rewind-and-replay, the reason a CDC sink
           restores at all (fix the transform, restore, resume; the ledger
-          rewind is recorded in the summary as ``rolled_back_batches``).
+          rewind is recorded in the summary as ``rolled_back_batches``,
+          the undone commits' ``ledger_records``). A view or replica whose
+          marks the restore undid resumes from its last retained mark.
           A batch re-committed AFTER the restore re-enters the ledger via
           its new snapshot, so re-applied work is skipped exactly like
           first-time work on the next resume.
@@ -2741,14 +2761,6 @@ class LakeTable:
                 f"{cur.snapshot_id}: expired, undone by a prior restore, "
                 "or never committed"
             )
-        rolled_back = [
-            {
-                "batch_id": s.summary.get("batch_id"),
-                "run_scope": s.summary.get("run_scope"),
-            }
-            for s in undone
-            if s.summary.get("batch_id") is not None
-        ]
         new = target.child(
             # ids stay monotonic (never reuse an undone id): merge commit
             # sequences are snapshot ids, and LWW-by-_seq needs every
@@ -2758,7 +2770,7 @@ class LakeTable:
                 "operation": "restore",
                 "restored_from": target.snapshot_id,
                 "undone_snapshots": [s.snapshot_id for s in undone],
-                "rolled_back_batches": rolled_back,
+                "rolled_back_batches": [r for s in undone for r in ledger_records(s)],
                 **(summary or {}),
             },
         )
@@ -2786,15 +2798,18 @@ class LakeTable:
         keeps branches short-lived by design.
 
         Crash-safe ordering: the oldest KEPT snapshot is rewritten FIRST —
-        parent link cut AND the expired snapshots' batch ids folded into
-        its ``inherited_batches`` ledger in one atomic file publish — and
+        parent link cut AND the expired snapshots' ``ledger_records``
+        (batch id, run scope and ``lsn_hi`` mark) folded into its
+        ``inherited_batches`` in one atomic file publish — and
         only then are expired snapshot JSONs and orphan data files
         removed. The reverse order leaves a crash window where a kept
         snapshot still points at a deleted parent, bricking every
         subsequent chain walk (resume, time travel, batch-id skip checks).
-        The inherited ledger keeps ``committed_batch_ids`` complete past
-        the retention window, so exactly-once resume over the full WAL
-        never re-applies an expired-but-committed batch."""
+        The inherited records keep ``ledger()`` complete past the
+        retention window: exactly-once resume over the full WAL never
+        re-applies an expired-but-committed batch, and a view, replica or
+        stream keeps its applied-through mark after its own commits
+        expire."""
         if self.ref != "main":
             raise RuntimeError("expire_snapshots runs from the 'main' view")
         branches = sorted(n for n in self.refs() if n != "main")
@@ -2817,16 +2832,7 @@ class LakeTable:
                 k = (r["batch_id"], r.get("run_scope"))
                 if k not in seen:
                     seen.add(k)
-                    # lsn_hi rides along so streaming resume can rebuild
-                    # its order-guard high-water mark past the retention
-                    # window
-                    ledger.append(
-                        {
-                            "batch_id": r["batch_id"],
-                            "run_scope": r.get("run_scope"),
-                            "lsn_hi": r.get("lsn_hi"),
-                        }
-                    )
+                    ledger.append(r)
             oldest.parent_id = None
             oldest.summary = {**oldest.summary, "inherited_batches": ledger}
             self._write_snapshot(oldest)

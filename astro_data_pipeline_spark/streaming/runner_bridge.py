@@ -15,7 +15,9 @@ semantics, two triggers.
   run_id is therefore the stream's stable identity: pair it 1:1 with
   the checkpoint dir (same run_id on restart = exactly-once resume; new
   checkpoint = new run_id).
-- **The commit ledger is read once**, scoped to this run, and kept
+- **The commit ledger is read once**, scoped to this run
+  (``LakeTable.ledger``: this run's committed epoch ids and its
+  applied-LSN high-water mark, expired commits included), and kept
   current incrementally — the per-epoch fallback re-walks the whole
   snapshot chain (one JSON parse per snapshot), O(epochs × snapshots)
   over a long drain.
@@ -41,7 +43,6 @@ from pyspark.sql import functions as F
 
 from ..cdc.runner import CdcRunner
 from ..lakehouse import LakeTable
-from ..lakehouse.table import ledger_records
 from ..session import step
 
 
@@ -62,29 +63,6 @@ class StreamApplier:
         self._committed: set[str] | None = None
         self._last_hi: int | None = None
 
-    def _seed_from_ledger(self) -> None:
-        """Seed this run's committed batch ids and its applied-LSN
-        high-water mark from the table (survives stream restarts).
-
-        Batch ids come from ``committed_batch_ids`` — which includes the
-        ``inherited_batches`` ledger that ``expire_snapshots`` folds
-        expired snapshots into; a hand-rolled chain walk here would lose
-        committed epochs past the retention window and either re-apply
-        them (strict_order off) or brick the stream on the order guard
-        (strict_order on) after any expiry + checkpoint loss. The
-        high-water mark likewise reads both live summaries and inherited
-        ledger records (``ledger_records``)."""
-        self._committed = self.table.committed_batch_ids(run_scope=self.run_id)
-        his = [
-            int(r["lsn_hi"])
-            for snap in self.table.snapshot_chain()
-            for r in ledger_records(snap)
-            if r.get("run_scope") == self.run_id
-            and r.get("lsn_hi") is not None
-            and int(r["lsn_hi"]) >= 0
-        ]
-        self._last_hi = max(his, default=None)
-
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> dict | None:
         """Apply one micro-batch exactly-once (foreachBatch signature)."""
         # One WAL segment per epoch is bounded — pin it so the apply
@@ -98,7 +76,8 @@ class StreamApplier:
 
     def _apply_pinned(self, batch_df: DataFrame, epoch_id: int) -> dict | None:
         if self._committed is None:
-            self._seed_from_ledger()
+            # survives stream restarts and snapshot expiry
+            self._committed, self._last_hi = self.table.ledger(self.run_id)
         runner = CdcRunner(
             batch_df.sparkSession, self.table, run_id=self.run_id, mode=self.mode
         )

@@ -454,6 +454,62 @@ def test_expire_snapshots_collects_crashed_pipeline_orphans(
     assert live <= parquet_files()  # live files untouched
 
 
+def test_kill_between_snapshot_write_and_hint_flip(
+    spark, tmp_path, fixture_meta, oracle_state, monkeypatch
+):
+    """A MoR replay killed after a commit's snapshot JSON is written but
+    before the version hint flips leaves an orphan snapshot: its batch is
+    not on the ledger, a fresh runner's resume converges to the oracle,
+    and expire_snapshots removes the orphan JSON and its delta files."""
+    import os
+
+    from astro_data_pipeline_spark.lakehouse.table import commit_files, read_snapshot
+
+    table = _new_table(spark, tmp_path)
+    events = read_event_log(spark, fixture_meta["v1_path"], fixture_meta["v2_path"])
+    real = LakeTable._commit_hint
+    calls = {"n": 0}
+
+    def dying(self, sid):
+        calls["n"] += 1
+        if calls["n"] == 3:
+            raise RuntimeError("killed before the hint flip")
+        return real(self, sid)
+
+    monkeypatch.setattr(LakeTable, "_commit_hint", dying)
+    with pytest.raises(RuntimeError, match="hint flip"):
+        CdcRunner(spark, table, run_id="r1", mode="mor").replay(events, n_batches=6)
+    monkeypatch.setattr(LakeTable, "_commit_hint", real)
+
+    meta = os.path.join(table.root, "metadata")
+    on_chain = {s.snapshot_id for s in table.snapshot_chain()}
+    on_disk = {
+        int(fn[len("snapshot-"):-len(".json")])
+        for fn in os.listdir(meta)
+        if fn.startswith("snapshot-") and fn.endswith(".json")
+    }
+    (orphan_id,) = on_disk - on_chain
+    orphan = read_snapshot(meta, orphan_id)
+    assert orphan.summary["operation"] == "merge-mor"
+    led = table.ledger("r1")
+    assert led.batch_ids and orphan.summary["batch_id"] not in led.batch_ids
+    assert led.lsn_hi < orphan.summary["lsn_hi"]
+    orphan_files = [
+        os.path.join(table.root, p) for ps in commit_files(orphan).values() for p in ps
+    ]
+    assert orphan_files and all(os.path.exists(f) for f in orphan_files)
+
+    reports = CdcRunner(spark, table, run_id="r2", mode="mor").replay(events, n_batches=6)
+    assert sum(r.status == "skipped" for r in reports) == len(led.batch_ids)
+    want = _normalize(oracle_state)
+    pd.testing.assert_frame_equal(_final_state(table), want, check_dtype=False)
+
+    table.expire_snapshots(keep_last=100)
+    assert not os.path.exists(os.path.join(meta, f"snapshot-{orphan_id}.json"))
+    assert not any(os.path.exists(f) for f in orphan_files)
+    pd.testing.assert_frame_equal(_final_state(table), want, check_dtype=False)
+
+
 # ------------------------------------------------------------- salting
 
 

@@ -273,22 +273,26 @@ def test_create_race_is_exclusive(spark, tmp_path):
         "merge_builder-cow",
         "merge_builder-mor",
         "refresh",
+        "replica_sync",
     ],
 )
 def test_read_then_commit_ops_conflict_on_interloper(spark, table, tmp_path, case):
-    """delete_where, update_where, a merge builder and a view refresh plan
-    their rows on the snapshot they read, so a commit that lands before
-    their merge commits must raise CommitConflictError — never be
-    overwritten (a lost update), missed (a concurrent insert that matches
-    the delete predicate) or doubled (one refresh range committed twice).
-    The interloper's commit stays the head."""
+    """delete_where, update_where, a merge builder, a view refresh and a
+    replica sync plan their rows on the snapshot they read, so a commit
+    that lands before their merge commits must raise CommitConflictError —
+    never be overwritten (a lost update), missed (a concurrent insert that
+    matches the delete predicate) or doubled (one refresh or sync range
+    committed twice). The interloper's commit stays the head."""
     from pyspark.sql import functions as F
 
+    from astro_data_pipeline_spark.lakehouse import Replicator
     from astro_data_pipeline_spark.lakehouse.matview import AggSpec, IncrementalAggView
 
     table.merge(_updates(spark, [("r1", "a", 1, "insert"), ("r2", "b", 2, "insert")]))
     target = table
-    mode = "mor" if case.endswith("mor") or case == "update_where" else "cow"
+    mode = (
+        "mor" if case.endswith("mor") or case in ("update_where", "replica_sync") else "cow"
+    )
     other = LakeTable.load(spark, table.root)
 
     def interlope():
@@ -305,6 +309,15 @@ def test_read_then_commit_ops_conflict_on_interloper(spark, table, tmp_path, cas
             IncrementalAggView.load(spark, view.root, base=table).refresh()
 
         run = view.refresh
+    elif case == "replica_sync":
+        replicator = Replicator.create_replica(table, str(tmp_path / "rep"))
+        table.merge_mor(_updates(spark, [("r3", "c", 3, "insert")]))
+        target = replicator.replica
+
+        def interlope():
+            Replicator(table, LakeTable.load(spark, target.root)).sync()
+
+        run = replicator.sync
     elif case.startswith("delete_where"):
         def run():
             table.delete_where(F.col("v") == 1, mode=mode)

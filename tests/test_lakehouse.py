@@ -529,9 +529,10 @@ def test_expire_preserves_batch_ledger_and_chain_integrity(spark, table):
 
 
 def test_changes_empty_range_matches_nonempty_column_order(spark, tmp_path):
-    """The delta-free changes() branch must emit the same positional
-    shape (key cols, value cols, change_type) as the non-empty branch,
-    even when the table schema lists a value column first."""
+    """A delta-free changes() range must emit the same positional shape
+    and types (key cols, value cols, change_type, pre-images) as a
+    non-empty one, even when the table schema lists a value column first,
+    and building it must submit no Spark job."""
     schema = T.StructType(
         [
             T.StructField("v", T.LongType(), True),
@@ -546,10 +547,21 @@ def test_changes_empty_range_matches_nonempty_column_order(spark, tmp_path):
     )
     t.merge_mor(up)
     s2 = t.current_snapshot().snapshot_id
-    nonempty = t.changes(s1, s2)
-    empty = t.changes(s2, s2)
-    assert empty.columns == nonempty.columns == ["repo", "path", "v", "change_type"]
-    assert empty.count() == 0
+    for pre in (False, True):
+        nonempty = t.changes(s1, s2, with_preimage=pre)
+        sc = spark.sparkContext
+        group = f"changes-empty-{pre}"
+        sc.setJobGroup(group, group)
+        try:
+            empty = t.changes(s2, s2, with_preimage=pre)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        cols = ["repo", "path", "v", "change_type"] + (["_pre_v"] if pre else [])
+        assert empty.columns == nonempty.columns == cols
+        assert empty.dtypes == nonempty.dtypes
+        assert empty.count() == 0
 
 
 def test_lineage_empty_before_first_merge(table):

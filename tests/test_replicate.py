@@ -1,6 +1,7 @@
 """Logical replication over the change feed: initial seed, incremental
 sync (insert/update/delete), column-pruned replicas, idempotent sync
-under the ledger, fan-out chains, lost-horizon loudness."""
+under the ledger, fan-out chains, a horizon that outlives sink
+maintenance."""
 
 from __future__ import annotations
 
@@ -84,7 +85,8 @@ def test_sync_is_idempotent_and_noop_without_changes(spark, tmp_path, source):
     assert len(r.replica.snapshot_chain()) == chain
     # the applied range is in the replica's ledger under the repl scope
     assert any(
-        b.startswith("repl:") for b in r.replica.committed_batch_ids(run_scope="replication")
+        b.startswith("repl:")
+        for b in r.replica.committed_batch_ids(run_scope=f"replication:{source.root}")
     )
 
 
@@ -182,3 +184,40 @@ def test_sync_across_base_rebucket(spark, tmp_path, source):
     stats = r.sync()
     assert stats["noop"] is False
     assert _state(r.replica) == _state(source)
+
+
+@pytest.mark.parametrize("sink", ["mor_view", "replica"])
+def test_horizon_survives_sink_maintenance(spark, tmp_path, source, sink):
+    """A merge-on-read view and a replica keep their applied-through mark
+    after compaction and expiry drop every refresh or sync commit from
+    their own chain: the mark rides the ledger records that expiry folds
+    into the oldest kept snapshot."""
+    from astro_data_pipeline_spark.lakehouse.matview import AggSpec, IncrementalAggView
+
+    if sink == "mor_view":
+        view = IncrementalAggView.create(
+            spark, str(tmp_path / "mv"), source, ["payload"],
+            [AggSpec("count", None, "n"), AggSpec("max", "v", "max_v")],
+            n_buckets=2, write_mode="mor",
+        )
+        table, advance = view.table, view.refresh
+
+        def check():
+            got = sorted(tuple(row) for row in view.read().collect())
+            assert got == sorted(tuple(row) for row in view.full_compute().collect())
+    else:
+        r = Replicator.create_replica(source, str(tmp_path / "rep"))
+        table, advance = r.replica, r.sync
+
+        def check():
+            cols = ("k", "v", "payload")
+            assert _state(r.replica, cols) == _state(source, cols)
+
+    source.merge_mor(_up(spark, [("a", 10, "pa", "update"), ("d", 4, "pd", "insert")]))
+    assert advance()["noop"] is False
+    assert table.compact() is not None
+    table.expire_snapshots(keep_last=1)
+    assert [s.summary["operation"] for s in table.snapshot_chain()] == ["compact"]
+    source.merge_mor(_up(spark, [("b", None, None, "delete"), ("e", 7, "pa", "insert")]))
+    assert advance()["noop"] is False
+    check()
