@@ -513,8 +513,10 @@ class CdcRunner:
         whose plan is built while this run's own detection job is still
         in flight. A continuous ingest always has a prior manifest, so at
         10^10-event scale batch 1 salts with the keys that were hot
-        minutes ago — exactly the ones likeliest to still be hot. Salting
-        is correctness-neutral either way."""
+        minutes ago — exactly the ones likeliest to still be hot.
+        ``expire_snapshots`` keeps the newest set on the re-rooted
+        snapshot when no kept commit records one. Salting is
+        correctness-neutral either way."""
         for snap in self.table.snapshot_chain():
             keys = snap.summary.get("hot_keys")
             if keys is not None:

@@ -22,15 +22,17 @@ evaluates every clause (first matching clause wins, Delta semantics),
 producing full rows + a routing op; unrouted rows are dropped (MERGE's
 "no clause applies → leave the row alone" is literally not emitting a
 row — the engine's merge treats absent keys as no-ops). The compiled
-rows then flow through ``merge`` (CoW) or ``merge_mor`` (the O(batch)
+rows then flow through ``merge`` (CoW: the rows are the touched buckets'
+newest delta in one bucket rewrite) or ``merge_mor`` (the O(batch)
 ingest path) unchanged, inheriting conformance checks, schema
-evolution, atomic commit, and the batch ledger.
+evolution, atomic commit, and the batch ledger. Either consumes them in
+one write action, so the clause join runs once.
 
 Cost model: the clause join reads only the buckets the source touches
 (same pruning as the apply path); at 10^10 rows the extra read vs the
 op-column path is the stored values of touched buckets — the price of
 referencing ``t.*`` in conditions at all, paid only by queries that
-need it.
+need it (a CoW rewrite scans those buckets again to rewrite them).
 
 Reference analog: the upsert in DataIngestionService (staging →
 catalog promote) is a plain key replace; the reference has no
@@ -47,7 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import materialize_barrier, step
+from ..session import step
 from .table import LakeTable, bucket_expr, is_lossless_widening
 
 
@@ -174,7 +176,7 @@ class MergeBuilder:
                 .collect()
             )
         tgt = (
-            self.table.read_buckets(tb, snapshot=cur)
+            self.table.read(snapshot=cur, buckets=tb)
             .withColumn("_t_present", F.lit(True))
             .alias("t")
         )
@@ -239,20 +241,11 @@ class MergeBuilder:
         rows = joined.select(*out_cols, op.alias("_mb_op")).filter(
             F.col("_mb_op").isNotNull()
         )
-        merge_fn = self.table.merge if mode == "cow" else self.table.merge_mor
         # commit on the snapshot the clause join read: a commit landing in
         # between would otherwise be overwritten by rows routed against
         # state it replaced
-        kwargs = {"op_col": "_mb_op", "summary": summary, "snapshot": cur}
-        if mode == "cow":
-            # pin the routed rows: the CoW merge full-outer-joins its
-            # updates against the SAME stored buckets the clause join
-            # just read — unpinned, the clause join (and its stored
-            # scan) re-executes inside the merge, doubling the target
-            # read. MoR consumes the rows in ONE action (delta write +
-            # observed metrics), so pinning there would only add a copy.
-            # Pinning plans the clause join, whose broadcast job runs here.
-            with step(self.table.spark, "table.merge"):
-                rows = materialize_barrier(rows, eager=False)
-            kwargs["touched_buckets"] = tb
-        return merge_fn(rows, **kwargs)
+        if mode == "mor":
+            return self.table.merge_mor(rows, op_col="_mb_op", summary=summary, snapshot=cur)
+        return self.table.merge(
+            rows, op_col="_mb_op", summary=summary, snapshot=cur, touched_buckets=tb
+        )

@@ -46,7 +46,8 @@ process, like Iceberg's remove-orphan-files action.
 
 Two merge strategies (both atomic, both exactly-once):
 
-- **copy-on-write** (``merge``): full-outer join per touched bucket,
+- **copy-on-write** (``merge``): a compaction of the touched buckets
+  with the batch as their newest delta — one bucket-fused LWW resolve,
   rewrites touched buckets. Read-optimal; write cost O(touched data).
 - **merge-on-read** (``merge_mor``): appends per-bucket delta files
   (upserts + tombstones) stamped with the commit sequence — write cost
@@ -75,9 +76,9 @@ scans the files it picks, and ``_read_plan`` resolves them. The one
 exception is ``changes()``, whose delta scan picks files by commit.
 ``LakeTable._commit`` is the one commit point on the write side: every
 commit but ``create``'s root and ``restore``'s child of its target takes
-its id, its child snapshot and its compare-and-swap there. ``_rewritten``
-is the one manifest edit of a bucket rewrite (CoW merge, compaction,
-rebucket, clustering).
+its id, its child snapshot and its compare-and-swap there. A bucket
+rewrite (CoW merge, compaction, rebucket, clustering) builds its rows in
+``_rewrite`` and edits the manifest with ``_rewritten``.
 """
 
 from __future__ import annotations
@@ -520,8 +521,8 @@ def null_safe_join(
     left: DataFrame, right: DataFrame, cols: list[str], how: str
 ) -> DataFrame:
     """Join on ``cols`` with NULL-safe key equality (``<=>``): a NULL
-    key/group value is legitimate (the merge path matches NULL keys via
-    eqNullSafe; SQL GROUP BY groups NULLs together), so every
+    key/group value is legitimate (the merge resolves a NULL key by
+    GROUP BY, which groups NULLs together), so every
     state-maintenance join must match it too — a plain USING join would
     classify each NULL-key row as brand-new and silently reset or drop
     its stored state. For non-semi joins the key columns are kept from
@@ -1066,38 +1067,50 @@ class LakeTable:
             return self.spark.read.schema(schema).parquet(*paths)
 
     def _resolve(
-        self, df: DataFrame, snap: Snapshot, fuse_bucket: bool = False
+        self, df: DataFrame, snap: Snapshot, fuse_bucket: bool = False,
+        n_buckets: int | None = None, batch_seq: int | None = None,
     ) -> DataFrame:
         """Merge-on-read resolution: last writer per key by commit sequence
         (max_by hash-agg — partial combine, skew-tolerant), tombstones
         dropped. The same LWW primitive the CDC collapse uses (W1).
 
-        ``fuse_bucket``: prepend the storage bucket to the grouping and
-        hash-repartition on it first — the repartition's distribution
-        satisfies the aggregation's required clustering (bucket is a
-        function of the keys), so resolution + bucket alignment for a
-        partitioned write share ONE shuffle. Same fusion as the ingest
-        collapse; without it a resolve-then-write pays two full passes of
-        the table through the exchange."""
+        ``fuse_bucket``: prepend the storage bucket (under ``n_buckets``,
+        default the snapshot's) to the grouping and hash-repartition on
+        it first — the repartition's distribution satisfies the
+        aggregation's required clustering (bucket is a function of the
+        keys), so resolution + bucket alignment for a partitioned write
+        share ONE shuffle. Same fusion as the ingest collapse; without it
+        a resolve-then-write pays two full passes of the table through
+        the exchange.
+
+        ``batch_seq`` (a CoW merge's batch rows carry it): keep tombstoned
+        winners as ``_tombstone``, and add ``_in_batch`` (a batch row names
+        the key) and ``_existed`` (the key's newest older row is live)."""
         key_cols = snap.key_cols
         val_cols = [f.name for f in snap.schema.fields if f.name not in key_cols]
+        seq = F.coalesce(F.col(SEQ_COL), F.lit(0))
         w = F.struct(*[F.col(c) for c in val_cols], F.col(TOMBSTONE_COL))
         bkt: list[F.Column] = []
         if fuse_bucket:
             df = df.withColumn(
-                BUCKET_COL, bucket_expr(key_cols, snap.n_buckets)
+                BUCKET_COL, bucket_expr(key_cols, n_buckets or snap.n_buckets)
             ).repartition(F.col(BUCKET_COL))
             bkt = [F.col(BUCKET_COL)]
-        resolved = df.groupBy(*bkt, *key_cols).agg(
-            F.max_by(w, F.coalesce(F.col(SEQ_COL), F.lit(0))).alias("_w")
-        )
-        return resolved.filter(
-            ~F.coalesce(F.col(f"_w.{TOMBSTONE_COL}"), F.lit(False))
-        ).select(
-            *([BUCKET_COL] if fuse_bucket else []),
-            *key_cols,
-            *[F.col(f"_w.{c}").alias(c) for c in val_cols],
-        )
+        aggs = [F.max_by(w, seq).alias("_w")]
+        if batch_seq is not None:
+            live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+            aggs += [
+                (F.max(seq) == batch_seq).alias("_in_batch"),
+                F.coalesce(
+                    F.max_by(live, F.when(seq < batch_seq, seq)), F.lit(False)
+                ).alias("_existed"),
+            ]
+        resolved = df.groupBy(*bkt, *key_cols).agg(*aggs)
+        dead = F.coalesce(F.col(f"_w.{TOMBSTONE_COL}"), F.lit(False))
+        out = [*bkt, *key_cols, *[F.col(f"_w.{c}").alias(c) for c in val_cols]]
+        if batch_seq is not None:
+            return resolved.select(*out, dead.alias(TOMBSTONE_COL), "_in_batch", "_existed")
+        return resolved.filter(~dead).select(*out)
 
     def _plan_read(
         self,
@@ -1165,15 +1178,12 @@ class LakeTable:
     def read(
         self, snapshot: Snapshot | None = None, buckets: list[int] | None = None
     ) -> DataFrame:
-        """Current-state scan (default: current snapshot, all buckets).
-        If merge-on-read deltas exist they are resolved (LWW by commit
-        seq); a fully-compacted table reads with zero resolution cost."""
+        """Current-state scan (default: current snapshot, all buckets;
+        ``buckets`` prunes by file list). If merge-on-read deltas exist
+        they are resolved (LWW by commit seq); a fully-compacted table
+        reads with zero resolution cost."""
         snap = self._head(snapshot)
         return self._read_plan(snap, self._plan_read(snap, buckets))
-
-    def read_buckets(self, buckets: list[int], snapshot: Snapshot | None = None) -> DataFrame:
-        """Scan only the named buckets (partition pruning by file list)."""
-        return self.read(snapshot=snapshot, buckets=buckets)
 
     def _key_bucket(
         self, snap: Snapshot, key: dict, cast: bool = True
@@ -1458,8 +1468,8 @@ class LakeTable:
         else:
             prior = prior_scan.select(*key_cols).withColumn("_existed", F.lit(True))
         out = (
-            # null-safe: a NULL merge key's prior row must match (same
-            # contract as the merge join), else its delete is classified
+            # null-safe: a NULL merge key's prior row must match (the
+            # merge groups NULL keys together), else its delete is classified
             # 'insert' and silently dropped from the changelog
             null_safe_join(net, prior, key_cols, "left")
             .withColumn(
@@ -1713,22 +1723,13 @@ class LakeTable:
             return cur
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        key_cols = cur.key_cols
-        commit_id = self._alloc_commit_id(cur)
-        result = (
-            self.read(snapshot=cur)
-            .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
-            .withColumn(TOMBSTONE_COL, F.lit(False))
-            .withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets))
-        )
         # keep the active clustering true through the spec change: same
         # sort AND the same file-size split — one wide sorted file per
         # bucket would leave every file spanning the whole value range
         # (zero data skipping) while the spec still claimed clustering
         with step(self.spark, "table.rebucket"):
-            _, files = self._write_buckets(
-                result.repartition(F.col(BUCKET_COL)),
-                cur, commit_id, "commit", spec=cur.cluster_spec,
+            commit_id, files, _ = self._rewrite(
+                cur, None, cur.cluster_spec, n_buckets=n_buckets
             )
         return self._commit(
             cur,
@@ -1741,11 +1742,61 @@ class LakeTable:
             commit_id=commit_id,
             n_buckets=n_buckets,
             **_rewritten(self.root, cur, files),
-            # a rebucket rewrites EVERY file via read() under the current
+            # a rebucket rewrites EVERY file from a scan under the current
             # schema, so previously-dropped physical columns are purged
             # and their names become safe to reuse
             dropped_cols=[],
         )
+
+    def _rewrite(
+        self, cur: Snapshot, buckets: list[int] | None, spec: dict | None,
+        n_buckets: int | None = None, batch: DataFrame | None = None,
+    ) -> tuple[int, dict[str, list[str]], dict[str, int]]:
+        """The one bucket rewrite (CoW merge, compaction, clustering,
+        rebucket): allocate the commit id, resolve ``buckets`` (None:
+        all) of ``cur`` through the bucket-fused resolve under
+        ``n_buckets`` (default ``cur``'s) — ONE exchange — and write the
+        live rows stamped with the id under the cluster ``spec``. Returns
+        the id and the files per bucket (for ``_commit(**_rewritten())``)
+        and the merge totals.
+
+        ``batch``: a CoW merge's conformed rows with their ``_tombstone``,
+        resolved as the buckets' newest delta (``_seq`` = the id). Each
+        key it names counts as an insert, update, delete or no-op delete
+        by its tombstone and ``_existed``, observed during the write;
+        ``rows_outside_touched`` counts its rows outside ``buckets``."""
+        from pyspark.sql import Observation
+
+        commit_id = self._alloc_commit_id(cur)
+        plan = self._plan_read(cur, buckets)
+        rows = self._scan(cur, plan.base + plan.deltas, with_internals=True)
+        if batch is not None:
+            rows = rows.unionByName(
+                batch.withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
+            )
+        resolved = self._resolve(
+            rows, cur, fuse_bucket=True, n_buckets=n_buckets,
+            batch_seq=None if batch is None else commit_id,
+        )
+        if batch is not None:
+            new, dead, existed = (F.col(c) for c in ("_in_batch", TOMBSTONE_COL, "_existed"))
+            aggs = [
+                F.count(F.when(new & ~existed & ~dead, 1)).alias("rows_inserted"),
+                F.count(F.when(new & existed & ~dead, 1)).alias("rows_updated"),
+                F.count(F.when(new & existed & dead, 1)).alias("rows_deleted"),
+                F.count(F.when(new & ~existed & dead, 1)).alias("rows_delete_noop"),
+                F.count(F.when(new & ~F.col(BUCKET_COL).isin(buckets), 1)).alias(
+                    "rows_outside_touched"
+                ),
+            ]
+            obs = Observation()
+            grouped, resolved = resolved, resolved.observe(obs, *aggs).filter(~dead)
+        stamped = resolved.drop(TOMBSTONE_COL, "_in_batch", "_existed").withColumns(
+            {SEQ_COL: F.lit(commit_id).cast("long"), TOMBSTONE_COL: F.lit(False)}
+        )
+        _, written = self._write_buckets(stamped, cur, commit_id, "commit", spec=spec)
+        totals = {} if batch is None else observed_metrics(obs, grouped, aggs)
+        return commit_id, written, totals
 
     def _write_buckets(
         self, df: DataFrame, cur: Snapshot, commit_id: int, kind: str, spec: dict | None = None
@@ -2061,15 +2112,17 @@ class LakeTable:
 
         Emulates Iceberg ``MERGE INTO t USING s ON key WHEN MATCHED AND
         op='delete' THEN DELETE / WHEN MATCHED THEN UPDATE / WHEN NOT
-        MATCHED AND op!='delete' THEN INSERT`` as a single full-outer
-        join between the touched buckets of the base and the updates;
-        insert/update/delete classification rides on the write action via
+        MATCHED AND op!='delete' THEN INSERT`` as a compaction of the
+        touched buckets with the batch as their newest delta (``_rewrite``:
+        one exchange; NULL keys group exactly as merge-on-read resolves
+        them). Insert/update/delete classification rides on the write via
         ``DataFrame.observe`` — no second metrics pass (SURVEY.md §2.3 J6,
         §4 "batched writes").
 
         ``touched_buckets``: pass the pre-computed bucket set when the
         caller already knows it (the runner derives it from a column-
         pruned key scan); otherwise one tiny distinct-collect happens here.
+        A batch row outside it refuses the commit.
 
         ``evolve_schema``: first ADD/WIDEN the table to accept the batch's
         columns (``evolve_to``, Delta ``mergeSchema`` analog) instead of
@@ -2080,104 +2133,37 @@ class LakeTable:
         and commits only while it is still the head, else raises
         ``CommitConflictError`` (see ``_merge_base``).
         """
-        from pyspark.sql import Observation
-
         cur = self._merge_base(updates, op_col, evolve_schema, snapshot)
-        key_cols = cur.key_cols
-        table_cols = [f.name for f in cur.schema.fields]
-        val_cols = [c for c in table_cols if c not in key_cols]
-
+        commit_id, written = None, {}
+        totals = dict.fromkeys(
+            ("rows_inserted", "rows_updated", "rows_deleted", "rows_delete_noop"), 0
+        )
         with step(self.spark, "table.merge"):
             updates = self._conform_types(updates, cur)
-            upd = updates.withColumn(BUCKET_COL, bucket_expr(key_cols, cur.n_buckets))
             if touched_buckets is None:
-                touched = sorted(r[0] for r in upd.select(BUCKET_COL).distinct().collect())
+                touched = sorted(
+                    r[0]
+                    for r in updates.select(bucket_expr(cur.key_cols, cur.n_buckets))
+                    .distinct()
+                    .collect()
+                )
             else:
                 touched = sorted(touched_buckets)
-
-            commit_id = self._alloc_commit_id(cur)
-            totals = {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0,
-                      "rows_delete_noop": 0}
-            written: dict[str, list[str]] = {}
-
             if touched:
-                base = self.read_buckets(touched, snapshot=cur)
-                # disambiguate update-side columns (keys included) before the join
-                u = upd.select(
-                    *[F.col(c).alias(f"_u_{c}") for c in key_cols],
-                    F.col(BUCKET_COL).alias("_u_bucket"),
-                    F.col(op_col).alias("_u_op"),
-                    *[F.col(c).alias(f"_u_{c}") for c in val_cols],
-                ).withColumn("_u_present", F.lit(True))
-                b = base.withColumn("_b_present", F.lit(True))
-
-                # null-safe key equality: a NULL merge key must match its
-                # base row exactly as merge-on-read's groupBy resolution
-                # groups it — plain `=` never matches NULL, silently turning
-                # deletes of such keys into no-ops and upserts into
-                # accumulating duplicates (CoW would diverge from MoR on the
-                # same input). <=> is still an equi-join key for the planner.
-                joined = b.join(
-                    u,
-                    on=functools.reduce(
-                        operator.and_,
-                        [F.col(c).eqNullSafe(F.col(f"_u_{c}")) for c in key_cols],
+                # a NULL op is an upsert: the same stamp as mor_write's
+                batch = updates.select(
+                    *cur.schema.fieldNames(),
+                    F.coalesce(F.col(op_col) == delete_op, F.lit(False)).alias(
+                        TOMBSTONE_COL
                     ),
-                    how="full_outer",
                 )
-                u_here = F.col("_u_present").isNotNull()
-                b_here = F.col("_b_present").isNotNull()
-                # coalesce: a NULL op must mean "not a delete", not SQL NULL —
-                # otherwise filter(~(u_here & is_del)) silently DROPS the base
-                # row (a phantom delete) while every classification counter
-                # skips it (F.count(F.when(NULL, 1)) counts nothing)
-                is_del = F.coalesce(F.col("_u_op") == delete_op, F.lit(False))
-
-                clf_aggs = [
-                    F.count(F.when(u_here & ~b_here & ~is_del, 1)).alias("rows_inserted"),
-                    F.count(F.when(u_here & b_here & ~is_del, 1)).alias("rows_updated"),
-                    F.count(F.when(u_here & b_here & is_del, 1)).alias("rows_deleted"),
-                    F.count(F.when(u_here & ~b_here & is_del, 1)).alias("rows_delete_noop"),
-                    # contract check, free on the write action: an update row
-                    # whose bucket the caller's touched_buckets missed would be
-                    # written but never registered (silent row loss) — count it
-                    # here and refuse to commit below
-                    F.count(
-                        F.when(u_here & ~F.col("_u_bucket").isin(touched), 1)
-                    ).alias("rows_outside_touched"),
-                ]
-                obs = Observation()
-                observed = joined.observe(obs, *clf_aggs)
-                result = observed.filter(~(u_here & is_del)).select(
-                    *[
-                        F.coalesce(F.col(c), F.col(f"_u_{c}")).alias(c)
-                        for c in key_cols
-                    ],
-                    *[
-                        F.when(u_here, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c)
-                        for c in val_cols
-                    ],
-                    F.lit(commit_id).cast("long").alias(SEQ_COL),
-                    F.lit(False).alias(TOMBSTONE_COL),
-                    F.coalesce(
-                        F.col("_u_bucket"), bucket_expr(key_cols, cur.n_buckets)
-                    ).alias(BUCKET_COL),
+                # a CoW rewrite of a touched bucket is delta-free, so compact
+                # will never revisit it — restore the cluster sort HERE or
+                # those buckets lose data skipping until a manual re-cluster
+                commit_id, written, totals = self._rewrite(
+                    cur, touched, cur.cluster_spec, batch=batch
                 )
-
-                # co-locate buckets before the partitioned write: one shuffle
-                # that AQE coalesces but never splits, so each bucket's rows
-                # stay in one task and land as one file. A CoW rewrite of a
-                # touched bucket is delta-free, so compact will never revisit
-                # it — restore the cluster sort HERE or those buckets lose
-                # data skipping until a manual re-cluster (the sort is a local
-                # add-on to a rewrite already being paid for; boundaries are
-                # spec literals)
-                _, written = self._write_buckets(
-                    result.repartition(F.col(BUCKET_COL)),
-                    cur, commit_id, "commit", spec=cur.cluster_spec,
-                )
-                totals = observed_metrics(obs, joined, clf_aggs)
-                outside = totals.pop("rows_outside_touched", 0)
+                outside = totals.pop("rows_outside_touched")
                 if outside:
                     # files are written but NO snapshot references them (the
                     # orphan commit dir is GC'd by expire_snapshots) — refuse
@@ -2334,24 +2320,13 @@ class LakeTable:
         )
         if not victims:
             return None
-        commit_id = self._alloc_commit_id(cur)
-        # bucket-fused resolve: LWW resolution and write alignment share
-        # one shuffle (resolve-then-repartition would move the whole
-        # victim set through two exchanges — measured ~2x compaction wall)
+        # maintain the active clustering through compaction: one
+        # within-partition sort on the already-bucket-fused stream (no
+        # extra shuffle) keeps file/row-group min-max stats tight instead
+        # of silently degrading data skipping until the next manual
+        # OPTIMIZE
         with step(self.spark, "table.compact"):
-            resolved = (
-                self._read_plan(cur, self._plan_read(cur, victims), fuse_bucket=True)
-                .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
-                .withColumn(TOMBSTONE_COL, F.lit(False))
-            )
-            # maintain the active clustering through compaction: one
-            # within-partition sort on the already-bucket-fused stream (no
-            # extra shuffle) keeps file/row-group min-max stats tight instead
-            # of silently degrading data skipping until the next manual
-            # OPTIMIZE
-            _, written = self._write_buckets(
-                resolved, cur, commit_id, "commit", spec=cur.cluster_spec
-            )
+            commit_id, written, _ = self._rewrite(cur, victims, cur.cluster_spec)
         return self._commit(
             cur,
             {"operation": "compact", "compacted_buckets": victims, **(summary or {})},
@@ -2462,12 +2437,6 @@ class LakeTable:
                     )
         if target_rows_per_file < 1:
             raise ValueError("target_rows_per_file must be >= 1")
-        commit_id = self._alloc_commit_id(cur)
-        resolved = (
-            self._read_plan(cur, self._plan_read(cur), fuse_bucket=True)
-            .withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
-            .withColumn(TOMBSTONE_COL, F.lit(False))
-        )
         spec = {
             "cols": cols,
             "target_rows_per_file": target_rows_per_file,
@@ -2483,7 +2452,7 @@ class LakeTable:
         # sort + file cap make the partitioned writer cut each bucket's
         # stream into consecutive value-ranged files — the point of the op
         with step(self.spark, "table.cluster"):
-            _, written = self._write_buckets(resolved, cur, commit_id, "commit", spec=spec)
+            commit_id, written, _ = self._rewrite(cur, None, spec)
         return self._commit(
             cur,
             {
@@ -2809,7 +2778,8 @@ class LakeTable:
         retention window: exactly-once resume over the full WAL never
         re-applies an expired-but-committed batch, and a view, replica or
         stream keeps its applied-through mark after its own commits
-        expire."""
+        expire. The newest ``hot_keys`` (the next replay's warm-start salt
+        set) is carried too when no kept commit records one."""
         if self.ref != "main":
             raise RuntimeError("expire_snapshots runs from the 'main' view")
         branches = sorted(n for n in self.refs() if n != "main")
@@ -2833,6 +2803,11 @@ class LakeTable:
                 if k not in seen:
                     seen.add(k)
                     ledger.append(r)
+            # the newest hot_keys is the next replay's warm-start salt set
+            # (CdcRunner._prior_hot_keys): carry it if only expired commits hold one
+            hot = next((s for s in chain if "hot_keys" in s.summary), oldest)
+            if hot.snapshot_id < oldest.snapshot_id:
+                oldest.summary = {**oldest.summary, "hot_keys": hot.summary["hot_keys"]}
             oldest.parent_id = None
             oldest.summary = {**oldest.summary, "inherited_batches": ledger}
             self._write_snapshot(oldest)

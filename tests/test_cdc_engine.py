@@ -614,6 +614,27 @@ def test_pipelined_first_batch_warm_starts_from_prior_hot_set(
     assert first["hot_keys"] == ["\x1f".join(k) for k in seeded]
 
 
+def test_prior_hot_keys_survive_compact_and_expiry(spark, tmp_path, fixture_meta):
+    """After ``compact()`` + ``expire_snapshots(keep_last=1)`` the only
+    kept commit is the compaction, which records no hot set: expiry must
+    carry the newest expired ``hot_keys`` onto the re-rooted snapshot,
+    or the next replay's warm-start salt set is silently empty."""
+    table = _new_table(spark, tmp_path)
+    events = read_event_log(spark, fixture_meta["v1_path"]).limit(300)
+    seeded = [("megarepo", "hot/file.py")]
+    runner = CdcRunner(spark, table, run_id="hot1", mode="mor")
+    runner.apply_batch(events, "b1", 0, 10**9, hot_keys=seeded)
+    table.compact()
+    table.expire_snapshots(keep_last=1)
+    assert [s.summary["operation"] for s in table.snapshot_chain()] == ["compact"]
+    assert CdcRunner(spark, table, run_id="hot2", mode="mor")._prior_hot_keys() == seeded
+    # a kept batch's own (empty) hot set is not replaced by an older one
+    runner.apply_batch(events, "b2", 0, 10**9, hot_keys=[])
+    table.expire_snapshots(keep_last=1)
+    assert table.snapshot_chain()[0].summary["hot_keys"] == []
+    assert CdcRunner(spark, table, run_id="hot3", mode="mor")._prior_hot_keys() == []
+
+
 def test_quarantine_invalid_events(spark, fixture_meta):
     events = read_event_log(spark, fixture_meta["v1_path"]).limit(100)
     bad = events.withColumn("op", F.lit("truncate")).limit(5)

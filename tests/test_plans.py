@@ -187,6 +187,78 @@ def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
     _assert_bucket_exchange_sized_by_aqe(p)
 
 
+def _replayed_mor_table(spark, tmp_path):
+    """An 8-bucket table whose buckets hold base files AND MoR deltas."""
+    from astro_data_pipeline_spark.cdc.runner import CdcRunner, read_event_log
+    from astro_data_pipeline_spark.cdc.fixtures import generate_change_log
+    from astro_data_pipeline_spark.lakehouse import LakeTable
+    from pyspark.sql import types as T
+
+    meta = generate_change_log(str(tmp_path / "fx"), n_repos=5, n_keys=50, n_events=400)
+    table = LakeTable.create(
+        spark, str(tmp_path / "lake"), T.StructType(A.BASE_TABLE_FIELDS),
+        A.KEY_COLS, n_buckets=8,
+    )
+    events = read_event_log(spark, meta["v1_path"], meta["v2_path"])
+    CdcRunner(spark, table, run_id="r1", mode="mor").replay(events, n_batches=2)
+    table.compact()
+    stored = table.read().orderBy("repo", "path").limit(20)
+    table.merge_mor(stored.withColumn("op", F.lit("update")))
+    assert table.current_snapshot().delta_files and table.current_snapshot().files
+    return table
+
+
+def _written_plan(monkeypatch, op) -> str:
+    """The plan of the one DataFrame ``op`` hands the bucket writer."""
+    from astro_data_pipeline_spark.lakehouse import LakeTable
+
+    plans, write = [], LakeTable._write_buckets
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(plan(df, "simple"))
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_buckets", spy)
+    op()
+    assert len(plans) == 1, plans
+    return plans[0]
+
+
+def test_cow_merge_is_single_shuffle(spark, tmp_path, monkeypatch):
+    """A copy-on-write merge is a compaction of its touched buckets with
+    the batch as their newest delta: the batch, the base files and the
+    MoR deltas resolve and bucket-align in ONE exchange (no join of the
+    batch against a separately resolved base)."""
+    from astro_data_pipeline_spark.lakehouse.table import bucket_expr
+
+    table = _replayed_mor_table(spark, tmp_path)
+    snap = table.current_snapshot()
+    rows = table.read().orderBy("repo", "path").limit(12).collect()
+    stored = spark.createDataFrame(rows, snap.schema)
+    updates = stored.withColumn(
+        "op", F.when(F.col("path").endswith("1"), "delete").otherwise("update")
+    ).unionByName(
+        stored.withColumn("path", F.concat("path", F.lit("-new"))).withColumn(
+            "op", F.lit("insert")
+        )
+    )
+    touched = updates.select(bucket_expr(snap.key_cols, snap.n_buckets)).distinct()
+    assert {str(r[0]) for r in touched.collect()} & set(snap.delta_files)
+    p = _written_plan(monkeypatch, lambda: table.merge(updates))
+    assert p.count("Exchange") == 1, p
+    _assert_bucket_exchange_sized_by_aqe(p)
+
+
+def test_rebucket_resolve_is_single_shuffle(spark, tmp_path, monkeypatch):
+    """rebucket resolves the deltas under the NEW bucket count in the
+    same exchange that aligns the write (not a resolved read followed by
+    a second repartition)."""
+    table = _replayed_mor_table(spark, tmp_path)
+    p = _written_plan(monkeypatch, lambda: table.rebucket(4))
+    assert p.count("Exchange") == 1, p
+    _assert_bucket_exchange_sized_by_aqe(p)
+
+
 def test_lsn_range_prunes_row_groups(spark, tmp_path):
     """The per-batch LSN predicate must reach the event-log scan as a
     pushed filter so parquet row-group min/max stats can skip ~(1 - 1/n)
