@@ -278,7 +278,7 @@ class CdcRunner:
                 .distinct()
                 .collect()
             ]
-            return touched, self.table.merge(
+            return self.table.merge(
                 b.rows,
                 op_col="op",
                 delete_op="delete",
@@ -295,17 +295,10 @@ class CdcRunner:
             snap, metrics = self.table.mor_finalize(
                 written, summary=b.manifest, expect_parent=expect_parent
             )
-            ran = True
         else:
-            touched, (snap, metrics) = written
-            # a merge over zero touched buckets commits an empty snapshot
-            # without ever executing the batch plan (sparse LSN ranges,
-            # all-quarantine batches), so the observation never fills
-            ran = bool(touched)
+            snap, metrics = written
         with step(self.spark, "runner.finish"):
-            n_bad = observed_metrics(b.obs, b.events, [_quarantined()], ran=ran)[
-                "rows_quarantined"
-            ]
+            n_bad = observed_metrics(b.obs, b.events, [_quarantined()])["rows_quarantined"]
         return BatchReport(
             b.batch_id,
             b.lsn_lo,

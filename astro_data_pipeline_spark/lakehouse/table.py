@@ -72,8 +72,10 @@ Layout::
 the winning attempt's files enter the snapshot manifest.
 ``LakeTable._plan_read`` is the one statement of read-file selection:
 every snapshot read (full, bucket, point, range, compaction, clustering)
-scans the files it picks, and ``_read_plan`` resolves them. The one
-exception is ``changes()``, whose delta scan picks files by commit.
+scans the files it picks, and ``_read_plan`` resolves them. ``changes()``
+scans the ``from`` snapshot's files ``_plan_read`` picks plus the
+in-range delta files, which it picks by commit (``commit_files``), and
+classifies them in the one ``_resolve`` aggregation a CoW merge uses.
 ``LakeTable._commit`` is the one commit point on the write side: every
 commit but ``create``'s root and ``restore``'s child of its target takes
 its id, its child snapshot and its compare-and-swap there. A bucket
@@ -105,6 +107,8 @@ from . import stats as _stats
 BUCKET_COL = "_bucket"
 SEQ_COL = "_seq"  # commit sequence stamped into every data file
 TOMBSTONE_COL = "_tombstone"
+# flags the rows ``LakeTable._resolve`` applies as a batch onto the rest
+BATCH_COL = "_in_batch"
 # parquet-mr's adaptive bloom candidate sizes halve from the 1 MiB max
 # filter (2^20 B) to the 32 B minimum bitset (2^5 B): at most 16 sizes
 _BLOOM_CANDIDATES = 20 - 5 + 1
@@ -491,22 +495,18 @@ def bucket_expr(key_cols: list[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-def observed_metrics(
-    obs, source: DataFrame, aggs: list[F.Column], ran: bool = True
-) -> dict[str, int]:
+def observed_metrics(obs, source: DataFrame, aggs: list[F.Column]) -> dict[str, int]:
     """The metrics ``obs`` (an ``Observation`` of ``aggs`` over
     ``source``) gathered during a write — or, when it cannot deliver, the
     same aggregates recomputed over ``source`` (one extra job, on rare
     paths only). ``obs.get`` raises when the optimizer pruned the observe
-    node or the write's filtered input was empty, and it blocks forever
-    when no action ever ran over the observed plan: pass ``ran=False``
-    then (a copy-on-write merge over zero touched buckets commits
-    without executing its input)."""
-    if ran:
-        try:
-            return {k: int(v) for k, v in obs.get.items()}
-        except Exception:
-            pass
+    node or the write's filtered input was empty; it blocks forever when
+    no action ever ran over the observed plan, so call it only after the
+    write that executes ``source``."""
+    try:
+        return {k: int(v) for k, v in obs.get.items()}
+    except Exception:
+        pass
     row = source.agg(*aggs).collect()[0]
     return {k: int(v) for k, v in row.asDict().items()}
 
@@ -1067,50 +1067,67 @@ class LakeTable:
             return self.spark.read.schema(schema).parquet(*paths)
 
     def _resolve(
-        self, df: DataFrame, snap: Snapshot, fuse_bucket: bool = False,
-        n_buckets: int | None = None, batch_seq: int | None = None,
+        self, df: DataFrame, key_cols: list[str], n_buckets: int | None = None,
+        preimage: bool = False,
     ) -> DataFrame:
         """Merge-on-read resolution: last writer per key by commit sequence
         (max_by hash-agg — partial combine, skew-tolerant), tombstones
-        dropped. The same LWW primitive the CDC collapse uses (W1).
+        dropped. The same LWW primitive the CDC collapse uses (W1). The
+        value columns are the rows' own (every column but the keys and
+        the internals), so a caller that projects its rows never shuffles
+        the columns it dropped.
 
-        ``fuse_bucket``: prepend the storage bucket (under ``n_buckets``,
-        default the snapshot's) to the grouping and hash-repartition on
-        it first — the repartition's distribution satisfies the
-        aggregation's required clustering (bucket is a function of the
-        keys), so resolution + bucket alignment for a partitioned write
-        share ONE shuffle. Same fusion as the ingest collapse; without it
-        a resolve-then-write pays two full passes of the table through
-        the exchange.
+        ``n_buckets``: prepend the storage bucket under that count to the
+        grouping and hash-repartition on it first — the repartition's
+        distribution satisfies the aggregation's required clustering
+        (bucket is a function of the keys), so resolution + bucket
+        alignment for a partitioned write share ONE shuffle. Same fusion
+        as the ingest collapse; without it a resolve-then-write pays two
+        full passes of the table through the exchange.
 
-        ``batch_seq`` (a CoW merge's batch rows carry it): keep tombstoned
-        winners as ``_tombstone``, and add ``_in_batch`` (a batch row names
-        the key) and ``_existed`` (the key's newest older row is live)."""
-        key_cols = snap.key_cols
-        val_cols = [f.name for f in snap.schema.fields if f.name not in key_cols]
+        Rows carrying ``BATCH_COL`` are a batch applied onto the unflagged
+        rows (a CoW merge's batch, ``changes()``' in-range deltas): the
+        winner ranks by (flag, ``_seq``), so no commit-id order across
+        the two sets is assumed; tombstoned winners stay, as
+        ``_tombstone``; and the result adds ``_in_batch`` (a flagged row
+        names the key) and ``_existed`` (the key's newest unflagged row is
+        live), plus with ``preimage`` that row's values as ``_pre_<c>``
+        (NULL unless it existed)."""
+        internals = {SEQ_COL, TOMBSTONE_COL, BATCH_COL, BUCKET_COL}
+        val_cols = [c for c in df.columns if c not in key_cols and c not in internals]
+        batched = BATCH_COL in df.columns
         seq = F.coalesce(F.col(SEQ_COL), F.lit(0))
         w = F.struct(*[F.col(c) for c in val_cols], F.col(TOMBSTONE_COL))
         bkt: list[F.Column] = []
-        if fuse_bucket:
-            df = df.withColumn(
-                BUCKET_COL, bucket_expr(key_cols, n_buckets or snap.n_buckets)
-            ).repartition(F.col(BUCKET_COL))
+        if n_buckets is not None:
+            df = df.withColumn(BUCKET_COL, bucket_expr(key_cols, n_buckets)).repartition(
+                F.col(BUCKET_COL)
+            )
             bkt = [F.col(BUCKET_COL)]
         aggs = [F.max_by(w, seq).alias("_w")]
-        if batch_seq is not None:
+        pre = val_cols if preimage else []
+        if batched:
+            flag = F.col(BATCH_COL)
             live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-            aggs += [
-                (F.max(seq) == batch_seq).alias("_in_batch"),
-                F.coalesce(
-                    F.max_by(live, F.when(seq < batch_seq, seq)), F.lit(False)
-                ).alias("_existed"),
+            prior = F.struct(live.alias("_existed"), *[F.col(c) for c in pre])
+            aggs = [
+                F.max_by(w, F.struct(flag, seq)).alias("_w"),
+                F.max(flag).alias(BATCH_COL),
+                F.max_by(prior, F.when(~flag, seq)).alias("_prior"),
             ]
         resolved = df.groupBy(*bkt, *key_cols).agg(*aggs)
         dead = F.coalesce(F.col(f"_w.{TOMBSTONE_COL}"), F.lit(False))
         out = [*bkt, *key_cols, *[F.col(f"_w.{c}").alias(c) for c in val_cols]]
-        if batch_seq is not None:
-            return resolved.select(*out, dead.alias(TOMBSTONE_COL), "_in_batch", "_existed")
-        return resolved.filter(~dead).select(*out)
+        if not batched:
+            return resolved.filter(~dead).select(*out)
+        existed = F.coalesce(F.col("_prior._existed"), F.lit(False))
+        return resolved.select(
+            *out,
+            dead.alias(TOMBSTONE_COL),
+            BATCH_COL,
+            existed.alias("_existed"),
+            *[F.when(existed, F.col(f"_prior.{c}")).alias(f"_pre_{c}") for c in pre],
+        )
 
     def _plan_read(
         self,
@@ -1159,20 +1176,14 @@ class LakeTable:
         ]
         return _ReadPlan(base, deltas, total)
 
-    def _read_plan(
-        self, snap: Snapshot, plan: _ReadPlan, fuse_bucket: bool = False
-    ) -> DataFrame:
+    def _read_plan(self, snap: Snapshot, plan: _ReadPlan) -> DataFrame:
         """A plan's files as the snapshot's current state: LWW-resolved
         when the plan holds deltas, a plain scan with zero resolution
-        cost when it holds none. ``fuse_bucket`` (a bucketed rewrite,
-        see ``_resolve``) always resolves: the write needs the bucket
-        column and its alignment."""
-        if not plan.deltas and not fuse_bucket:
+        cost when it holds none."""
+        if not plan.deltas:
             return self._scan(snap, plan.base, with_internals=False)
         return self._resolve(
-            self._scan(snap, plan.base + plan.deltas, with_internals=True),
-            snap,
-            fuse_bucket=fuse_bucket,
+            self._scan(snap, plan.base + plan.deltas, with_internals=True), snap.key_cols
         )
 
     def read(
@@ -1342,30 +1353,32 @@ class LakeTable:
 
         ``with_preimage=True`` additionally emits the OLD value columns as
         ``_pre_<col>`` (Delta CDF's preimage half): the values the key held
-        at ``from`` for updates/deletes, NULL for inserts. The existence
-        probe already touches exactly those rows, so the pre-image costs
-        wider columns on that probe, never extra files — downstream
+        at ``from`` for updates/deletes, NULL for inserts — downstream
         retractable consumers (incremental aggregate views) need the old
         contribution to subtract.
 
         ``columns``: project the changelog to a subset of value columns.
-        This is not cosmetic: the net-winner resolution packs the emitted
-        value columns into its ``max_by`` struct, so an unprojected
-        changelog over a table with a wide payload column shuffles that
-        payload even when the consumer only wants a counter — with
-        ``columns=["last_lsn"]`` the payload never leaves the parquet
-        scan (column pruning reaches the delta files). Key columns and
+        This is not cosmetic: the resolution packs the emitted value
+        columns into its ``max_by`` structs, so an unprojected changelog
+        over a table with a wide payload column shuffles that payload even
+        when the consumer only wants a counter — with
+        ``columns=["last_lsn"]`` the payload never leaves the parquet scan
+        (column pruning reaches the data files). Key columns and
         ``change_type`` are always present.
 
-        Scans ONLY the merge-on-read delta files appended by the commits in
-        ``(from, to]`` — O(changed rows), never O(table) — then classifies
-        each net winner against the ``from`` snapshot's state, probing just
-        the buckets the deltas touched (bucket list comes from the
-        manifests: zero extra driver jobs). Output: key columns +
-        ``change_type`` (insert / update / delete) + the ``to``-schema value
-        columns (null for deletes). A delete of a key that did not exist at
-        ``from`` nets out to nothing, and intermediate flip-flops collapse —
-        this is a state diff, not an event replay (the WAL itself is the
+        One resolve, no join: the delta files appended by the commits in
+        ``(from, to]`` (picked by commit, O(changed rows)) are applied as
+        a batch (``_resolve``) onto the ``from`` snapshot's files in the
+        buckets those deltas touched (picked by ``_plan_read``; the bucket
+        list comes from the manifests, zero extra driver jobs). ONE
+        aggregation on the key columns ranks each key's rows by (in-range
+        flag, ``_seq``): the winner is the key's net in-range change, and
+        the newest ``from`` row says whether the key existed there and
+        what it held. Output: key columns + ``change_type`` (insert /
+        update / delete) + the ``to``-schema value columns (null for
+        deletes). A delete of a key that did not exist at ``from`` nets
+        out to nothing, and intermediate flip-flops collapse — this is a
+        state diff, not an event replay (the WAL itself is the
         event-level changelog).
 
         Requirements (checked by ``commits_between`` and
@@ -1376,10 +1389,10 @@ class LakeTable:
         changelog; a ``compact`` or ``rebucket`` in range is fine — both
         are logically idempotent rewrites and the folded delta files stay
         on disk until ``expire_snapshots``; across a ``rebucket`` the
-        existence probe skips bucket pruning because the spec changed). A
-        restore in range needs no special case: it re-parents the chain
-        onto its target, so undone commits are off the walk, and the
-        restore commit itself carries no deltas."""
+        ``from`` files are read from every bucket because the spec
+        changed). A restore in range needs no special case: it re-parents
+        the chain onto its target, so undone commits are off the walk,
+        and the restore commit itself carries no deltas."""
         to_snap = (
             read_snapshot(self._meta, to_snapshot_id)
             if to_snapshot_id is not None
@@ -1399,8 +1412,7 @@ class LakeTable:
         # in range folds deltas into base files but the pre-fold delta
         # files stay on disk (like compact), so the row-level changelog
         # survives; it DOES change the bucket spec, so bucket ids parsed
-        # from delta paths stop matching ``from``'s layout and the
-        # existence probe must fall back to an unpruned key scan.
+        # from delta paths stop matching ``from``'s layout.
         delta_files: dict[str, list[str]] = {}
         for snap in changelog_commits(chain):
             for bk, ps in commit_files(snap).items():
@@ -1408,7 +1420,8 @@ class LakeTable:
         spec_stable = all(s.n_buckets == from_snap.n_buckets for s in chain)
 
         key_cols = to_snap.key_cols
-        val_cols = [f.name for f in to_snap.schema.fields if f.name not in key_cols]
+        to_types = {f.name: f.dataType for f in to_snap.schema.fields}
+        val_cols = [c for c in to_types if c not in key_cols]
         if columns is not None:
             bad = [c for c in columns if c not in val_cols]
             if bad:
@@ -1416,72 +1429,44 @@ class LakeTable:
                     f"changes(columns=...) not value columns of the table: {bad}"
                 )
             val_cols = [c for c in val_cols if c in set(columns)]
-        # Net winner per key across the in-range deltas (same W1 primitive
-        # as read-time resolution, tombstones kept for classification).
-        with step(self.spark, "table.changes"):
-            deltas = self._scan(
-                to_snap,
-                [os.path.join(self.root, p) for ps in delta_files.values() for p in ps],
-                with_internals=True,
-            )
-        w = F.struct(*[F.col(c) for c in val_cols], F.col(TOMBSTONE_COL))
-        net = (
-            deltas.groupBy(*key_cols)
-            .agg(F.max_by(w, F.col(SEQ_COL)).alias("_w"))
-            .select(
-                *key_cols,
-                *[F.col(f"_w.{c}").alias(c) for c in val_cols],
-                F.coalesce(F.col(f"_w.{TOMBSTONE_COL}"), F.lit(False)).alias("_dead"),
-            )
-        )
 
-        # Prior-existence probe: only the buckets the deltas touched (read
-        # straight off the commits' manifests), only the key columns.
-        # Pruning is valid only while every in-range snapshot shares
-        # ``from``'s bucket spec; across a rebucket those ids belong to a
-        # different layout, so probe all buckets. A range with no deltas
-        # probes none: both scans are then empty and no job runs.
+        def rows(snap: Snapshot, paths: list[str], in_range: bool) -> DataFrame:
+            # every row in the ``to`` shape: a ``from`` row's values are
+            # cast up to the ``to`` types, NULL where ``from`` lacks the
+            # column or no pre-image is asked for (then they never surface)
+            names = set(snap.schema.fieldNames()) if in_range or with_preimage else set()
+            vals = [
+                (F.col(c) if c in names else F.lit(None)).cast(to_types[c]).alias(c)
+                for c in val_cols
+            ]
+            return self._scan(snap, paths, with_internals=True).select(
+                *key_cols, *vals, SEQ_COL, TOMBSTONE_COL, F.lit(in_range).alias(BATCH_COL)
+            )
+
+        # ``from``'s files in the touched buckets — in every bucket across
+        # a rebucket, in none for a delta-free range (then both scans are
+        # empty and no job runs)
         touched = (
             sorted(int(b) for b in delta_files)
             if spec_stable or not delta_files
             else None
         )
+        prior = self._plan_read(from_snap, touched)
         with step(self.spark, "table.changes"):
-            prior_scan = self.read(snapshot=from_snap, buckets=touched)
-        if with_preimage:
-            # ``from`` may predate schema evolution: columns added since
-            # null-fill, widened columns cast up to the ``to`` type, so the
-            # pre-image always carries the ``to`` schema's shape.
-            from_cols = set(prior_scan.columns)
-            to_types = {f.name: f.dataType for f in to_snap.schema.fields}
-            pre_cols = [
-                (
-                    F.col(c).cast(to_types[c])
-                    if c in from_cols
-                    else F.lit(None).cast(to_types[c])
-                ).alias(f"_pre_{c}")
-                for c in val_cols
-            ]
-            prior = prior_scan.select(*key_cols, *pre_cols).withColumn(
-                "_existed", F.lit(True)
+            union = rows(from_snap, prior.base + prior.deltas, False).unionByName(
+                rows(
+                    to_snap,
+                    [os.path.join(self.root, p) for ps in delta_files.values() for p in ps],
+                    True,
+                )
             )
-        else:
-            prior = prior_scan.select(*key_cols).withColumn("_existed", F.lit(True))
-        out = (
-            # null-safe: a NULL merge key's prior row must match (the
-            # merge groups NULL keys together), else its delete is classified
-            # 'insert' and silently dropped from the changelog
-            null_safe_join(net, prior, key_cols, "left")
-            .withColumn(
-                "change_type",
-                F.when(F.col("_dead") & F.col("_existed").isNotNull(), "delete")
-                .when(F.col("_existed").isNotNull(), "update")
-                .otherwise("insert"),
-            )
-            .filter(~F.col("_dead") | (F.col("change_type") == "delete"))
-        )
+        resolved = self._resolve(union, key_cols, preimage=with_preimage)
+        existed, dead = F.col("_existed"), F.col(TOMBSTONE_COL)
+        change = F.when(~existed, "insert").when(dead, "delete").otherwise("update")
         pre_out = [f"_pre_{c}" for c in val_cols] if with_preimage else []
-        return out.select(*key_cols, *val_cols, "change_type", *pre_out)
+        return resolved.filter(F.col(BATCH_COL) & (existed | ~dead)).select(
+            *key_cols, *val_cols, change.alias("change_type"), *pre_out
+        )
 
     def _conform_types(self, updates: DataFrame, snap: Snapshot) -> DataFrame:
         """Write-side schema enforcement: cast update columns whose type is
@@ -1761,25 +1746,25 @@ class LakeTable:
         and the merge totals.
 
         ``batch``: a CoW merge's conformed rows with their ``_tombstone``,
-        resolved as the buckets' newest delta (``_seq`` = the id). Each
-        key it names counts as an insert, update, delete or no-op delete
-        by its tombstone and ``_existed``, observed during the write;
-        ``rows_outside_touched`` counts its rows outside ``buckets``."""
+        flagged ``BATCH_COL`` so they resolve as the buckets' newest
+        change (``_resolve``). Each key it names counts as an insert,
+        update, delete or no-op delete by its tombstone and ``_existed``,
+        observed during the write; ``rows_outside_touched`` counts its
+        rows outside ``buckets`` (all of them when ``buckets`` is empty)."""
         from pyspark.sql import Observation
 
         commit_id = self._alloc_commit_id(cur)
         plan = self._plan_read(cur, buckets)
         rows = self._scan(cur, plan.base + plan.deltas, with_internals=True)
         if batch is not None:
-            rows = rows.unionByName(
-                batch.withColumn(SEQ_COL, F.lit(commit_id).cast("long"))
+            rows = rows.withColumn(BATCH_COL, F.lit(False)).unionByName(
+                batch.withColumns(
+                    {SEQ_COL: F.lit(commit_id).cast("long"), BATCH_COL: F.lit(True)}
+                )
             )
-        resolved = self._resolve(
-            rows, cur, fuse_bucket=True, n_buckets=n_buckets,
-            batch_seq=None if batch is None else commit_id,
-        )
+        resolved = self._resolve(rows, cur.key_cols, n_buckets or cur.n_buckets)
         if batch is not None:
-            new, dead, existed = (F.col(c) for c in ("_in_batch", TOMBSTONE_COL, "_existed"))
+            new, dead, existed = (F.col(c) for c in (BATCH_COL, TOMBSTONE_COL, "_existed"))
             aggs = [
                 F.count(F.when(new & ~existed & ~dead, 1)).alias("rows_inserted"),
                 F.count(F.when(new & existed & ~dead, 1)).alias("rows_updated"),
@@ -1791,7 +1776,7 @@ class LakeTable:
             ]
             obs = Observation()
             grouped, resolved = resolved, resolved.observe(obs, *aggs).filter(~dead)
-        stamped = resolved.drop(TOMBSTONE_COL, "_in_batch", "_existed").withColumns(
+        stamped = resolved.drop(TOMBSTONE_COL, BATCH_COL, "_existed").withColumns(
             {SEQ_COL: F.lit(commit_id).cast("long"), TOMBSTONE_COL: F.lit(False)}
         )
         _, written = self._write_buckets(stamped, cur, commit_id, "commit", spec=spec)
@@ -2134,10 +2119,6 @@ class LakeTable:
         ``CommitConflictError`` (see ``_merge_base``).
         """
         cur = self._merge_base(updates, op_col, evolve_schema, snapshot)
-        commit_id, written = None, {}
-        totals = dict.fromkeys(
-            ("rows_inserted", "rows_updated", "rows_deleted", "rows_delete_noop"), 0
-        )
         with step(self.spark, "table.merge"):
             updates = self._conform_types(updates, cur)
             if touched_buckets is None:
@@ -2149,29 +2130,26 @@ class LakeTable:
                 )
             else:
                 touched = sorted(touched_buckets)
-            if touched:
-                # a NULL op is an upsert: the same stamp as mor_write's
-                batch = updates.select(
-                    *cur.schema.fieldNames(),
-                    F.coalesce(F.col(op_col) == delete_op, F.lit(False)).alias(
-                        TOMBSTONE_COL
-                    ),
+            # a NULL op is an upsert: the same stamp as mor_write's
+            batch = updates.select(
+                *cur.schema.fieldNames(),
+                F.coalesce(F.col(op_col) == delete_op, F.lit(False)).alias(TOMBSTONE_COL),
+            )
+            # a CoW rewrite of a touched bucket is delta-free, so compact
+            # will never revisit it — restore the cluster sort HERE or
+            # those buckets lose data skipping until a manual re-cluster
+            commit_id, written, totals = self._rewrite(
+                cur, touched, cur.cluster_spec, batch=batch
+            )
+            outside = totals.pop("rows_outside_touched")
+            if outside:
+                # files are written but NO snapshot references them (the
+                # orphan commit dir is GC'd by expire_snapshots) — refuse
+                # to commit a merge that would drop these rows
+                raise ValueError(
+                    f"touched_buckets missed {outside} update row(s); "
+                    "pass the full bucket set (or None to derive it)"
                 )
-                # a CoW rewrite of a touched bucket is delta-free, so compact
-                # will never revisit it — restore the cluster sort HERE or
-                # those buckets lose data skipping until a manual re-cluster
-                commit_id, written, totals = self._rewrite(
-                    cur, touched, cur.cluster_spec, batch=batch
-                )
-                outside = totals.pop("rows_outside_touched")
-                if outside:
-                    # files are written but NO snapshot references them (the
-                    # orphan commit dir is GC'd by expire_snapshots) — refuse
-                    # to commit a merge that would drop these rows
-                    raise ValueError(
-                        f"touched_buckets missed {outside} update row(s); "
-                        "pass the full bucket set (or None to derive it)"
-                    )
 
         # CoW rewrite of a touched bucket folds in and supersedes its deltas
         snap = self._commit(

@@ -312,9 +312,9 @@ def bench_matview_refresh_skew(
     count, specs, or batching cannot silently diverge the two numbers
     the comparison exists to make) with the tail filtered to
     ``hot_buckets`` of the base's 64. The uniform-tail pair is the
-    incremental path's worst case (prior-existence probe O(base));
-    here the probe bucket-prunes to hot_buckets/64 and the crossover
-    arrives at small SF (BENCH/MATVIEW.md)."""
+    incremental path's worst case (its scan of the ``from`` files is
+    O(base)); here that scan bucket-prunes to hot_buckets/64 and the
+    crossover arrives at small SF (BENCH/MATVIEW.md)."""
     r = bench_matview_refresh(spark, sf, trials=trials, hot_buckets=hot_buckets)
     return {
         "mv_skew_refresh_sec": r["mv_refresh_sec"],
@@ -365,7 +365,7 @@ def main() -> None:
 
     # Incremental-vs-full matview crossover (VERDICT_r03 item 6): at
     # sf0.1 the ~10% tail touches every bucket, so the incremental
-    # path's prior-existence probe is O(base) — same scan class as the
+    # path's scan of the ``from`` files is O(base) — same scan class as the
     # full rebuild plus the changes machinery, and incremental loses by
     # design at toy SF. The pair at sf1.0 shows the crossover (the full
     # rebuild's aggregate+merge grows with the base, the incremental

@@ -503,6 +503,18 @@ def test_merge_touched_buckets_miss_refuses_to_commit(spark, table):
     assert m["totals"]["rows_updated"] == 20
 
 
+def test_merge_empty_touched_buckets_refuses_a_nonempty_batch(spark, table):
+    """``touched_buckets=[]`` misses every row of a non-empty batch: the
+    merge raises like any other miss instead of committing an empty
+    snapshot that silently drops the batch, and the head does not move."""
+    sid = table.current_snapshot().snapshot_id
+    upd = _updates(spark, [("r1", "a", 1, "insert"), ("r2", "b", 1, "insert")])
+    with pytest.raises(ValueError, match="touched_buckets missed 2 "):
+        table.merge(upd, touched_buckets=[])
+    assert table.current_snapshot().snapshot_id == sid
+    assert table.read().count() == 0
+
+
 def test_expire_preserves_batch_ledger_and_chain_integrity(spark, table):
     """Expiry must not shrink the exactly-once resume horizon: batch ids
     of expired snapshots fold into the oldest kept snapshot's inherited
@@ -572,7 +584,7 @@ def test_lineage_empty_before_first_merge(table):
 
 def test_changes_null_key_classified_and_preimaged(spark, tmp_path):
     """NULL merge keys flow through the changelog like any other key:
-    the existence probe joins null-safely, so a delete of a NULL-key row
+    the resolve groups NULL keys together, so a delete of a NULL-key row
     is a 'delete' (not a dropped phantom 'insert') and its pre-image
     surfaces."""
     schema = T.StructType(

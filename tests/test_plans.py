@@ -160,33 +160,6 @@ def test_cdc_collapse_salted_adds_one_stage(spark):
         _assert_bucket_exchange_sized_by_aqe(p)
 
 
-def test_compaction_resolve_is_single_shuffle(spark, tmp_path):
-    """Bucket-fused MoR resolution: compaction's LWW resolve + write
-    alignment must share ONE exchange (unfused it pays two full passes of
-    the victim set through the shuffle)."""
-    from astro_data_pipeline_spark.cdc.runner import CdcRunner, read_event_log
-    from astro_data_pipeline_spark.cdc.fixtures import generate_change_log
-    from astro_data_pipeline_spark.lakehouse import LakeTable
-    from pyspark.sql import types as T
-    import os
-
-    meta = generate_change_log(str(tmp_path / "fx"), n_repos=5, n_keys=50, n_events=400)
-    table = LakeTable.create(
-        spark, str(tmp_path / "lake"), T.StructType(A.BASE_TABLE_FIELDS),
-        A.KEY_COLS, n_buckets=8,
-    )
-    events = read_event_log(spark, meta["v1_path"], meta["v2_path"])
-    CdcRunner(spark, table, run_id="r1", mode="mor").replay(events, n_batches=2)
-    snap = table.current_snapshot()
-    victims = sorted(int(b) for b in snap.delta_files)
-    resolved = table._read_plan(
-        snap, table._plan_read(snap, victims), fuse_bucket=True
-    )
-    p = plan(resolved, "simple")
-    assert p.count("Exchange") == 1, p
-    _assert_bucket_exchange_sized_by_aqe(p)
-
-
 def _replayed_mor_table(spark, tmp_path):
     """An 8-bucket table whose buckets hold base files AND MoR deltas."""
     from astro_data_pipeline_spark.cdc.runner import CdcRunner, read_event_log
@@ -249,6 +222,16 @@ def test_cow_merge_is_single_shuffle(spark, tmp_path, monkeypatch):
     _assert_bucket_exchange_sized_by_aqe(p)
 
 
+def test_compaction_resolve_is_single_shuffle(spark, tmp_path, monkeypatch):
+    """Bucket-fused MoR resolution: compaction's LWW resolve + write
+    alignment must share ONE exchange (unfused it pays two full passes of
+    the victim set through the shuffle)."""
+    table = _replayed_mor_table(spark, tmp_path)
+    p = _written_plan(monkeypatch, table.compact)
+    assert p.count("Exchange") == 1, p
+    _assert_bucket_exchange_sized_by_aqe(p)
+
+
 def test_rebucket_resolve_is_single_shuffle(spark, tmp_path, monkeypatch):
     """rebucket resolves the deltas under the NEW bucket count in the
     same exchange that aligns the write (not a resolved read followed by
@@ -257,6 +240,37 @@ def test_rebucket_resolve_is_single_shuffle(spark, tmp_path, monkeypatch):
     p = _written_plan(monkeypatch, lambda: table.rebucket(4))
     assert p.count("Exchange") == 1, p
     _assert_bucket_exchange_sized_by_aqe(p)
+
+
+def _assert_one_key_exchange_no_join(p: str) -> None:
+    exchanges = [ln for ln in p.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, p
+    assert "hashpartitioning(repo#" in exchanges[0], exchanges
+    assert "path#" in exchanges[0], exchanges
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastExchange"):
+        assert node not in p, (node, p)
+
+
+def test_changes_is_one_key_aggregation(spark, tmp_path):
+    """changes() applies the in-range deltas onto the ``from`` files in
+    one LWW aggregation: one exchange, on the key columns, and no join
+    (no separate net-winner pass, no existence probe joined back) — also
+    across an in-range rebucket, where the ``from`` scan is unpruned."""
+    table = _replayed_mor_table(spark, tmp_path)
+    s_from = table.current_snapshot().snapshot_id
+    stored = table.read().orderBy("repo", "path").limit(10)
+    table.merge_mor(
+        stored.withColumn("op", F.when(F.col("path").endswith("1"), "delete").otherwise("update"))
+    )
+    cols = ["last_lsn", "lang"]
+    p = plan(table.changes(s_from, with_preimage=True, columns=cols), "simple")
+    _assert_one_key_exchange_no_join(p)
+    assert "content" not in p, p
+
+    table.rebucket(4)
+    table.merge_mor(stored.withColumn("op", F.lit("update")))
+    p = plan(table.changes(s_from, with_preimage=True, columns=cols), "simple")
+    _assert_one_key_exchange_no_join(p)
 
 
 def test_lsn_range_prunes_row_groups(spark, tmp_path):
